@@ -3,8 +3,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every SparkEntry query at the given
   * scale factor and prints ONE JSON line. Failures are recorded
-  * per-query (status map) and make the process exit nonzero — a broken
-  * query must never masquerade as a fast one. */
+  * per-query and for the prepare step (status map) and make the
+  * process exit nonzero — a broken query must never masquerade as a
+  * fast one. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -22,13 +23,16 @@ object Bench {
     // pipeline builds overlap on a pool, so the per-build seconds (each
     // future's own wall, kept for round-over-round comparability) sum
     // to MORE than the elapsed prepare time
+    // a failed prepare is a failure of the run: the queries would
+    // otherwise build their artifacts lazily inside the timed region
     val prepT0 = System.nanoTime()
-    val builds =
-      (try SparkEntry.prepare(spark, sfDir)
-       catch { case e: Throwable =>
-         System.err.println(s"[bench] prepare FAILED: ${e.getMessage}")
-         Seq.empty[(String, Double)]
-       }) :+ ("prepare_wall", (System.nanoTime() - prepT0) / 1e9)
+    val (prepared, prepStatus) =
+      try (SparkEntry.prepare(spark, sfDir), "ok")
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] prepare FAILED: ${e.getMessage}")
+        (Seq.empty[(String, Double)], s"error:${e.getClass.getSimpleName}")
+      }
+    val builds = prepared :+ ("prepare_wall", (System.nanoTime() - prepT0) / 1e9)
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val t0 = System.nanoTime()
       val status =
@@ -46,11 +50,12 @@ object Bench {
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val qs = results.map { case (k, v, _) => "\"" + k + "\":" + dp3(v) }
       .mkString("{", ",", "}")
-    val st = results.map { case (k, _, s) => "\"" + k + "\":\"" + s + "\"" }
+    val statuses = ("prepare", prepStatus) +: results.map { case (k, _, s) => (k, s) }
+    val st = statuses.map { case (k, s) => "\"" + k + "\":\"" + s + "\"" }
       .mkString("{", ",", "}")
     val bd = builds.map { case (k, v) => "\"" + k + "\":" + dp3(v) }
       .mkString("{", ",", "}")
-    val failures = results.count(_._3 != "ok")
+    val failures = statuses.count(_._2 != "ok")
     val total = results.map(_._2).sum
     // build_secs = the prepare WALL time (the r18 semantics: with
     // sequential builds the per-build sum equaled the wall; with the

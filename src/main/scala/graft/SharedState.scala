@@ -49,26 +49,22 @@ object SharedState {
       }
     })
 
-  /** [[cached]] at DISK_ONLY — for WIDE boundary frames (full cleaned
+  /** [[cached]] at DISK_ONLY + LINEAGE CUT (eager disk-level local
+    * checkpoint). DISK_ONLY is for WIDE boundary frames (full cleaned
     * document text per pipeline stage) whose MEMORY_AND_DISK unroll
     * buffers, stacked on the corpus caches already resident, OOM'd a
     * century JVM: disk-only persists stream partition-by-partition
     * with no memory-store attempt, trading re-read I/O (cheap, local)
-    * for a bounded heap. */
-  def cachedDisk(key: String)(f: => DataFrame): DataFrame =
-    cache.getOrElseUpdate(key, f.persist(StorageLevel.DISK_ONLY))
-
-  /** [[cachedDisk]] + LINEAGE CUT (eager disk-level local checkpoint):
-    * a persisted boundary still carries its full logical lineage, and
-    * for a deep composed pipeline the DRIVER re-analyzes that whole
-    * tree on every fresh query over the boundary — measured ~10 s of
+    * for a bounded heap. The lineage cut: a persisted boundary still
+    * carries its full logical lineage, and for a deep composed
+    * pipeline the DRIVER re-analyzes that whole tree on every fresh
+    * query over the boundary — measured ~10 s of
     * scale-INDEPENDENT planning per q_pipeline_e2e call (the cost
     * grew with lineage depth: 0.06 s at the first boundary, 1.7 s
     * five stages in, ~10 s at the selection). The checkpoint replaces
     * the lineage with a LogicalRDD over disk-stored blocks, so
     * downstream plans analyze a leaf. Eager: the boundary computes at
-    * registration (prepare pays it); blocks are DISK_ONLY (the
-    * century heap discipline). Same recompute-on-loss caveat as any
+    * registration (prepare pays it). Same recompute-on-loss caveat as any
     * local checkpoint — acceptable for per-JVM shared state, which is
     * what this cache is. */
   def checkpointedDisk(key: String)(f: => DataFrame): DataFrame =

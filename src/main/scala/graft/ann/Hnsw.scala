@@ -51,9 +51,9 @@ final class Hnsw(
   private[ann] val ids = mutable.ArrayBuffer.empty[Long]
   private[ann] val vecs = mutable.ArrayBuffer.empty[Array[Float]]
   // squared norms, cached per node for the cos metric (recomputing both
-  // norms on every pair evaluation dominates cos builds); the cached
-  // value is the same double the metric's own loop produces, so results
-  // are bit-identical to Metric.Cos.dist
+  // norms on every pair evaluation dominates cos builds); Kernels.dot of
+  // a vector with itself is the norm the cosine loop accumulates, so
+  // results are bit-identical to Metric.Cos.dist
   private[ann] val norms = new DoubleVec
   private[ann] val codes = mutable.ArrayBuffer.empty[Array[Byte]]
   private[ann] val levels = mutable.ArrayBuffer.empty[Int]
@@ -66,57 +66,20 @@ final class Hnsw(
 
   def size: Int = ids.length
 
-  @inline private def sqNorm(v: Array[Float]): Double = {
-    var acc = 0.0
-    var i = 0
-    while (i < v.length) { val x = v(i).toDouble; acc += x * x; i += 1 }
-    acc
-  }
-
-  @inline private def cosCached(a: Array[Float], b: Array[Float],
-      na: Double, nb: Double): Double = {
-    var dot = 0.0
-    var i = 0
-    while (i < a.length) { dot += a(i).toDouble * b(i).toDouble; i += 1 }
-    if (na == 0.0 || nb == 0.0) 1.0 else 1.0 - dot / math.sqrt(na * nb)
-  }
-
   // Packed sign bits per node for the hamming metric: the sign view
   // ([[HammingView]]) carries one logical BIT per float component, so
-  // popcount(xor) over 64-bit words computes the identical distance
-  // ~64x narrower than the float walk. Bit k set iff v(k) >= 0 — the
-  // exact predicate Metric.Hamming.dist evaluates (NaN packs as 0 on
-  // both sides, so results never diverge from the reference kernel).
+  // [[Kernels.hamming]] over 64-bit words computes the float walk's
+  // distance ~64x narrower.
   private[ann] val hbits = mutable.ArrayBuffer.empty[Array[Long]]
 
-  @inline private def packSigns(v: Array[Float]): Array[Long] = {
-    val out = new Array[Long]((v.length + 63) >>> 6)
-    var i = 0
-    while (i < v.length) {
-      if (v(i) >= 0) out(i >>> 6) |= 1L << (i & 63)
-      i += 1
-    }
-    out
-  }
-
-  @inline private def hammingPacked(a: Array[Long], b: Array[Long]): Double = {
-    var acc = 0
-    var i = 0
-    while (i < a.length) {
-      acc += java.lang.Long.bitCount(a(i) ^ b(i))
-      i += 1
-    }
-    acc.toDouble
-  }
-
-  /** node-to-node distance (raw kernel, or the codebook's symmetric
-    * centroid tables — the canonical arithmetic lives on Codebook so
-    * the in-index path and the Catalyst expressions cannot diverge). */
+  /** node-to-node distance: the [[Kernels]] loop, or the codebook's
+    * symmetric centroid tables. */
   @inline private def distNN(i: Int, j: Int): Double =
     if (pq.isEmpty) {
-      if (metric eq Metric.Cos) cosCached(vecs(i), vecs(j), norms(i), norms(j))
-      else if (metric eq Metric.Hamming) hammingPacked(hbits(i), hbits(j))
-      else metric.dist(vecs(i), vecs(j))
+      if (metric eq Metric.Cos)
+        Kernels.cosFromParts(Kernels.dot(vecs(i), vecs(j)), norms(i), norms(j))
+      else if (metric eq Metric.Hamming) Kernels.hamming(hbits(i), hbits(j)).toDouble
+      else Kernels.l2sq(vecs(i), vecs(j))
     }
     else {
       val sym = pq.get.symmetricTable
@@ -133,9 +96,10 @@ final class Hnsw(
   @inline private def distQN(q: Array[Float], adc: Array[Array[Double]],
       qNorm: Double, qBits: Array[Long], n: Int): Double =
     if (pq.isEmpty) {
-      if (metric eq Metric.Cos) cosCached(q, vecs(n), qNorm, norms(n))
-      else if (metric eq Metric.Hamming) hammingPacked(qBits, hbits(n))
-      else metric.dist(q, vecs(n))
+      if (metric eq Metric.Cos)
+        Kernels.cosFromParts(Kernels.dot(q, vecs(n)), qNorm, norms(n))
+      else if (metric eq Metric.Hamming) Kernels.hamming(qBits, hbits(n)).toDouble
+      else Kernels.l2sq(q, vecs(n))
     }
     else {
       val cs = codes(n)
@@ -329,15 +293,14 @@ final class Hnsw(
   }
 
   def insert(id: Long, vec: Array[Float]): Unit = {
-    require(vec.length == dim,
-      s"expected equally sized arrays but got dimensions ${vec.length} and $dim")
+    Kernels.checkDims(vec.length, dim)
     val level = randomLevel()
     val node = size
     ids += id
     if (pq.isEmpty) {
       vecs += vec
-      if (metric eq Metric.Cos) norms += sqNorm(vec)
-      else if (metric eq Metric.Hamming) hbits += packSigns(vec)
+      if (metric eq Metric.Cos) norms += Kernels.dot(vec, vec)
+      else if (metric eq Metric.Hamming) hbits += Kernels.packSigns(vec)
     } else codes += pq.get.quantize(vec)
     levels += level
     neighbors += Array.fill(level + 1)(new IntVec)
@@ -417,12 +380,11 @@ final class Hnsw(
   def search(q: Array[Float], k: Int, ef: Int,
       skip: Long => Boolean = null): Seq[(Long, Double)] = {
     if (size == 0) return Seq.empty
-    require(q.length == dim,
-      s"expected equally sized arrays but got dimensions ${q.length} and $dim")
+    Kernels.checkDims(q.length, dim)
     val adc = if (pq.isEmpty) null else pq.get.adcTable(q)
-    val qNorm = if (pq.isEmpty && (metric eq Metric.Cos)) sqNorm(q) else 0.0
+    val qNorm = if (pq.isEmpty && (metric eq Metric.Cos)) Kernels.dot(q, q) else 0.0
     val qBits =
-      if (pq.isEmpty && (metric eq Metric.Hamming)) packSigns(q) else null
+      if (pq.isEmpty && (metric eq Metric.Hamming)) Kernels.packSigns(q) else null
     val dq = distQN(q, adc, qNorm, qBits, _: Int)
     if (ef >= size) {
       // Exhaustive request (the contract queries' exact-oracle mode and
@@ -593,8 +555,8 @@ object Hnsw {
         var i = 0
         while (i < dim) { v(i) = in.readFloat(); i += 1 }
         h.vecs += v
-        if (metric eq Metric.Cos) h.norms += h.sqNorm(v)
-        else if (metric eq Metric.Hamming) h.hbits += h.packSigns(v)
+        if (metric eq Metric.Cos) h.norms += Kernels.dot(v, v)
+        else if (metric eq Metric.Hamming) h.hbits += Kernels.packSigns(v)
       } else {
         val cs = new Array[Byte](pq.get.subvectors)
         in.readFully(cs)
@@ -709,49 +671,4 @@ private[graft] final class DoubleIntHeap(min: Boolean) {
 
   def toSeq: Seq[(Int, Double)] =
     (0 until n).map(i => (vals(i), keys(i)))
-}
-
-/** Distance metric of an index (reference opclasses dist_l2sq_ops /
-  * dist_cos_ops / dist_hamming_ops, lantern_hnsw/sql/lantern.sql:63-104).
-  * Float-vector kernels match graft's Catalyst expressions bit-for-bit
-  * (double accumulation, sequential order). */
-sealed abstract class Metric(val id: Int, val name: String) extends Serializable {
-  def dist(a: Array[Float], b: Array[Float]): Double
-}
-object Metric {
-  case object L2Sq extends Metric(0, "l2sq") {
-    def dist(a: Array[Float], b: Array[Float]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < a.length) {
-        val d = a(i).toDouble - b(i).toDouble; acc += d * d; i += 1
-      }
-      acc
-    }
-  }
-  case object Cos extends Metric(1, "cos") {
-    def dist(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) {
-        val x = a(i).toDouble; val y = b(i).toDouble
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      if (na == 0.0 || nb == 0.0) 1.0 else 1.0 - dot / math.sqrt(na * nb)
-    }
-  }
-  case object Hamming extends Metric(2, "hamming") {
-    // float view of sign bits; used when int vectors are cast to float
-    def dist(a: Array[Float], b: Array[Float]): Double = {
-      var acc = 0; var i = 0
-      while (i < a.length) {
-        if ((a(i) >= 0) != (b(i) >= 0)) acc += 1
-        i += 1
-      }
-      acc.toDouble
-    }
-  }
-  val all: Seq[Metric] = Seq(L2Sq, Cos, Hamming)
-  def fromId(id: Int): Metric = all.find(_.id == id).getOrElse(
-    throw new IllegalArgumentException(s"unknown metric id $id"))
-  def fromName(n: String): Metric = all.find(_.name == n).getOrElse(
-    throw new IllegalArgumentException(s"unknown metric '$n'"))
 }

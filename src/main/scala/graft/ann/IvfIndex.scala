@@ -577,15 +577,9 @@ object IvfIndex {
     val effNprobe = Autotune.probeNprobe(spark, indexPath, nprobe,
       targetRecall)
     val cells = probedCells(spark, indexPath, man, query, effNprobe)
-    val distFn = man.metric match {
-      case Metric.L2Sq => graft.functions.l2sq_dist _
-      case Metric.Cos => graft.functions.cos_dist _
-      case other =>
-        throw new IllegalArgumentException(s"IVF does not support ${other.name}")
-    }
     cells
       .withColumn("dist",
-        distFn(col(man.vecCol), graft.functions.vecLit(query.toSeq)))
+        man.metric.dist(col(man.vecCol), graft.functions.vecLit(query.toSeq)))
       .orderBy(col("dist").asc, col(man.idCol).asc)
       .limit(k)
       .select(col(man.idCol).as("id"), col("dist"))
@@ -655,12 +649,6 @@ object IvfIndex {
     val man = readManifest(indexPath)
     val effNprobe = Autotune.probeNprobe(spark, indexPath, nprobe,
       targetRecall)
-    val distFn = man.metric match {
-      case Metric.L2Sq => graft.functions.l2sq_dist _
-      case Metric.Cos => graft.functions.cos_dist _
-      case other =>
-        throw new IllegalArgumentException(s"IVF does not support ${other.name}")
-    }
     val cents = sidecarParquet(spark, s"$indexPath/centroids")
     // one vector per query id, chosen DETERMINISTICALLY (min by vector
     // hash) — dropDuplicates keeps whichever row a partition sees
@@ -678,7 +666,7 @@ object IvfIndex {
     // tiny, so this is a broadcast nested loop over nCells rows — and
     // keep each query's nprobe nearest cells
     val routed = q2.crossJoin(broadcast(cents))
-      .withColumn("__ivf_cdist", distFn(col("__ivf_qvec"), col("centroid")))
+      .withColumn("__ivf_cdist", man.metric.dist(col("__ivf_qvec"), col("centroid")))
       .withColumn("__ivf_rn", row_number().over(
         Window.partitionBy(col("__ivf_qid"))
           .orderBy(col("__ivf_cdist").asc, col("cell_id").asc)))
@@ -721,7 +709,7 @@ object IvfIndex {
       if (nQ <= limit) candidates.join(broadcast(q2), "__ivf_qid")
       else candidates.join(q2.hint("shuffle_hash"), "__ivf_qid")
     withVecs
-      .withColumn("__ivf_dist", distFn(col(man.vecCol), col("__ivf_qvec")))
+      .withColumn("__ivf_dist", man.metric.dist(col(man.vecCol), col("__ivf_qvec")))
       .withColumn("__ivf_rank", row_number().over(
         Window.partitionBy(col("__ivf_qid"))
           .orderBy(col("__ivf_dist").asc, col(man.idCol).asc)))

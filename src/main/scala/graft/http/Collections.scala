@@ -497,15 +497,10 @@ object Collections {
             col(idc).cast("long") === col("__hit_id"))
           .withColumn("distance", col("dist"))
       case _ =>
-        val knnMetric = metric match {
-          case Metric.L2Sq => Knn.L2Sq
-          case Metric.Cos => Knn.Cos
-          case Metric.Hamming => Knn.Hamming
-        }
         val tie = spec.idColumn.map(col)
           .getOrElse(xxhash64(col(req.column)))
         Knn.knn(rows, col(req.column),
-          graft.functions.vecLit(req.queryVector.toSeq), req.k, knnMetric,
+          graft.functions.vecLit(req.queryVector.toSeq), req.k, metric,
           Some(tie), distName = "distance")
     }
     val order = col("distance").asc_nulls_last +:

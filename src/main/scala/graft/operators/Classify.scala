@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ann.AnnIndex
+import graft.ann.{AnnIndex, Metric}
 
 /** k-NN weak labeling — the label-propagation step of a training-data
   * pipeline (classify unlabeled documents from a curated labeled
@@ -51,7 +51,7 @@ object Classify {
   def classifyExact(queries: DataFrame, qIdCol: Column, qVecCol: Column,
       ref: DataFrame, refIdCol: Column, refVecCol: Column,
       refLabelCol: Column, k: Int,
-      metric: Knn.Metric = Knn.L2Sq): DataFrame = {
+      metric: Metric = Metric.L2Sq): DataFrame = {
     val q = queries.select(qIdCol.as("query_id"), qVecCol.as("__qv"))
     val nb = ref
       .select(refIdCol.as("id"), refVecCol.as("__rv"),
@@ -79,7 +79,7 @@ object Classify {
   def hardNegativesExact(anchors: DataFrame, aIdCol: Column,
       aVecCol: Column, aLabelCol: Column, ref: DataFrame, refIdCol: Column,
       refVecCol: Column, refLabelCol: Column, k: Int,
-      metric: Knn.Metric = Knn.L2Sq): DataFrame = {
+      metric: Metric = Metric.L2Sq): DataFrame = {
     require(k > 0, "k must be positive")
     val a = anchors.select(aIdCol.as("query_id"), aVecCol.as("__qv"),
       aLabelCol.as("__qlbl"))

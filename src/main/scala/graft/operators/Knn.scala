@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.{l2sq_dist, cos_dist, hamming_dist}
+import graft.ann.Metric
 
 /** Exact K-nearest-neighbor search and composite weighted vector search.
   *
@@ -16,17 +16,6 @@ import graft.functions.{l2sq_dist, cos_dist, hamming_dist}
   */
 object Knn {
 
-  sealed trait Metric { def dist(v: Column, q: Column): Column }
-  case object L2Sq extends Metric {
-    def dist(v: Column, q: Column): Column = l2sq_dist(v, q)
-  }
-  case object Cos extends Metric {
-    def dist(v: Column, q: Column): Column = cos_dist(v, q)
-  }
-  case object Hamming extends Metric {
-    def dist(v: Column, q: Column): Column = hamming_dist(v, q).cast("double")
-  }
-
   /** Exact top-k: rows with the k smallest `metric(vecCol, q)`,
     * ascending, ties broken by `tieBreaker` for determinism. */
   def knn(
@@ -34,7 +23,7 @@ object Knn {
       vecCol: Column,
       query: Column,
       k: Int,
-      metric: Metric = L2Sq,
+      metric: Metric = Metric.L2Sq,
       tieBreaker: Option[Column] = None,
       distName: String = "dist"): DataFrame = {
     val withDist = df.withColumn(distName, metric.dist(vecCol, query))
@@ -78,7 +67,7 @@ object Knn {
       df: DataFrame,
       vecCol: Column,
       query: Column,
-      metric: Metric = L2Sq,
+      metric: Metric = Metric.L2Sq,
       tieBreaker: Option[Column] = None,
       initK: Int = 10,
       maxK: Int = 1000): Iterator[org.apache.spark.sql.Row] = {
@@ -191,7 +180,7 @@ object Knn {
 
   /** One weighted term of a multi-column search. */
   case class WeightedTerm(weight: Double, vecCol: Column, query: Column,
-      metric: Metric = L2Sq)
+      metric: Metric = Metric.L2Sq)
 
   /** Multi-vector-column weighted ranking, the exact (`exact=true`) path
     * of `lantern.weighted_vector_search` (lantern_hnsw/sql/lantern.sql:732-762):

@@ -98,14 +98,9 @@ object Mmr {
     require(lambda >= 0 && lambda <= 1, "lambda must be in [0, 1]")
     val spark = df.sparkSession
     val qLit = graft.functions.vecLit(query.toSeq)
-    val knnMetric = metric match {
-      case Metric.L2Sq => Knn.L2Sq
-      case Metric.Cos => Knn.Cos
-      case Metric.Hamming => Knn.Hamming
-    }
     // distributed candidate stage: exact top-candN with id tiebreak
     val cands: Array[(Long, Array[Float], Double)] =
-      Knn.knn(guarded(df, idCol, vecCol), col("v"), qLit, candN, knnMetric,
+      Knn.knn(guarded(df, idCol, vecCol), col("v"), qLit, candN, metric,
           Some(col("id")))
         .select(col("id"), col("v"), col("dist"))
         .collect()

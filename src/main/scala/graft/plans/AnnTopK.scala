@@ -8,8 +8,8 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.graft.{CosDist, HammingDist, L2SqDist}
-import graft.ann.{AnnIndex, HammingView, Metric}
+import org.apache.spark.sql.graft.IndexedDistance
+import graft.ann.{AnnIndex, Metric}
 
 /** Transparent ANN rewrite of `ORDER BY dist(col, const) LIMIT k`
   * (reference: the planner integration that makes `ORDER BY v <-> q
@@ -125,16 +125,6 @@ object AnnTopK {
         case _ => Seq.empty
       }
 
-    private def foldableVector(e: Expression): Option[Array[Float]] =
-      if (e.foldable) {
-        e.eval() match {
-          case a: ArrayData =>
-            try Some(a.toFloatArray())
-            catch { case _: Throwable => None }
-          case _ => None
-        }
-      } else None
-
     /** Casts that preserve the ordering of every distance a graft
       * expression can emit (int/long exactly representable targets). */
     private def wideningCast(c: Cast): Boolean = {
@@ -147,11 +137,12 @@ object AnnTopK {
       }
     }
 
-    private def foldableIntVector(e: Expression): Option[Array[Int]] =
+    /** The index metric's query vector from a foldable vector literal. */
+    private def queryVector(e: Expression, metric: Metric): Option[Array[Float]] =
       if (e.foldable) {
         e.eval() match {
           case a: ArrayData =>
-            try Some(a.toIntArray())
+            try Some(metric.queryVector(a))
             catch { case _: Throwable => None }
           case _ => None
         }
@@ -159,22 +150,15 @@ object AnnTopK {
 
     /** (vec attribute, query vector, metric) from a distance sort key.
       * A hamming key's int-array literal expands to the sign view the
-      * index was built over ([[HammingView]]); the sort may also wrap
-      * the int distance in a Cast (e.g. `.cast("double")`). */
+      * index was built over ([[Metric.queryVector]]); the sort may also
+      * wrap the int distance in a Cast (e.g. `.cast("double")`). */
     private def distanceKey(e: Expression)
         : Option[(AttributeReference, Array[Float], Metric)] = e match {
-      case L2SqDist(a: AttributeReference, q) =>
-        foldableVector(q).map(v => (a, v, Metric.L2Sq))
-      case L2SqDist(q, a: AttributeReference) =>
-        foldableVector(q).map(v => (a, v, Metric.L2Sq))
-      case CosDist(a: AttributeReference, q) =>
-        foldableVector(q).map(v => (a, v, Metric.Cos))
-      case CosDist(q, a: AttributeReference) =>
-        foldableVector(q).map(v => (a, v, Metric.Cos))
-      case HammingDist(a: AttributeReference, q) =>
-        foldableIntVector(q).map(v => (a, HammingView.expand(v), Metric.Hamming))
-      case HammingDist(q, a: AttributeReference) =>
-        foldableIntVector(q).map(v => (a, HammingView.expand(v), Metric.Hamming))
+      case d: IndexedDistance => (d.left, d.right) match {
+        case (a: AttributeReference, q) => queryVector(q, d.metric).map((a, _, d.metric))
+        case (q, a: AttributeReference) => queryVector(q, d.metric).map((a, _, d.metric))
+        case _ => None
+      }
       // unwrap ONLY order-preserving numeric widenings (the library's
       // `.cast("double")` on the int hamming distance): an arbitrary
       // Cast (string, narrowing) changes the sort order, and narrowing

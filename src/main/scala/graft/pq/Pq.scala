@@ -2,6 +2,7 @@ package graft.pq
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ann.Kernels
 
 /** Product quantization: codebook learning, vector quantization, and
   * asymmetric-distance (ADC) search support.
@@ -40,70 +41,44 @@ case class Codebook(centroids: Array[Array[Array[Float]]])
   /** Nearest-centroid code per subvector (first-min tie break, matching
     * SQL `list_position(d, list_min(d))`). */
   def quantize(v: Array[Float]): Array[Byte] = {
-    require(v.length == dim,
-      s"expected equally sized arrays but got dimensions ${v.length} and $dim")
-    val out = new Array[Byte](subvectors)
-    var s = 0
-    while (s < subvectors) {
-      val cents = centroids(s)
-      var best = 0
-      var bd = Double.MaxValue
-      var c = 0
-      while (c < cents.length) {
-        var acc = 0.0
-        var t = 0
-        while (t < subDim) {
-          val d = v(s * subDim + t).toDouble - cents(c)(t).toDouble
-          acc += d * d
-          t += 1
-        }
-        if (acc < bd) { bd = acc; best = c }
-        c += 1
-      }
-      out(s) = best.toByte
-      s += 1
-    }
-    out
+    Kernels.checkDims(v.length, dim)
+    Array.tabulate(subvectors)(s => Pq.nearest(centroids(s), subvector(v, s)).toByte)
   }
 
   /** ADC lookup table for one query: (subvector x centroid) partials. */
   def adcTable(q: Array[Float]): Array[Array[Double]] = {
-    require(q.length == dim,
-      s"expected equally sized arrays but got dimensions ${q.length} and $dim")
+    Kernels.checkDims(q.length, dim)
     Array.tabulate(subvectors) { s =>
-      Array.tabulate(clusters) { c =>
-        var acc = 0.0
-        var t = 0
-        while (t < subDim) {
-          val d = q(s * subDim + t).toDouble - centroids(s)(c)(t).toDouble
-          acc += d * d
-          t += 1
-        }
-        acc
-      }
+      val sub = subvector(q, s)
+      centroids(s).map(Kernels.l2sq(sub, _))
     }
   }
+
+  private def subvector(v: Array[Float], s: Int): Array[Float] =
+    java.util.Arrays.copyOfRange(v, s * subDim, (s + 1) * subDim)
 
   /** Symmetric centroid-to-centroid distance tables (node-to-node
     * distances during PQ-in-index graph build). */
   @transient lazy val symmetricTable: Array[Array[Array[Double]]] =
-    Array.tabulate(subvectors) { s =>
-      Array.tabulate(clusters) { c1 =>
-        Array.tabulate(clusters) { c2 =>
-          var acc = 0.0
-          var t = 0
-          while (t < subDim) {
-            val d = centroids(s)(c1)(t).toDouble - centroids(s)(c2)(t).toDouble
-            acc += d * d
-            t += 1
-          }
-          acc
-        }
-      }
+    Array.tabulate(subvectors, clusters, clusters) { (s, c1, c2) =>
+      Kernels.l2sq(centroids(s)(c1), centroids(s)(c2))
     }
 }
 
 object Pq {
+
+  /** Index of the l2sq-nearest of `cents` to `v` (first-min tie break). */
+  def nearest(cents: Array[Array[Float]], v: Array[Float]): Int = {
+    var best = 0
+    var bd = Double.MaxValue
+    var c = 0
+    while (c < cents.length) {
+      val d = Kernels.l2sq(v, cents(c))
+      if (d < bd) { bd = d; best = c }
+      c += 1
+    }
+    best
+  }
 
   /** Uniform, data-deterministic training sample: the `n` rows whose
     * seeded xxhash64 over the vector is smallest. A prefix `limit(n)`
@@ -174,18 +149,7 @@ object Pq {
       // assignment (first-min tie break)
       var i = 0
       while (i < n) {
-        var best = 0; var bd = Double.MaxValue
-        var c = 0
-        while (c < kk) {
-          var dist = 0.0; var t = 0
-          while (t < d) {
-            val diff = data(i)(t).toDouble - cents(c)(t).toDouble
-            dist += diff * diff; t += 1
-          }
-          if (dist < bd) { bd = dist; best = c }
-          c += 1
-        }
-        assign(i) = best
+        assign(i) = nearest(cents, data(i))
         i += 1
       }
       // update

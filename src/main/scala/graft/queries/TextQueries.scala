@@ -282,6 +282,7 @@ object TextQueries {
 
   private def hybridRrf(s: SparkSession, dir: String): DataFrame = {
     import graft.embed.Runtimes
+    import graft.ann.Metric
     import graft.operators.{Hybrid, Knn}
     val lex = Bm25.searchBm25Of(tokCached(s, dir), bm25Query, 20,
         postings = Some(postCached(s, dir)))
@@ -289,7 +290,7 @@ object TextQueries {
     val emb = mockEmbCached(s, dir)
     val qv = Runtimes.mock(8).embedBatch("mock-embed", Seq(bm25Query)).head
     val vec = Knn.knn(emb, col("vec"),
-        graft.functions.vecLit(qv.toSeq), 20, Knn.L2Sq, Some(col("doc_id")))
+        graft.functions.vecLit(qv.toSeq), 20, Metric.L2Sq, Some(col("doc_id")))
       .select(col("doc_id"), round(col("dist"), 6).as("d"))
     Hybrid.rrf("doc_id", Seq(
         Hybrid.Ranked(lex, Seq(col("s").desc, col("doc_id").asc)),

@@ -25,12 +25,12 @@ object VectorQueries {
 
   def knnL2Sq(s: SparkSession, dir: String): DataFrame =
     Knn.knn(emb(s, dir), col("embedding"), vecLit(qVec), 10,
-        Knn.L2Sq, Some(col("vec_id")))
+        Metric.L2Sq, Some(col("vec_id")))
       .select(col("vec_id"), round(col("dist"), 6).as("dist"))
 
   private def knnCos(s: SparkSession, dir: String): DataFrame =
     Knn.knn(emb(s, dir), col("embedding"), vecLit(qVec), 10,
-        Knn.Cos, Some(col("vec_id")))
+        Metric.Cos, Some(col("vec_id")))
       .select(col("vec_id"), round(col("dist"), 6).as("dist"))
 
   /** Sign-bit int vector for hamming: 1 where component >= 0. */
@@ -48,7 +48,7 @@ object VectorQueries {
 
   private def knnFiltered(s: SparkSession, dir: String): DataFrame =
     Knn.knn(emb(s, dir).filter(col("label") === 1), col("embedding"),
-        vecLit(qVec), 10, Knn.L2Sq, Some(col("vec_id")))
+        vecLit(qVec), 10, Metric.L2Sq, Some(col("vec_id")))
       .select(col("vec_id"), round(col("dist"), 6).as("dist"))
 
   /** Candidate/ef path of weighted_vector_search (lantern.sql:769-817):
@@ -57,8 +57,8 @@ object VectorQueries {
     Knn.weightedSearchCandidates(
         emb(s, dir), "vec_id",
         Seq(
-          Knn.WeightedTerm(0.7, col("embedding"), vecLit(qVec), Knn.L2Sq),
-          Knn.WeightedTerm(0.3, col("embedding"), vecLit(qVec), Knn.Cos)),
+          Knn.WeightedTerm(0.7, col("embedding"), vecLit(qVec), Metric.L2Sq),
+          Knn.WeightedTerm(0.3, col("embedding"), vecLit(qVec), Metric.Cos)),
         10, ef = 50)
       .select(col("vec_id"), round(col("joint_dist"), 6).as("joint_dist"))
 
@@ -66,8 +66,8 @@ object VectorQueries {
     Knn.weightedSearch(
         emb(s, dir),
         Seq(
-          Knn.WeightedTerm(0.7, col("embedding"), vecLit(qVec), Knn.L2Sq),
-          Knn.WeightedTerm(0.3, col("embedding"), vecLit(qVec), Knn.Cos)),
+          Knn.WeightedTerm(0.7, col("embedding"), vecLit(qVec), Metric.L2Sq),
+          Knn.WeightedTerm(0.3, col("embedding"), vecLit(qVec), Metric.Cos)),
         10, maxDist = None, tieBreaker = Some(col("vec_id")))
       .select(col("vec_id"), round(col("joint_dist"), 6).as("joint_dist"))
 
@@ -158,9 +158,9 @@ object VectorQueries {
     Knn.weightedSearchAnn(
         emb(s, dir), "vec_id",
         Seq(
-          (Knn.WeightedTerm(0.7, col("embedding"), vecLit(qVec), Knn.L2Sq),
+          (Knn.WeightedTerm(0.7, col("embedding"), vecLit(qVec), Metric.L2Sq),
             l2Path),
-          (Knn.WeightedTerm(0.3, col("embedding"), vecLit(qVec), Knn.Cos),
+          (Knn.WeightedTerm(0.3, col("embedding"), vecLit(qVec), Metric.Cos),
             cosPath)),
         10, ef = ef)
       .select(col("vec_id"), round(col("joint_dist"), 6).as("joint_dist"))
@@ -200,7 +200,7 @@ object VectorQueries {
     // never the corpus. Selection order matches Knn.knn exactly
     // (unrounded dist asc NULLS LAST, vec_id asc); rounding stays
     // post-selection, the q_hybrid_rrf discipline.
-    def lists(metric: Knn.Metric, dcol: String): DataFrame = {
+    def lists(metric: Metric, dcol: String): DataFrame = {
       val qarr = array(batchQVecs.map { case (q, v) =>
         struct(lit(q).as("qid"), vecLit(v).as("qv")) }: _*)
       emb(s, dir)
@@ -215,9 +215,9 @@ object VectorQueries {
         .select(col("qid"), col("vec_id"), round(col("__d"), 6).as(dcol))
     }
     Hybrid.rrfPerQuery("qid", "vec_id", Seq(
-        Hybrid.Ranked(lists(Knn.L2Sq, "dl"),
+        Hybrid.Ranked(lists(Metric.L2Sq, "dl"),
           Seq(col("dl").asc, col("vec_id").asc)),
-        Hybrid.Ranked(lists(Knn.Cos, "dc"),
+        Hybrid.Ranked(lists(Metric.Cos, "dc"),
           Seq(col("dc").asc, col("vec_id").asc))), 10)
       // order on the UNROUNDED score (the oracle's ORDER BY f DESC) —
       // two scores that only round equal must still order identically
@@ -254,7 +254,7 @@ object VectorQueries {
     val approx = AnnIndex.topK(s, annIndexPath(s, dir), qVec.toArray, 10, ef = 64)
       .select("id").collect().map(_.getLong(0)).toSet
     val exact = Knn.knn(emb(s, dir), col("embedding"), vecLit(qVec), 10,
-        Knn.L2Sq, Some(col("vec_id")))
+        Metric.L2Sq, Some(col("vec_id")))
       .select("vec_id").collect().map(_.getLong(0)).toSet
     val recall = (approx & exact).size / 10.0
     Seq(Tuple1(recall >= 0.9)).toDF("ok")
@@ -491,7 +491,7 @@ object VectorQueries {
         AnnIndex.Params(Metric.L2Sq, m = 16, efConstruction = 128,
           numShards = 2))
       val top3 = Knn.knn(emb(s, dir), col("embedding"), vecLit(qVec), 3,
-          Knn.L2Sq, Some(col("vec_id")))
+          Metric.L2Sq, Some(col("vec_id")))
         .select("vec_id").collect().map(_.getLong(0)).toSeq
       AnnIndex.delete(s, path, top3)
       path
@@ -743,7 +743,7 @@ object VectorQueries {
   private def knnCursor(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val rows = Knn.knnCursor(emb(s, dir), col("embedding"), vecLit(qVec),
-        Knn.L2Sq, Some(col("vec_id")), initK = 7)
+        Metric.L2Sq, Some(col("vec_id")), initK = 7)
       .take(25)
       .map(r => (r.getAs[Long]("vec_id"),
         BigDecimal(r.getAs[Double]("dist"))
@@ -909,7 +909,7 @@ object VectorQueries {
       graft.ann.IvfIndex.build(emb(s, dir), "vec_id", "embedding", p,
         graft.ann.IvfIndex.Params(nCells = 16))
       val top3 = Knn.knn(emb(s, dir), col("embedding"), vecLit(qVec), 3,
-          Knn.L2Sq, Some(col("vec_id")))
+          Metric.L2Sq, Some(col("vec_id")))
         .select("vec_id").collect().map(_.getLong(0)).toSeq
       graft.ann.IvfIndex.delete(s, p, top3)
       p

@@ -3,12 +3,12 @@
 // the standard pattern for Spark-native extension libraries.
 package org.apache.spark.sql.graft
 
-import org.apache.spark.SparkException
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import graft.ann.Metric
 
 /** Bridge to `private[sql]` Column <-> Expression conversions. */
 object Bridge {
@@ -33,72 +33,38 @@ object Bridge {
     ext.registerFunctions(session.sessionState.functionRegistry)
 }
 
-/** Distance kernels over vector columns (`ArrayType(FloatType)`).
-  *
-  * Semantics follow the reference's distance operators
-  * (lantern_hnsw/src/hnsw.c:354-405): `l2sq_dist` is SQUARED L2 (no
-  * root), `cos_dist` is 1 - cosine similarity, `hamming_dist` counts
-  * differing bits treating each int32 element as a 32-bit chunk
-  * (lantern_hnsw/src/hnsw.c:308-319). Dimension mismatch raises, matching
-  * "expected equally sized arrays" (lantern_hnsw/src/hnsw.c:301-303).
-  *
-  * Implemented as native Catalyst expressions with whole-stage codegen:
-  * accumulation is in double precision, sequential element order, so
-  * results are reproducible and match a double-precision oracle.
-  */
+/** Distance expressions over vector columns (`ArrayType(FloatType)`;
+  * int32 words for `hamming_dist`). Both the interpreted and the
+  * codegen'd path call the one [[graft.ann.Kernels]] loop per formula —
+  * generated code as a static call — so they return the same bits as
+  * the graph and quantizer kernels, and the same "expected equally sized
+  * arrays" error on a dimension mismatch. `kernel` names that method. */
 trait VectorDistanceExpression extends BinaryExpression with ExpectsInputTypes {
+  protected def kernel: String
+
   override def nullable: Boolean = left.nullable || right.nullable
 
-  protected def checkDims(n1: Int, n2: Int): Unit =
-    if (n1 != n2) {
-      throw new IllegalArgumentException(
-        s"expected equally sized arrays but got arrays with dimensions $n1 and $n2")
-    }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (x, y) => s"graft.ann.Kernels.$kernel($x, $y)")
+}
+
+/** A distance an ANN index serves: `metric` is the index metric that
+  * ranks by it ([[graft.plans.AnnTopK]] rewrites a sort on it). */
+trait IndexedDistance extends VectorDistanceExpression {
+  def metric: Metric
 }
 
 /** Squared Euclidean distance. Reference: lantern_hnsw/src/hnsw.c:354-360. */
-case class L2SqDist(left: Expression, right: Expression)
-    extends VectorDistanceExpression {
+case class L2SqDist(left: Expression, right: Expression) extends IndexedDistance {
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(FloatType), ArrayType(FloatType))
   override def dataType: DataType = DoubleType
   override def prettyName: String = "l2sq_dist"
+  override def metric: Metric = Metric.L2Sq
+  override protected def kernel: String = "l2sq"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    checkDims(x.numElements(), y.numElements())
-    var acc = 0.0
-    var i = 0
-    val n = x.numElements()
-    while (i < n) {
-      val d = x.getFloat(i).toDouble - y.getFloat(i).toDouble
-      acc += d * d
-      i += 1
-    }
-    acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = $x.numElements();
-         |if ($n != $y.numElements()) {
-         |  throw new java.lang.IllegalArgumentException(
-         |    "expected equally sized arrays but got arrays with dimensions " +
-         |    $n + " and " + $y.numElements());
-         |}
-         |double ${ev.value}Acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $d = (double) $x.getFloat($i) - (double) $y.getFloat($i);
-         |  ${ev.value}Acc += $d * $d;
-         |}
-         |${ev.value} = ${ev.value}Acc;
-       """.stripMargin
-    })
+  override def nullSafeEval(a: Any, b: Any): Any =
+    graft.ann.Kernels.l2sq(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -107,60 +73,16 @@ case class L2SqDist(left: Expression, right: Expression)
 
 /** Cosine distance 1 - cos(a, b). Reference: lantern_hnsw/src/hnsw.c:362-368.
   * Zero-norm input yields distance 1.0 (orthogonal-by-convention). */
-case class CosDist(left: Expression, right: Expression)
-    extends VectorDistanceExpression {
+case class CosDist(left: Expression, right: Expression) extends IndexedDistance {
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(FloatType), ArrayType(FloatType))
   override def dataType: DataType = DoubleType
   override def prettyName: String = "cos_dist"
+  override def metric: Metric = Metric.Cos
+  override protected def kernel: String = "cos"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    checkDims(x.numElements(), y.numElements())
-    var dot = 0.0
-    var nx = 0.0
-    var ny = 0.0
-    var i = 0
-    val n = x.numElements()
-    while (i < n) {
-      val xv = x.getFloat(i).toDouble
-      val yv = y.getFloat(i).toDouble
-      dot += xv * yv
-      nx += xv * xv
-      ny += yv * yv
-      i += 1
-    }
-    if (nx == 0.0 || ny == 0.0) 1.0
-    else 1.0 - dot / Math.sqrt(nx * ny)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      s"""
-         |int $n = $x.numElements();
-         |if ($n != $y.numElements()) {
-         |  throw new java.lang.IllegalArgumentException(
-         |    "expected equally sized arrays but got arrays with dimensions " +
-         |    $n + " and " + $y.numElements());
-         |}
-         |double $dot = 0.0; double $nx = 0.0; double $ny = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $xv = (double) $x.getFloat($i);
-         |  double $yv = (double) $y.getFloat($i);
-         |  $dot += $xv * $yv; $nx += $xv * $xv; $ny += $yv * $yv;
-         |}
-         |${ev.value} = ($nx == 0.0 || $ny == 0.0)
-         |  ? 1.0 : 1.0 - $dot / java.lang.Math.sqrt($nx * $ny);
-       """.stripMargin
-    })
+  override def nullSafeEval(a: Any, b: Any): Any =
+    graft.ann.Kernels.cos(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -169,45 +91,16 @@ case class CosDist(left: Expression, right: Expression)
 
 /** Bit hamming distance over int32 elements (dim x 32 bits).
   * Reference: lantern_hnsw/src/hnsw.c:370-376, bit view hnsw.c:308-319. */
-case class HammingDist(left: Expression, right: Expression)
-    extends VectorDistanceExpression {
+case class HammingDist(left: Expression, right: Expression) extends IndexedDistance {
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(IntegerType), ArrayType(IntegerType))
   override def dataType: DataType = IntegerType
   override def prettyName: String = "hamming_dist"
+  override def metric: Metric = Metric.Hamming
+  override protected def kernel: String = "hamming"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    checkDims(x.numElements(), y.numElements())
-    var acc = 0
-    var i = 0
-    val n = x.numElements()
-    while (i < n) {
-      acc += java.lang.Integer.bitCount(x.getInt(i) ^ y.getInt(i))
-      i += 1
-    }
-    acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      s"""
-         |int $n = $x.numElements();
-         |if ($n != $y.numElements()) {
-         |  throw new java.lang.IllegalArgumentException(
-         |    "expected equally sized arrays but got arrays with dimensions " +
-         |    $n + " and " + $y.numElements());
-         |}
-         |int ${ev.value}Acc = 0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  ${ev.value}Acc += java.lang.Integer.bitCount($x.getInt($i) ^ $y.getInt($i));
-         |}
-         |${ev.value} = ${ev.value}Acc;
-       """.stripMargin
-    })
+  override def nullSafeEval(a: Any, b: Any): Any =
+    graft.ann.Kernels.hamming(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -222,39 +115,10 @@ case class InnerProduct(left: Expression, right: Expression)
     Seq(ArrayType(FloatType), ArrayType(FloatType))
   override def dataType: DataType = DoubleType
   override def prettyName: String = "inner_product"
+  override protected def kernel: String = "dot"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    checkDims(x.numElements(), y.numElements())
-    var acc = 0.0
-    var i = 0
-    val n = x.numElements()
-    while (i < n) {
-      acc += x.getFloat(i).toDouble * y.getFloat(i).toDouble
-      i += 1
-    }
-    acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      s"""
-         |int $n = $x.numElements();
-         |if ($n != $y.numElements()) {
-         |  throw new java.lang.IllegalArgumentException(
-         |    "expected equally sized arrays but got arrays with dimensions " +
-         |    $n + " and " + $y.numElements());
-         |}
-         |double ${ev.value}Acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  ${ev.value}Acc += (double) $x.getFloat($i) * (double) $y.getFloat($i);
-         |}
-         |${ev.value} = ${ev.value}Acc;
-       """.stripMargin
-    })
+  override def nullSafeEval(a: Any, b: Any): Any =
+    graft.ann.Kernels.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

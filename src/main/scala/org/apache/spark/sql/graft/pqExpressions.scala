@@ -4,7 +4,8 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import graft.pq.Codebook
+import graft.ann.Kernels
+import graft.pq.{Codebook, Pq}
 
 /** Static kernels for product/scalar quantization, invoked from codegen.
   * Reference semantics: lantern_hnsw/sql/lantern.sql:256-339 (quantize/
@@ -64,45 +65,21 @@ object PqKernels {
   }
 
   /** Nearest centroid index under l2sq (0) or cos (1) — the IVF coarse
-    * quantizer kernel. Distance arithmetic matches graft.ann.Metric
-    * (double accumulation, sequential order) so assignments agree with
-    * the driver-side probe selection. `centNorms` = precomputed squared
-    * centroid norms (cos only; pass null for l2sq) — recomputing them
-    * per row would dominate the cos build path. */
+    * quantizer kernel, over the [[graft.ann.Kernels]] arithmetic (so
+    * assignments agree with the driver-side probe selection). The row
+    * is copied out once and compared with every centroid. `centNorms` =
+    * precomputed squared centroid norms (cos only; pass null for l2sq) —
+    * recomputing them per row would dominate the cos build path. */
   def nearestCentroid(v: ArrayData, cents: Array[Array[Float]],
       centNorms: Array[Double], metricId: Int): Int = {
-    val n = v.numElements()
-    require(cents.length > 0 && cents(0).length == n,
-      s"expected equally sized arrays but got dimensions ${cents(0).length} and $n")
-    // query norm once per row (cos)
-    var na = 0.0
-    if (metricId == 1) {
-      var i = 0
-      while (i < n) { val x = v.getFloat(i).toDouble; na += x * x; i += 1 }
-    }
+    val a = v.toFloatArray()
+    if (metricId == 0) return Pq.nearest(cents, a)
+    val na = Kernels.dot(a, a)
     var best = 0
     var bd = Double.MaxValue
     var c = 0
     while (c < cents.length) {
-      val ct = cents(c)
-      var d = 0.0
-      if (metricId == 0) {
-        var i = 0
-        while (i < n) {
-          val x = v.getFloat(i).toDouble - ct(i).toDouble
-          d += x * x
-          i += 1
-        }
-      } else {
-        var dot = 0.0
-        var i = 0
-        while (i < n) {
-          dot += v.getFloat(i).toDouble * ct(i).toDouble
-          i += 1
-        }
-        val nb = centNorms(c)
-        d = if (na == 0.0 || nb == 0.0) 1.0 else 1.0 - dot / math.sqrt(na * nb)
-      }
+      val d = Kernels.cosFromParts(Kernels.dot(a, cents(c)), na, centNorms(c))
       if (d < bd) { bd = d; best = c }
       c += 1
     }
@@ -291,7 +268,7 @@ case class NearestCentroid(child: Expression,
 
   @transient lazy val centNorms: Array[Double] =
     if (metricId != 1) null
-    else centroids.map(ct => ct.foldLeft(0.0)((a, x) => a + x.toDouble * x))
+    else centroids.map(ct => Kernels.dot(ct, ct))
 
   override def nullSafeEval(v: Any): Any =
     PqKernels.nearestCentroid(v.asInstanceOf[ArrayData], centroids,

@@ -2,11 +2,17 @@ package graft
 
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
-import graft.ann.Metric
-import org.apache.spark.sql.graft.PqKernels
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
+import graft.ann.{HammingView, Hnsw, Kernels, Metric}
+import org.apache.spark.sql.graft.{CosDist, HammingDist, InnerProduct, L2SqDist, PqKernels}
 
-/** Property tests for the distance and scalar-quantization kernels
-  * (metric axioms and encode/decode bounds, independent of Spark). */
+/** Property tests for the distance and scalar-quantization kernels:
+  * metric axioms, encode/decode bounds, and bit equality of every path
+  * that computes a distance (no SparkSession needed). */
 object DistanceProps extends Properties("distances") {
 
   private val pairGen: Gen[(Array[Float], Array[Float])] =
@@ -24,6 +30,33 @@ object DistanceProps extends Properties("distances") {
       c <- Gen.listOfN(n, Gen.choose(-50.0f, 50.0f))
     } yield (a.toArray, b.toArray, c.toArray)
   }
+
+  // The expression path over bound row columns 0 and 1: interpreted
+  // eval and the generated projection (compiled, never the interpreted
+  // fallback UnsafeProjection.create may pick).
+  private def exprPaths(mk: (Expression, Expression) => Expression,
+      t: DataType): InternalRow => Seq[Any] = {
+    val e = mk(BoundReference(0, t, nullable = false),
+      BoundReference(1, t, nullable = false))
+    val proj = GenerateUnsafeProjection.generate(Seq(e))
+    row => Seq(e.eval(row), proj(row).get(0, e.dataType))
+  }
+  private val floats = ArrayType(FloatType, containsNull = false)
+  private lazy val l2sqPaths = exprPaths(L2SqDist, floats)
+  private lazy val cosPaths = exprPaths(CosDist, floats)
+  private lazy val dotPaths = exprPaths(InnerProduct, floats)
+  private lazy val hammingPaths =
+    exprPaths(HammingDist, ArrayType(IntegerType, containsNull = false))
+
+  /** Distance of `q` to the single node `v` through an HNSW graph. */
+  private def graphDist(metric: Metric, v: Array[Float], q: Array[Float]): Double = {
+    val h = new Hnsw(v.length, metric, 8, 16, 0L)
+    h.insert(0L, v)
+    h.search(q, 1, 1).head._2
+  }
+
+  private def bits(xs: Seq[Any]): Seq[Long] =
+    xs.map(x => java.lang.Double.doubleToRawLongBits(x.asInstanceOf[Double]))
 
   property("l2sq nonneg+symmetric+selfzero") = forAll(pairGen) { case (a, b) =>
     val d = Metric.L2Sq.dist(a, b)
@@ -66,16 +99,32 @@ object DistanceProps extends Properties("distances") {
         b <- Gen.listOfN(n, Gen.choose(Int.MinValue, Int.MaxValue))
       } yield (a.toArray, b.toArray)
     }) { case (a, b) =>
-      // the sign-view float walk over expanded words must equal the
-      // reference bit kernel bitCount(xor) for ANY int content — this
-      // is the exactness claim the transparent hamming rewrite rests on
-      val expanded =
-        Metric.Hamming.dist(graft.ann.HammingView.expand(a),
-          graft.ann.HammingView.expand(b))
+      // the sign-view float walk over expanded words, its packed-sign
+      // form in the graph and `hamming_dist` (interpreted and codegen'd)
+      // must all equal the reference bit kernel bitCount(xor) for ANY
+      // int content — the exactness claim the transparent hamming
+      // rewrite rests on
+      val (ea, eb) = (HammingView.expand(a), HammingView.expand(b))
+      val row = InternalRow(UnsafeArrayData.fromPrimitiveArray(a),
+        UnsafeArrayData.fromPrimitiveArray(b))
       val reference = a.zip(b).map { case (x, y) =>
         java.lang.Integer.bitCount(x ^ y)
       }.sum.toDouble
-      expanded == reference
+      val paths = hammingPaths(row).map(_.asInstanceOf[Int].toDouble) ++ Seq(
+        Metric.Hamming.dist(ea, eb),
+        Kernels.hamming(Kernels.packSigns(ea), Kernels.packSigns(eb)).toDouble,
+        graphDist(Metric.Hamming, eb, ea))
+      paths.forall(_ == reference)
+    }
+
+  property("expressions (eval + codegen), Metric and Hnsw share one arithmetic") =
+    forAll(pairGen) { case (a, b) =>
+      val row = InternalRow(UnsafeArrayData.fromPrimitiveArray(a),
+        UnsafeArrayData.fromPrimitiveArray(b))
+      val l2sq = l2sqPaths(row) ++ Seq(Metric.L2Sq.dist(a, b), graphDist(Metric.L2Sq, b, a))
+      val cos = cosPaths(row) ++ Seq(Metric.Cos.dist(a, b), graphDist(Metric.Cos, b, a))
+      val dot = dotPaths(row) :+ Kernels.dot(a, b)
+      Prop.all(Seq(l2sq, cos, dot).map(xs => Prop(bits(xs).distinct.size == 1) :| xs.toString): _*)
     }
 
   property("DoubleIntHeap pops in heap order (min and max)") =

@@ -82,7 +82,7 @@ class DistanceSpec extends SparkSpec {
   test("knn returns exact top-k with deterministic tie-break") {
     val df = cube.toDF("id", "v")
     val got = operators.Knn.knn(df, $"v", vecLit(Seq(0f, 0f, 0f)), 4,
-        operators.Knn.L2Sq, Some($"id"))
+        ann.Metric.L2Sq, Some($"id"))
       .select($"id").as[String].collect().toSeq
     assert(got == Seq("000", "001", "010", "100"))
   }

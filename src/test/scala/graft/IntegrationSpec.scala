@@ -58,8 +58,8 @@ class IntegrationSpec extends SparkSpec {
       AnnIndex.Params(Metric.L2Sq, numShards = 2))
     val q = Seq.tabulate(64)(i => ((i * 37) % 19 - 9) / 16.0f)
     val terms = Seq(
-      Knn.WeightedTerm(0.7, col("embedding"), vecLit(q), Knn.L2Sq),
-      Knn.WeightedTerm(0.3, col("embedding"), vecLit(q), Knn.Cos))
+      Knn.WeightedTerm(0.7, col("embedding"), vecLit(q), Metric.L2Sq),
+      Knn.WeightedTerm(0.3, col("embedding"), vecLit(q), Metric.Cos))
     val ann = Knn.weightedSearchAnn(emb, "vec_id",
         terms.map(t => (t, dir)), k = 10, ef = 600)
       .collect().map(_.getAs[Long]("vec_id")).toSeq
@@ -142,7 +142,7 @@ class IntegrationSpec extends SparkSpec {
       "text", "vec", Runtimes.mock(8), "mock-embed")
     val qv = Runtimes.mock(8).embedBatch("mock-embed", Seq("spark join")).head
     val reranked = Knn.knn(embedded, col("vec"), vecLit(qv.toSeq), 10,
-      Knn.L2Sq, Some(col("doc_id")))
+      Metric.L2Sq, Some(col("doc_id")))
     assert(reranked.count() == 10)
   }
 

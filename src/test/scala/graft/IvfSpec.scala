@@ -35,6 +35,17 @@ class IvfSpec extends SparkSpec {
     assert(got.map(_.getDouble(1)).toSeq.sorted == got.map(_.getDouble(1)).toSeq)
   }
 
+  test("topK with a query of the wrong dimension raises the reference error") {
+    val dir = Files.createTempDirectory("ivf_dim").toString
+    IvfIndex.build(emb, "vec_id", "embedding", dir, IvfIndex.Params(nCells = 4))
+    val q = corpus.head._2
+    for (bad <- Seq(q :+ 1f, q.init)) {
+      val e = intercept[IllegalArgumentException](
+        IvfIndex.topK(spark, dir, bad, 10, nprobe = 2).collect())
+      assert(e.getMessage.contains("expected equally sized arrays"), e.getMessage)
+    }
+  }
+
   test("targetRecall derives nprobe through topK/topKJoin; explicit stays fallback") {
     val dir = Files.createTempDirectory("ivf_target").toString
     IvfIndex.build(emb, "vec_id", "embedding", dir,

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.ann.Metric
 import graft.operators.Knn
 import graft.functions.vecLit
 
@@ -14,10 +15,10 @@ class KnnCursorSpec extends SparkSpec {
 
   test("cursor yields rows in distance order across batch boundaries") {
     val it = Knn.knnCursor(emb, col("embedding"), vecLit(q),
-      Knn.L2Sq, Some(col("vec_id")), initK = 3)
+      Metric.L2Sq, Some(col("vec_id")), initK = 3)
     val first25 = it.take(25).map(_.getAs[Long]("vec_id")).toSeq
     val exact = Knn.knn(emb, col("embedding"), vecLit(q), 25,
-      Knn.L2Sq, Some(col("vec_id")))
+      Metric.L2Sq, Some(col("vec_id")))
       .collect().map(_.getAs[Long]("vec_id")).toSeq
     assert(first25 == exact)
   }
@@ -25,22 +26,22 @@ class KnnCursorSpec extends SparkSpec {
   test("cursor terminates when the corpus is exhausted") {
     val small = emb.limit(7)
     val it = Knn.knnCursor(small, col("embedding"), vecLit(q),
-      Knn.L2Sq, Some(col("vec_id")), initK = 3)
+      Metric.L2Sq, Some(col("vec_id")), initK = 3)
     assert(it.size == 7)
   }
 
   test("cursor stops at the maxK cap") {
     val it = Knn.knnCursor(emb, col("embedding"), vecLit(q),
-      Knn.L2Sq, Some(col("vec_id")), initK = 4, maxK = 8)
+      Metric.L2Sq, Some(col("vec_id")), initK = 4, maxK = 8)
     assert(it.size == 8)
   }
 
   test("delta refills: fetched rows stay O(consumed), sequence unchanged") {
     val cur = new Knn.KnnCursor(emb, col("embedding"), vecLit(q),
-      Knn.L2Sq, Some(col("vec_id")), 3, 1000)
+      Metric.L2Sq, Some(col("vec_id")), 3, 1000)
     val got = cur.take(48).map(_.getAs[Long]("vec_id")).toSeq
     val exact = Knn.knn(emb, col("embedding"), vecLit(q), 48,
-      Knn.L2Sq, Some(col("vec_id")))
+      Metric.L2Sq, Some(col("vec_id")))
       .collect().map(_.getAs[Long]("vec_id")).toSeq
     assert(got == exact)
     // escalations 3 -> 6 -> 12 -> 24 -> 48: a full re-run fetches
@@ -59,10 +60,10 @@ class KnnCursorSpec extends SparkSpec {
     val df = rows.toDF("vec_id", "embedding")
     val zero = vecLit(Seq.fill(4)(0.0f))
     val it = Knn.knnCursor(df, col("embedding"), zero,
-      Knn.L2Sq, Some(col("vec_id")), initK = 3)
+      Metric.L2Sq, Some(col("vec_id")), initK = 3)
     val got = it.map(_.getAs[Long]("vec_id")).toSeq
     val exact = Knn.knn(df, col("embedding"), zero, 40,
-      Knn.L2Sq, Some(col("vec_id")))
+      Metric.L2Sq, Some(col("vec_id")))
       .collect().map(_.getAs[Long]("vec_id")).toSeq
     assert(got == exact)
     assert(got.distinct.length == 40)
@@ -80,7 +81,7 @@ class KnnCursorSpec extends SparkSpec {
     val df = rows.toDF("vec_id", "embedding")
     val zero = vecLit(Seq.fill(4)(0.0f))
     val cur = new Knn.KnnCursor(df, col("embedding"), zero,
-      Knn.L2Sq, Some(col("vec_id")), 4, 1000)
+      Metric.L2Sq, Some(col("vec_id")), 4, 1000)
     val got = cur.map(_.getAs[Long]("vec_id")).toSeq
     assert(got == (0L until 64L))
     assert(cur.fetchedRows <= 4 * 64,
@@ -96,7 +97,7 @@ class KnnCursorSpec extends SparkSpec {
     val rows = (0 until 7).map(i => (i.toLong, Seq.fill(4)(0.0f)))
     val df = rows.toDF("vec_id", "embedding")
     val it = Knn.knnCursor(df, col("embedding"), vecLit(Seq.fill(4)(1.0f)),
-      Knn.Cos, Some(col("vec_id")), initK = 2)
+      Metric.Cos, Some(col("vec_id")), initK = 2)
     val got = it.map(_.getAs[Long]("vec_id")).toSeq
     assert(got == (0L until 7L), s"NaN boundary broke the cursor: $got")
   }
@@ -112,20 +113,20 @@ class KnnCursorSpec extends SparkSpec {
     val df = rows.toDF("vec_id", "embedding")
     val zero = vecLit(Seq.fill(4)(0.0f))
     val topAll = Knn.knn(df, col("embedding"), zero, 8,
-        Knn.L2Sq, Some(col("vec_id")))
+        Metric.L2Sq, Some(col("vec_id")))
       .collect().map(_.getAs[Long]("vec_id")).toSeq
     assert(topAll == Seq(0L, 1L, 2L, 3L, 4L, 10L, 11L, 12L),
       s"null rows must sort last: $topAll")
     // the cursor crosses the finite -> null boundary without loss
     val it = Knn.knnCursor(df, col("embedding"), zero,
-      Knn.L2Sq, Some(col("vec_id")), initK = 3)
+      Metric.L2Sq, Some(col("vec_id")), initK = 3)
     assert(it.map(_.getAs[Long]("vec_id")).toSeq == topAll)
   }
 
   test("non-positive initK is rejected up front") {
     intercept[IllegalArgumentException] {
       Knn.knnCursor(emb, col("embedding"), vecLit(q),
-        Knn.L2Sq, Some(col("vec_id")), initK = 0)
+        Metric.L2Sq, Some(col("vec_id")), initK = 0)
     }
   }
 
@@ -133,7 +134,7 @@ class KnnCursorSpec extends SparkSpec {
     val poisoned = emb.withColumn("dist", lit(0.0))
     val e = intercept[IllegalArgumentException] {
       Knn.knnCursor(poisoned, col("embedding"), vecLit(q),
-        Knn.L2Sq, Some(col("vec_id")))
+        Metric.L2Sq, Some(col("vec_id")))
     }
     assert(e.getMessage.contains("dist"))
   }

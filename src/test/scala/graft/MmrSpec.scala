@@ -23,7 +23,7 @@ class MmrSpec extends SparkSpec {
     val q = Array(0.0f, 0.0f)
     // plain top-3: all three from the near cluster
     val plain = operators.Knn.knn(clustered, col("v"),
-        graft.functions.vecLit(q.toSeq), 3, operators.Knn.L2Sq,
+        graft.functions.vecLit(q.toSeq), 3, ann.Metric.L2Sq,
         Some(col("id")))
       .select("id").collect().map(_.getLong(0)).toSet
     assert(plain == Set(1L, 2L, 3L))
