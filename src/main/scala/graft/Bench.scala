@@ -46,8 +46,6 @@ object Bench {
     // 3-dp floats: millisecond resolution, far below the bench's noise
     // floor, and it halves the line so more of it survives a bounded
     // stdout-tail capture
-    def dp3(v: Double): String = // Locale.ROOT: '.' even under comma locales
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val qs = results.map { case (k, v, _) => "\"" + k + "\":" + dp3(v) }
       .mkString("{", ",", "}")
     val statuses = ("prepare", prepStatus) +: results.map { case (k, _, s) => (k, s) }
@@ -74,16 +72,31 @@ object Bench {
       val out = java.nio.file.Paths.get("target", s"bench_$sfName.json")
       java.nio.file.Files.createDirectories(out.getParent)
       java.nio.file.Files.writeString(out, line + "\n")
-      System.err.println(s"[bench] full line written to $out")
+      // on stdout, BEFORE the summary: a message on the other stream
+      // can interleave after it in a merged capture
+      println(s"[bench] full line written to $out")
     } catch { case e: Throwable =>
       System.err.println(s"[bench] artifact write failed: ${e.getMessage}")
     }
-    // a SECOND, final, compact summary line (<300 bytes): the full line
-    // above is ~6 KB and a bounded stdout-tail capture truncates its
-    // FRONT, losing the totals — this one is guaranteed inside any tail.
-    // Per-query times live in the full line and in the target/ artifact.
-    println(s"""{"metric":"total","value":${dp3(total)},"unit":"sec","build_secs":${dp3(buildTotal)},"failures":$failures,"n_queries":${results.length},"sf":"$sfDir","full_line":"target/bench_${java.nio.file.Paths.get(sfDir).getFileName}.json"}""")
+    // stop first so no shutdown logging can land behind the summary
     spark.stop()
+    System.err.flush()
+    println(summaryLine(total, buildTotal, failures, results.length, sfDir))
+    System.out.flush()
     if (failures > 0) sys.exit(1)
   }
+
+  /** The SECOND, final, compact summary line (<300 bytes): the full
+    * line is ~8 KB and a bounded stdout-tail capture truncates its
+    * FRONT, losing the totals — this one is guaranteed inside any
+    * tail. Per-query times live in the full line and in the target/
+    * artifact. */
+  def summaryLine(total: Double, buildSecs: Double, failures: Int,
+      nQueries: Int, sfDir: String): String = {
+    val sfName = java.nio.file.Paths.get(sfDir).getFileName
+    s"""{"metric":"total","value":${dp3(total)},"unit":"sec","build_secs":${dp3(buildSecs)},"failures":$failures,"n_queries":$nQueries,"sf":"$sfDir","full_line":"target/bench_$sfName.json"}"""
+  }
+
+  private def dp3(v: Double): String = // Locale.ROOT: '.' even under comma locales
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 }

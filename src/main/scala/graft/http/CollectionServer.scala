@@ -47,7 +47,7 @@ import graft.embed.Runtimes
   * are); names are validated against `[A-Za-z_][A-Za-z0-9_]*`. */
 class CollectionServer(spark: SparkSession, root: String,
     host: String = "127.0.0.1", port: Int = 0,
-    auth: Option[(String, String)] = None) {
+    auth: Option[(String, String)] = None) extends AutoCloseable {
 
   /** Upper bound on search `k`/`ef` (reference scan cap is 1000; this
     * is the REST analog — a top-k endpoint must never become a
@@ -93,6 +93,7 @@ class CollectionServer(spark: SparkSession, root: String,
   def stop(): Unit = synchronized {
     if (server != null) { server.stop(0); server = null }
   }
+  def close(): Unit = stop()
 
   // ---- request plumbing ----
 

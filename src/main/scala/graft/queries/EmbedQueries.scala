@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SharedState, Tables}
 import graft.embed.{Embeddings, Runtimes}
 
 /** Driver-contract queries for the embedding/LLM family (SURVEY.md
@@ -44,11 +44,9 @@ object EmbedQueries {
     * into a parquet sink, so the oracle is the BATCH embed of the same
     * rows — daemon semantics (job row, checkpointed stream, status
     * transition) are on the contract, not just in specs. */
-  private val streamRuns = new scala.collection.concurrent.TrieMap[String, String]()
   private def embedStreamPath(s: SparkSession, dir: String): String =
-    streamRuns.getOrElseUpdate(dir, {
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_embed_stream").toString
+    SharedState.value(s"embedstream:$dir") {
+      val work = SharedState.tempDir("graft_embed_stream")
       docs(s, dir).select(col("doc_id"), col("text"))
         .orderBy(col("doc_id").asc).limit(200)
         .write.parquet(s"$work/src")
@@ -59,7 +57,7 @@ object EmbedQueries {
       require(reg.getJobStatus(id).contains("completed"),
         s"streaming embed job ended ${reg.getJobStatus(id)}")
       s"$work/dst"
-    })
+    }
 
   /** Completion-type daemon job end-to-end (reference
     * add_completion_job, lantern_extras/src/daemon.rs:175-233): the
@@ -67,11 +65,9 @@ object EmbedQueries {
     * Structured Streaming (AvailableNow) into parquet, so the oracle
     * is the batch completion of the same rows — the q_embed_stream
     * discipline for the second job type. */
-  private val completionRuns = new scala.collection.concurrent.TrieMap[String, String]()
   private def completionStreamPath(s: SparkSession, dir: String): String =
-    completionRuns.getOrElseUpdate(dir, {
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_completion_stream").toString
+    SharedState.value(s"completionstream:$dir") {
+      val work = SharedState.tempDir("graft_completion_stream")
       docs(s, dir).select(col("doc_id"), col("text"))
         .orderBy(col("doc_id").asc).limit(100)
         .write.parquet(s"$work/src")
@@ -82,7 +78,7 @@ object EmbedQueries {
       require(reg.getJobStatus(id).contains("completed"),
         s"streaming completion job ended ${reg.getJobStatus(id)}")
       s"$work/dst"
-    })
+    }
 
   private def completionStream(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(completionStreamPath(s, dir))
@@ -99,14 +95,9 @@ object EmbedQueries {
 
   /** One-time artifact warmup (the streaming embed run is a build, not
     * a steady-state probe — same discipline as the index builds). */
-  def prepare(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    val t0 = System.nanoTime()
-    embedStreamPath(s, dir)
-    val t1 = System.nanoTime()
-    completionStreamPath(s, dir)
-    Seq(("embed_stream", (t1 - t0) / 1e9),
-      ("completion_stream", (System.nanoTime() - t1) / 1e9))
-  }
+  def prepare(s: SparkSession, dir: String): Seq[(String, Double)] = Seq(
+    SharedState.timed("embed_stream") { embedStreamPath(s, dir) },
+    SharedState.timed("completion_stream") { completionStreamPath(s, dir) })
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_embed_mock" -> ((s, d) => embedMock(s, d)),

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SharedState, Tables}
 import graft.streaming.EventStreams
 
 /** Driver-contract queries over the events stream table: the batch side
@@ -105,11 +105,9 @@ object EventQueries {
     * below the watermark, so the emitted set is exactly DISTINCT keys
     * (only keys are emitted; which physical row won the in-batch race
     * can never show). Oracle = batch DISTINCT. */
-  private val dedupRuns = new scala.collection.concurrent.TrieMap[String, String]()
   private def streamDedupPath(s: SparkSession, dir: String): String =
-    dedupRuns.getOrElseUpdate(dir, {
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_stream_dedup").toString
+    SharedState.value(s"streamdedup:$dir") {
+      val work = SharedState.tempDir("graft_stream_dedup")
       events(s, dir).select(col("ts"), col("user_id"), col("event_type"))
         .coalesce(1).write.parquet(s"$work/src")
       val schema = s.read.parquet(s"$work/src").schema
@@ -126,7 +124,7 @@ object EventQueries {
         .start()
       q.awaitTermination()
       s"$work/dst"
-    })
+    }
 
   private def streamDedup(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(streamDedupPath(s, dir))
@@ -135,11 +133,9 @@ object EventQueries {
 
   /** One-time artifact warmup (the streaming dedup run is a build, not
     * a steady-state probe — same discipline as the embed stream). */
-  def prepare(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    val t0 = System.nanoTime()
-    streamDedupPath(s, dir)
-    Seq(("stream_dedup", (System.nanoTime() - t0) / 1e9))
-  }
+  def prepare(s: SparkSession, dir: String): Seq[(String, Double)] =
+    Seq(SharedState.timed("stream_dedup") { streamDedupPath(s, dir) })
+
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_stream_dedup" -> ((s, d) => streamDedup(s, d)),

@@ -3,14 +3,13 @@ package graft.queries
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
-import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods.parse
 
-import graft.Tables
+import graft.{SharedState, Tables}
 import graft.http.CollectionServer
 
 /** Driver-contract query for the HTTP collection façade (reference
@@ -24,10 +23,6 @@ import graft.http.CollectionServer
 object HttpQueries {
 
   private val Rows = 200
-
-  /** (port, root) per sf dir; the server lives for the session like
-    * the other prepared artifacts (daemon threads, no exit hook). */
-  private val servers = new TrieMap[String, Int]()
 
   /** Client worker threads must be daemon for the same reason the
     * server's are: the batch mains end without tearing this down. */
@@ -51,11 +46,14 @@ object HttpQueries {
     resp.body()
   }
 
+  /** One running server per sf dir, held in [[graft.SharedState]] like
+    * the other prepared artifacts (daemon threads, no exit hook); the
+    * registry's clear stops it and deletes its root. */
   private def ensureServer(s: SparkSession, dir: String): Int =
-    servers.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_http_collections").toString
-      val port = new CollectionServer(s, root).start()
+    SharedState.value(s"httpserver:$dir") {
+      val server = new CollectionServer(s,
+        SharedState.tempDir("graft_http_collections"))
+      val port = server.start()
       post(port, "POST", "/collections",
         """{"name": "vecs", "schema": {
            "id": "bigint GENERATED ALWAYS AS IDENTITY",
@@ -71,14 +69,11 @@ object HttpQueries {
           s"""{"vec_id": ${r.getLong(0)}, "label": ${r.getInt(1)}, "vector": $vec}"""
         }.mkString("""{"rows": [""", ",", "]}")
       post(port, "PUT", "/collections/vecs", rows)
-      port
-    })
+      server
+    }.boundPort
 
-  def prepare(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    val t0 = System.nanoTime()
-    ensureServer(s, dir)
-    Seq(("http_collection", (System.nanoTime() - t0) / 1e9))
-  }
+  def prepare(s: SparkSession, dir: String): Seq[(String, Double)] =
+    Seq(SharedState.timed("http_collection") { ensureServer(s, dir) })
 
   private def httpSearch(s: SparkSession, dir: String): DataFrame = {
     val port = ensureServer(s, dir)

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.SharedState.Policy
 import graft.bm25.Bm25
 import graft.dedup.Dedup
 import graft.sources.Bucketing
@@ -72,11 +73,11 @@ object TextQueries {
     * and shared across the whole BM25/bloom family — the per-query
     * stemmer re-run was the family's dominant cost. */
   private def tokCached(s: SparkSession, dir: String): DataFrame =
-    graft.SharedState.cached(s"bm25tok:$dir")(
+    graft.SharedState.frame(s"bm25tok:$dir", Policy.Persist)(
       Bm25.tokenized(docs(s, dir), col("doc_id"), col("text")))
 
   private def tokStemmedCached(s: SparkSession, dir: String): DataFrame =
-    graft.SharedState.cached(s"bm25tokstem:$dir")(
+    graft.SharedState.frame(s"bm25tokstem:$dir", Policy.Persist)(
       Bm25.tokenized(docs(s, dir), col("doc_id"), col("text"),
         stemmed = true))
 
@@ -85,7 +86,7 @@ object TextQueries {
     * each need the same explode+groupBy; at cluster scale this is the
     * persisted postings table bucketed by term). */
   private def postCached(s: SparkSession, dir: String): DataFrame =
-    graft.SharedState.cachedCompact(s"bm25post:$dir")(
+    graft.SharedState.frame(s"bm25post:$dir", Policy.Compact)(
       Bm25.postingsOf(tokCached(s, dir)))
 
   /** The reference-shaped side table end-to-end (bm25_api.sql:33-56):
@@ -109,7 +110,7 @@ object TextQueries {
       .select(col("doc_id"), round(col("score"), 6).as("score"))
 
   private def postStemmedCached(s: SparkSession, dir: String): DataFrame =
-    graft.SharedState.cachedCompact(s"bm25poststem:$dir")(
+    graft.SharedState.frame(s"bm25poststem:$dir", Policy.Compact)(
       Bm25.postingsOf(tokStemmedCached(s, dir)))
 
   /** Reference-shaped table for the APPROXIMATE search row, built at a
@@ -121,7 +122,7 @@ object TextQueries {
     * is what makes the approximation's three regimes all fire (see
     * [[bm25SearchApprox]]). */
   private def bm25ApproxTableCached(s: SparkSession, dir: String): DataFrame =
-    graft.SharedState.cachedCompact(s"bm25approxtbl:$dir")(
+    graft.SharedState.frame(s"bm25approxtbl:$dir", Policy.Compact)(
       Bm25.createBm25TableOf(tokCached(s, dir),
         bloomThreshold = (docs(s, dir).count() / 2).toInt,
         postings = Some(postCached(s, dir))))
@@ -170,11 +171,7 @@ object TextQueries {
     * embedding column — outside any timed region, so bench numbers mean
     * steady-state retrieval rather than first-touch cache builds. */
   def prepare(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    def timed(name: String)(f: => Unit): (String, Double) = {
-      val t0 = System.nanoTime()
-      f
-      (name, (System.nanoTime() - t0) / 1e9)
-    }
+    import graft.SharedState.timed
     // ---- shared trainers, warmed FIRST and attributed to their own
     // rows: the stage graph, the door artifacts and the refresh chain
     // all read these caches — in the old sequential order their cost
@@ -187,16 +184,18 @@ object TextQueries {
     // (guide §2.6: actions are only sequential because the driver
     // calls them sequentially — each build here is a chain of dozens
     // of small jobs with driver planning gaps, and an independent
-    // build's tasks back-fill those gaps). Dependency edges are
-    // explicit so no two threads first-touch the same per-dir memo:
+    // build's tasks back-fill those gaps). Correctness does not need
+    // the dependency edges below — SharedState builds every shared
+    // artifact once even when threads race for it. They keep per-build
+    // TIMING attribution: a future starts its clock only after its
+    // deps resolved, so a build never reports a dependency's wall as
+    // its own (waiting on another thread's build would):
     //   stages ─┬─> ndk_scored ─┬─> refresh
     //   bounds ─┴─> door ───────┼─> stream ─> absorb
     //   arrivals ───────────────┘   (refresh also needs door+arrivals)
-    // Per-build numbers stay reported (each future times its OWN body,
-    // started only after its deps resolved); job descriptions are
-    // thread-local, so UI attribution survives the overlap. The
-    // pipeline still materializes before the corpus caches below, on
-    // the freshest heap (the century OOM discipline).
+    // Job descriptions are thread-local, so UI attribution survives
+    // the overlap. The pipeline still materializes before the corpus
+    // caches below, on the freshest heap (the century OOM discipline).
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     val pool = java.util.concurrent.Executors.newFixedThreadPool(3,
@@ -224,8 +223,7 @@ object TextQueries {
     val fArrivals = timedF("pipeline_arrivals") {
       pipeArrivalsPath(s, dir); () }
     // the door's corpus-side artifacts hang off the resolved boundary
-    // chain and write under ONE root — warmed exactly once here so
-    // stream and refresh never race the Derived builder
+    // chain and write under ONE root
     val fDoor = after(fBounds)(timedF("pipeline_door") {
       pipeStreamCorpus(s, dir); () })
     // the frozen corpus' scored kept rows (absorb + refresh input)
@@ -275,7 +273,7 @@ object TextQueries {
     * BM25 scores are both SQL-reproducible, so the whole fusion is
     * oracle-checked end-to-end. */
   private def mockEmbCached(s: SparkSession, dir: String): DataFrame =
-    graft.SharedState.cached(s"mockemb:$dir")(
+    graft.SharedState.frame(s"mockemb:$dir", Policy.Persist)(
       graft.embed.Embeddings.embedColumn(
         docs(s, dir).select(col("doc_id"), col("text")), "text", "vec",
         graft.embed.Runtimes.mock(8), "mock-embed", batchSize = 64))
@@ -412,7 +410,7 @@ object TextQueries {
     * weights; at cluster scale this is the persisted weights table a
     * scoring pass reads, not a retrain per query). ≤ 4096 rows. */
   private def qualityWeights(s: SparkSession, dir: String): DataFrame =
-    graft.SharedState.cachedCompact(s"qweights:$dir") {
+    graft.SharedState.frame(s"qweights:$dir", Policy.Compact) {
       val isPos = col("source").isin("src0", "src1", "src2", "src3", "src4")
       graft.text.QualityClassifier.fixedPointWeights(
         graft.text.QualityClassifier.trainCounts(
@@ -428,7 +426,7 @@ object TextQueries {
     * per pass per row. Cluster analog: the scoring job's output table,
     * which the gate and the curriculum binning then read. */
   private def qualityScored(s: SparkSession, dir: String): DataFrame =
-    graft.SharedState.checkpointedDisk(s"qscored:$dir")(
+    graft.SharedState.frame(s"qscored:$dir", Policy.DiskCheckpoint)(
       graft.text.QualityClassifier.scoreFixedPoint(
         spreadForBuild(s, dir, docs(s, dir)),
         col("doc_id"), col("text"), qualityWeights(s, dir)))
@@ -604,7 +602,7 @@ object TextQueries {
   private def dsirTargetPred = col("source")
     .isin("src0", "src1", "src2", "src3", "src4")
   private def dsirWeightsCached(s: SparkSession, dir: String): DataFrame =
-    graft.SharedState.cachedCompact(s"dsirw:$dir") {
+    graft.SharedState.frame(s"dsirw:$dir", Policy.Compact) {
       // one-pass split trainer: the corpus is tokenized ONCE for both
       // slices (bit-identical to the two-frame path, spec-pinned)
       graft.text.Dsir.importanceWeightsSplit(
@@ -621,7 +619,7 @@ object TextQueries {
   /** The weight table as the bucket-ordered array the inline scorer
     * rides (driver-value twin of the frame cache). */
   private def dsirWeightsArr(s: SparkSession, dir: String): Array[Long] =
-    graft.SharedState.cachedValue(s"dsirwarr:$dir")(
+    graft.SharedState.value(s"dsirwarr:$dir")(
       graft.text.Dsir.weightsArray(dsirWeightsCached(s, dir)))
 
   /** DSIR selection end to end: score the raw pool via the NARROW
@@ -638,12 +636,9 @@ object TextQueries {
     * under AvailableNow into parquet), so the oracle is the batch
     * score of the same rows — the q_embed_stream discipline for the
     * data-selection surface. */
-  private val dsirStreamRuns =
-    new scala.collection.concurrent.TrieMap[String, String]()
   private def dsirStreamPath(s: SparkSession, dir: String): String =
-    dsirStreamRuns.getOrElseUpdate(dir, {
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_dsir_stream").toString
+    graft.SharedState.value(s"dsirStreamRuns:$dir") {
+      val work = graft.SharedState.tempDir("graft_dsir_stream")
       docs(s, dir).filter(!dsirTargetPred)
         .select(col("doc_id"), col("text"))
         .orderBy(col("doc_id").asc).limit(200)
@@ -654,7 +649,7 @@ object TextQueries {
         "doc_id", "text", dsirWeightsArr(s, dir),
         s"$work/dst", s"$work/ckpt")
       s"$work/dst"
-    })
+    }
 
   private def dsirStream(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(dsirStreamPath(s, dir))
@@ -696,7 +691,7 @@ object TextQueries {
     * steady-state mix reads a 4-column LogicalRDD leaf and the
     * documents parquet is never re-scanned (golden-plan pinned). */
   private def dsirMixScored(s: SparkSession, dir: String): DataFrame =
-    graft.SharedState.checkpointedDisk(s"dsirmix:scored:$dir")(
+    graft.SharedState.frame(s"dsirmix:scored:$dir", Policy.DiskCheckpoint)(
       graft.text.Dsir.withScoreInline(
           docs(s, dir).filter(!dsirTargetPred), col("text"),
           dsirWeightsArr(s, dir))
@@ -823,9 +818,9 @@ object TextQueries {
       // (r13, first cut) — and an uncut lineage made every fresh
       // query over the final boundary re-analyze the whole pipeline
       // tree on the driver (~10 s, scale-independent; see
-      // SharedState.checkpointedDisk)
-      (stage, f) =>
-        graft.SharedState.checkpointedDisk(s"pipee2e:$stage:$dir")(f()))
+      // SharedState.Policy.DiskCheckpoint)
+      (stage, f) => graft.SharedState.frame(s"pipee2e:$stage:$dir",
+        Policy.DiskCheckpoint)(f()))
 
   /** The parquet-boundary runner over the SAME contract pipeline —
     * stage boundaries become fingerprint-guarded parquet artifacts
@@ -860,55 +855,15 @@ object TextQueries {
     * Cross-JVM RESUME — the production semantics — is exercised with
     * an EXPLICIT root (BoundaryProbe/DoorProbe `root=` argument),
     * where the Runner's lock-fenced commits make sharing safe. The
-    * per-process roots are deleted on JVM exit. */
-  private lazy val processToken: String = {
-    val t = java.util.UUID.randomUUID().toString.take(8)
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      deleteProcessBoundaryRoots()))
-    t
-  }
-  private val processBoundaryRoots =
-    new scala.collection.concurrent.TrieMap[String, Unit]()
-  private def deleteProcessBoundaryRoots(): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+    * root is a registry-owned dir: deleted by [[graft.SharedState]]'s
+    * clear and at JVM exit. */
+  private[graft] def pipelineBoundariesRoot(dir: String): String =
+    graft.SharedState.value(s"pipebounds:$dir") {
+      val h = java.security.MessageDigest.getInstance("MD5")
+        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
+        .take(12)
+      graft.SharedState.tempDir(s"graft_pipebounds_${h}_")
     }
-    processBoundaryRoots.keys.foreach(r => rm(new java.io.File(r)))
-    processBoundaryRoots.clear()
-  }
-
-  /** Register a temp work dir for deletion at JVM exit AND at
-    * [[resetEphemeralState]]. Touching [[processToken]] forces the
-    * shutdown hook even when the boundary runner (which otherwise
-    * installs it) never runs in this JVM. */
-  private def registerEphemeralRoot(path: String): Unit = {
-    processToken
-    processBoundaryRoots.putIfAbsent(path, ())
-    ()
-  }
-
-  private[graft] def pipelineBoundariesRoot(dir: String): String = {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      .take(12)
-    val root =
-      s"${sys.props("java.io.tmpdir")}/graft_pipebounds_${h}_$processToken"
-    processBoundaryRoots.putIfAbsent(root, ())
-    root
-  }
-
-  /** Reset every piece of memoized one-shot state the contract rows
-    * ride (the streaming door's completed-run paths, the materialized
-    * arrivals drop dirs, and the per-process boundary artifact roots —
-    * the work dirs themselves are deleted, not just forgotten) — so a
-    * two-scale gate can
-    * measure BOTH sides cold-symmetrically instead of comparing a
-    * cached small side against a cold large side (ADVICE r14). */
-  private[graft] def resetEphemeralState(): Unit = {
-    pipelineStreamRuns.clear()
-    pipeArrivalsDirs.clear()
-    deleteProcessBoundaryRoots()
-  }
 
   /** The parquet-runner contract row. Steady state does what a
     * resumed cluster job does: validate the seven fingerprints
@@ -1021,7 +976,7 @@ object TextQueries {
     * and weights deserialized from their blobs), memoized per dir. */
   private[graft] def pipeStreamCorpus(s: SparkSession, dir: String)
       : graft.streaming.IngestPipeline.PreparedCorpus =
-    graft.SharedState.cachedValue(s"door:corpus:$dir")(
+    graft.SharedState.value(s"door:corpus:$dir")(
       doorArtifacts(s, dir)._1)
 
   /** The per-JVM DERIVED twin of [[doorArtifacts]] — the same corpus
@@ -1050,38 +1005,25 @@ object TextQueries {
     * door consumer (the gen-2 refresh's half-drops) reads, so the
     * arrival-derivation lineage (a docs-filter × pipeAug join) runs
     * exactly once across the stream/absorb/refresh prepare chain. */
-  private val pipeArrivalsDirs =
-    new scala.collection.concurrent.TrieMap[String, String]()
   private[graft] def pipeArrivalsPath(s: SparkSession, dir: String): String =
-    pipeArrivalsDirs.getOrElseUpdate(dir, {
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_pipe_arrivals").toString
-      // the drop dir lives exactly as long as the memoized path: the
-      // shutdown hook deletes it at JVM exit, resetEphemeralState
-      // deletes it (and clears this cache) mid-process — a long-lived
-      // session neither leaks orphaned parquet dirs nor serves a leaf
-      // that outlived a state reset
-      registerEphemeralRoot(work)
+    graft.SharedState.value(s"pipeArrivalsDirs:$dir") {
+      val work = graft.SharedState.tempDir("graft_pipe_arrivals")
       // ONE file -> one AvailableNow micro-batch: an ingest drop is one
       // batch by contract (the intra-batch keeper's unit)
       pipeArrivals(s, dir).coalesce(1).write.parquet(s"$work/src")
       s"$work/src"
-    })
+    }
 
-  private val pipelineStreamRuns =
-    new scala.collection.concurrent.TrieMap[String, String]()
   private[graft] def pipelineStreamPath(s: SparkSession, dir: String): String =
-    pipelineStreamRuns.getOrElseUpdate(dir, {
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_pipe_stream").toString
-      registerEphemeralRoot(work)
+    graft.SharedState.value(s"pipelineStreamRuns:$dir") {
+      val work = graft.SharedState.tempDir("graft_pipe_stream")
       val src = pipeArrivalsPath(s, dir)
       val schema = s.read.parquet(src).schema
       graft.streaming.IngestPipeline.run(s, src, schema,
         "doc_id", "source", "text", pipeStreamCorpus(s, dir),
         s"$work/dst", s"$work/ckpt")
       s"$work/dst"
-    })
+    }
 
   private def pipelineStream(s: SparkSession, dir: String): DataFrame =
     graft.streaming.IngestPipeline.readSink(s, pipelineStreamPath(s, dir))
@@ -1095,7 +1037,7 @@ object TextQueries {
     * `selected` boundary consumed; persisted once per dir (two mix
     * passes read it). */
   private def ndkScored(s: SparkSession, dir: String): DataFrame =
-    graft.SharedState.checkpointedDisk(s"absorb:ndkscored:$dir")(
+    graft.SharedState.frame(s"absorb:ndkscored:$dir", Policy.DiskCheckpoint)(
       graft.text.Dsir.withScoreInline(
           pipelineStages(s, dir).toMap.apply("ndk"), col("text_c4"),
           dsirWeightsArr(s, dir))
@@ -1124,7 +1066,7 @@ object TextQueries {
     * consolidate_bm25_table pattern applied to the pipeline). */
   private def absorbRefreshed(s: SparkSession, dir: String)
       : graft.operators.CorpusRefresh.Refreshed =
-    graft.SharedState.cachedValue(s"absorb:refreshed:$dir")(
+    graft.SharedState.value(s"absorb:refreshed:$dir")(
       graft.operators.CorpusRefresh.absorb(pipeStreamCorpus(s, dir),
         ndkScored(s, dir), absorbDropKept(s, dir)))
 
@@ -1152,7 +1094,7 @@ object TextQueries {
     * Refreshed value memoizes the absorb chain. */
   private def refresh2(s: SparkSession, dir: String)
       : graft.operators.CorpusRefresh.Refreshed =
-    graft.SharedState.cachedValue(s"absorb:refresh2:$dir") {
+    graft.SharedState.value(s"absorb:refresh2:$dir") {
       val corpus0 = pipeStreamCorpus(s, dir)
       // the materialized arrivals leaf, not the derivation lineage —
       // the stream build already wrote it
@@ -1160,7 +1102,7 @@ object TextQueries {
       def door(half: DataFrame,
           c: graft.streaming.IngestPipeline.PreparedCorpus,
           key: String): DataFrame =
-        graft.SharedState.checkpointedDisk(s"absorb:$key:$dir")(
+        graft.SharedState.frame(s"absorb:$key:$dir", Policy.DiskCheckpoint)(
           graft.streaming.IngestPipeline.curateBatchKept(half,
             col("doc_id"), col("source"), col("text"), c))
       val kept1 = door(arrivals.filter(col("doc_id") % 2 === 0), corpus0,
@@ -1560,12 +1502,12 @@ object TextQueries {
     * pass over every gram is a one-time artifact cost, never a
     * steady-state query cost). */
   private def winnowCached(s: SparkSession, dir: String): DataFrame =
-    // cachedCompact, not cached: spreadForBuild widens the BUILD to the
+    // Compact, not Persist: spreadForBuild widens the BUILD to the
     // session's cores (the one-time md5 pass wants them), but the cache
     // must not inherit that width — q_winnow's steady probes paid a
     // 32-task dispatch per stage over near-empty partitions (the exact
     // leak measured and reverted on the BM25 tokenized caches in r18)
-    graft.SharedState.cachedCompact(s"winnow:$dir")(
+    graft.SharedState.frame(s"winnow:$dir", Policy.Compact)(
       TextOps.winnow(spreadForBuild(s, dir, docs(s, dir)), col("doc_id"),
         winnowAug, k = 5, w = 4))
 
@@ -1603,7 +1545,7 @@ object TextQueries {
   /** Verified winnow pairs, persisted once per dir (the pairs table a
     * dedup pipeline materializes from the fingerprint table). */
   private def winnowPairsCached(s: SparkSession, dir: String): DataFrame =
-    graft.SharedState.cachedCompact(s"winnowpairs:$dir")(
+    graft.SharedState.frame(s"winnowpairs:$dir", Policy.Compact)(
       Dedup.winnowPairs(winnowCached(s, dir), minShared = 2))
 
   /** The shared winnow-oracle CTE chain (augmentation → tokens →
@@ -1700,13 +1642,13 @@ object TextQueries {
     * the already-cached postings (the Percentiles knownRows
     * discipline). Warmed in [[prepare]]. */
   private def vocabCountCached(s: SparkSession, dir: String): Long =
-    graft.SharedState.cachedValue(s"vocab:$dir")(
+    graft.SharedState.value(s"vocab:$dir")(
       postCached(s, dir).select(col("term")).distinct().count())
 
   /** The corpus' exact doc count, cached per dir (metadata-cheap, but
     * a job per probe is still a job — the embCountCached twin). */
   private def docCountCached(s: SparkSession, dir: String): Long =
-    graft.SharedState.cachedValue(s"doccount:$dir")(docs(s, dir).count())
+    graft.SharedState.value(s"doccount:$dir")(docs(s, dir).count())
 
   /** Top-3 TF-IDF keywords per document (BM25 idf, 6dp-rounded score
     * ranked with term tie-break). Doc and vocabulary counts ride the
@@ -1775,7 +1717,7 @@ object TextQueries {
 
   private def bucketedCached(s: SparkSession, dir: String, table: String)
       (build: => DataFrame): DataFrame =
-    graft.SharedState.cached(s"$table:$dir") {
+    graft.SharedState.frame(s"$table:$dir", Policy.Persist) {
       // the table's bucket METADATA lives in the (in-memory) session
       // catalog, so every fresh session rebuilds — and must first clear
       // both the catalog entry and any files a PREVIOUS JVM left at the
@@ -1812,7 +1754,7 @@ object TextQueries {
     * — at cluster scale the stored candidate table a dedup pipeline
     * writes once and verifies many ways. */
   private def lshCandidatesCached(s: SparkSession, dir: String): DataFrame =
-    graft.SharedState.cachedCompact(s"lshcands:$dir")(
+    graft.SharedState.frame(s"lshcands:$dir", Policy.Compact)(
       Dedup.lshCandidatePairs(sigCached(s, dir), 8, 4))
 
   private def lshPairs(s: SparkSession, dir: String): DataFrame =
@@ -1822,7 +1764,7 @@ object TextQueries {
   /** Jaccard-verified LSH candidate pairs, persisted once per dir and
     * shared by q_jaccard_pairs and q_neardup_groups. */
   private def jaccardPairsCached(s: SparkSession, dir: String): DataFrame =
-    graft.SharedState.cachedCompact(s"jacpairs:$dir")(
+    graft.SharedState.frame(s"jacpairs:$dir", Policy.Compact)(
       Dedup.jaccardVerify(shingledCached(s, dir),
         lshCandidatesCached(s, dir)))
 
@@ -1924,7 +1866,7 @@ object TextQueries {
     * [[prepare]] — at cluster scale a stored signature table, like the
     * MinHash ones). */
   private def simhash64Cached(s: SparkSession, dir: String): DataFrame =
-    graft.SharedState.cached(s"simhash64:$dir")(
+    graft.SharedState.frame(s"simhash64:$dir", Policy.Persist)(
       Dedup.simhash64Of(shingledCached(s, dir)))
 
   /** 64-bit shingle-SimHash near-dup pairs: banded hamming-ball
@@ -1955,7 +1897,7 @@ object TextQueries {
     * on the corpus size, which is fixed per dir, so the cached
     * candidate set is exactly what the uncached call computed. */
   private def simhashCandsCached(s: SparkSession, dir: String): DataFrame =
-    graft.SharedState.checkpointedCompact(s"simhashcands:$dir")(
+    graft.SharedState.frame(s"simhashcands:$dir", Policy.CompactCheckpoint)(
       Dedup.simhashCandidates(simhash64Cached(s, dir), maxHamming = 3,
         bands = 4, comboBlocks = -1))
 
@@ -2018,11 +1960,10 @@ object TextQueries {
   /** Shared memoized builder for the synthesized binary corpora: one
     * deterministic payload per doc_id, written once per (kind, data
     * dir) as (doc_id, colName) parquet in a temp dir. */
-  private val synthTables = scala.collection.concurrent.TrieMap[String, String]()
   private def synthTablePath(s: SparkSession, dir: String, kind: String,
       colName: String)(encode: Long => Array[Byte]): String =
-    synthTables.getOrElseUpdate(s"$kind:$dir", {
-      val p = java.nio.file.Files.createTempDirectory(s"graft_$kind").toString
+    graft.SharedState.value(s"synthTables:$kind:$dir") {
+      val p = graft.SharedState.tempDir(s"graft_$kind")
       import s.implicits._
       docs(s, dir).select(col("doc_id")).orderBy(col("doc_id")).limit(200)
         .as[Long]
@@ -2030,7 +1971,7 @@ object TextQueries {
         .toDF("doc_id", colName)
         .write.mode("overwrite").parquet(s"$p/$kind")
       s"$p/$kind"
-    })
+    }
 
   private val (imgW, imgH) = (16, 8)
   private def mediaTablePath(s: SparkSession, dir: String): String =
@@ -2137,7 +2078,7 @@ object TextQueries {
     * — at cluster scale embeddings are a stored table a dedup pass
     * reads, not a per-query re-embed (the mockEmbCached discipline). */
   private def imgEmbCached(s: SparkSession, dir: String): DataFrame =
-    graft.SharedState.checkpointedCompact(s"imgemb:$dir")(
+    graft.SharedState.frame(s"imgemb:$dir", Policy.CompactCheckpoint)(
       s.read.parquet(imgSemTablePath(s, dir))
         .select(col("doc_id"),
           graft.functions.image_embed(col("img"), 8, 8).as("embedding")))
@@ -2149,7 +2090,7 @@ object TextQueries {
     * pure stage-dispatch latency on the contract corpus and redundant
     * work at any scale once the candidate table is stored). */
   private def imgCandsCached(s: SparkSession, dir: String): DataFrame =
-    graft.SharedState.checkpointedCompact(s"imgcands:$dir")(
+    graft.SharedState.frame(s"imgcands:$dir", Policy.CompactCheckpoint)(
       graft.dedup.Dedup.hyperplanePairs(imgEmbCached(s, dir),
         col("doc_id"), col("embedding"), VectorQueries.hyperplanes,
         bands = 4, bitsPerBand = 16))

@@ -1,10 +1,10 @@
 package graft.queries
 
-import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.SharedState.Policy
 import graft.functions.{hamming_dist, cos_dist, inner_product, vecLit, intVecLit}
 import graft.operators.Knn
 import graft.ann.{AnnIndex, Metric}
@@ -96,7 +96,7 @@ object VectorQueries {
     * (q_neardup_lsh); both warmed in [[prepare]]. */
   private def hpCandidatesCached(s: SparkSession, dir: String,
       blocked: Boolean): DataFrame =
-    graft.SharedState.checkpointedCompact(s"hpcands:$blocked:$dir")(
+    graft.SharedState.frame(s"hpcands:$blocked:$dir", Policy.CompactCheckpoint)(
       graft.dedup.Dedup.hyperplanePairs(emb(s, dir),
           col("vec_id"), col("embedding"), hyperplanes,
           bands = 4, bitsPerBand = 16,
@@ -116,25 +116,23 @@ object VectorQueries {
 
   /** One sharded HNSW index per data dir, built lazily and reused by the
     * ANN queries (bench runs them repeatedly; the artifact is immutable). */
-  private val annIndexes = TrieMap[String, String]()
   private def annIndexPath(s: SparkSession, dir: String): String =
-    annIndexes.getOrElseUpdate(dir, {
-      val path = java.nio.file.Files.createTempDirectory("graft_ann").toString
+    graft.SharedState.value(s"annIndexes:$dir") {
+      val path = graft.SharedState.tempDir("graft_ann")
       AnnIndex.build(emb(s, dir), "vec_id", "embedding", path,
         AnnIndex.Params(Metric.L2Sq, m = 16, efConstruction = 128, numShards = 4))
       path
-    })
+    }
 
   /** A second index on the same column under the cosine metric, for the
     * multi-index weighted search (each term probes its own index). */
-  private val annCosIndexes = TrieMap[String, String]()
   private def annCosIndexPath(s: SparkSession, dir: String): String =
-    annCosIndexes.getOrElseUpdate(dir, {
-      val path = java.nio.file.Files.createTempDirectory("graft_ann_cos").toString
+    graft.SharedState.value(s"annCosIndexes:$dir") {
+      val path = graft.SharedState.tempDir("graft_ann_cos")
       AnnIndex.build(emb(s, dir), "vec_id", "embedding", path,
         AnnIndex.Params(Metric.Cos, m = 16, efConstruction = 128, numShards = 4))
       path
-    })
+    }
 
   /** ef that makes every per-shard search exhaustive BY CONSTRUCTION:
     * the index's total row count bounds any shard's size, so a fixed
@@ -306,7 +304,7 @@ object VectorQueries {
     * per dir, so the exact labels are reference data the verdict reads,
     * not per-probe work). Warmed in [[prepare]]. */
   private def classifyExactCached(s: SparkSession, dir: String): DataFrame =
-    graft.SharedState.checkpointedCompact(s"clsexact:$dir")(
+    graft.SharedState.frame(s"clsexact:$dir", Policy.CompactCheckpoint)(
       graft.operators.Classify.classifyExact(
         emb(s, dir).filter(col("vec_id") < 20)
           .select(col("vec_id"), col("embedding")),
@@ -377,10 +375,9 @@ object VectorQueries {
     * once per dir — the pairing the reference ships as
     * `autotune-index --create-index --export`
     * (lantern_cli/src/index_autotune/mod.rs:161-186, cli.rs). */
-  private val annTunedIndexes = TrieMap[String, String]()
   private def annTunedIndexPath(s: SparkSession, dir: String): String =
-    annTunedIndexes.getOrElseUpdate(dir, {
-      val work = java.nio.file.Files.createTempDirectory("graft_ann_tuned").toString
+    graft.SharedState.value(s"annTunedIndexes:$dir") {
+      val work = graft.SharedState.tempDir("graft_ann_tuned")
       // the grid MUST measure at serve scale: a sub-corpus sample
       // re-introduces the very decay the artifact exists to prevent
       // (measured here: a 10k-sample grid derives an ef that misses
@@ -406,7 +403,7 @@ object VectorQueries {
       require(manifest.nonEmpty,
         s"no autotune variant met the 0.99 recall target: ${report.results}")
       s"$work/index"
-    })
+    }
 
   /** Recall-target search on the contract (the sf10 scale finding: a
     * PINNED ef decays as the corpus grows — ef=64 measured recall
@@ -483,10 +480,9 @@ object VectorQueries {
     * post-delete top-10 is exactly rows 4..13 of the exact ranking,
     * which the oracle expresses as LIMIT 10 OFFSET 3 (deterministic at
     * ANY scale factor, no pinned ids). */
-  private val annDeleteIndexes = TrieMap[String, String]()
   private def annDeleteIndexPath(s: SparkSession, dir: String): String =
-    annDeleteIndexes.getOrElseUpdate(dir, {
-      val path = java.nio.file.Files.createTempDirectory("graft_ann_del").toString
+    graft.SharedState.value(s"annDeleteIndexes:$dir") {
+      val path = graft.SharedState.tempDir("graft_ann_del")
       AnnIndex.build(emb(s, dir), "vec_id", "embedding", path,
         AnnIndex.Params(Metric.L2Sq, m = 16, efConstruction = 128,
           numShards = 2))
@@ -495,7 +491,7 @@ object VectorQueries {
         .select("vec_id").collect().map(_.getLong(0)).toSeq
       AnnIndex.delete(s, path, top3)
       path
-    })
+    }
 
   /** Post-delete search: tombstoned rows are skipped INSIDE the shard
     * graphs (reference scan.c:294-300 semantics). */
@@ -508,13 +504,12 @@ object VectorQueries {
   /** Vacuum compaction (the graph rebuild the reference never does —
     * delete.c leaves holes forever): the compacted index must return
     * the same post-delete ranking with the tombstones gone. */
-  private val annVacuumedIndexes = TrieMap[String, String]()
   private def annVacuumPath(s: SparkSession, dir: String): String =
-    annVacuumedIndexes.getOrElseUpdate(dir, {
-      val o = java.nio.file.Files.createTempDirectory("graft_ann_vac").toString
+    graft.SharedState.value(s"annVacuumedIndexes:$dir") {
+      val o = graft.SharedState.tempDir("graft_ann_vac")
       AnnIndex.vacuum(s, annDeleteIndexPath(s, dir), o)
       o
-    })
+    }
   private def annVacuum(s: SparkSession, dir: String): DataFrame = {
     val out = annVacuumPath(s, dir)
     AnnIndex.topK(s, out, qVec.toArray, 10, ef = exhaustiveEf(out))
@@ -525,10 +520,9 @@ object VectorQueries {
     * model: new shards + manifest merge): an index seeded with the even
     * ids and appended with the odd ids must answer exactly like one
     * built whole. */
-  private val annAppendIndexes = TrieMap[String, String]()
   private def annAppendPath(s: SparkSession, dir: String): String =
-    annAppendIndexes.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files.createTempDirectory("graft_ann_app").toString
+    graft.SharedState.value(s"annAppendIndexes:$dir") {
+      val p = graft.SharedState.tempDir("graft_ann_app")
       AnnIndex.build(emb(s, dir).filter(col("vec_id") % 2 === 0),
         "vec_id", "embedding", p,
         AnnIndex.Params(Metric.L2Sq, m = 16, efConstruction = 128,
@@ -536,7 +530,7 @@ object VectorQueries {
       AnnIndex.append(emb(s, dir).filter(col("vec_id") % 2 =!= 0),
         "vec_id", "embedding", p)
       p
-    })
+    }
   private def annAppend(s: SparkSession, dir: String): DataFrame = {
     val path = annAppendPath(s, dir)
     AnnIndex.topK(s, path, qVec.toArray, 10, ef = exhaustiveEf(path))
@@ -556,29 +550,27 @@ object VectorQueries {
     * scannable source a hamming-indexed table looks like (the rewrite
     * matches a sort over a SCANNED relation, so the bits must live in a
     * real file source, like the reference's bit-typed column). */
-  private val bitsTables = TrieMap[String, String]()
   private def bitsTablePath(s: SparkSession, dir: String): String =
-    bitsTables.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files.createTempDirectory("graft_bits").toString
+    graft.SharedState.value(s"bitsTables:$dir") {
+      val p = graft.SharedState.tempDir("graft_bits")
       emb(s, dir)
         .select(col("vec_id"), col("label"), signBitsSpark.as("bits"))
         .write.mode("overwrite").parquet(s"$p/bits")
       s"$p/bits"
-    })
+    }
 
   /** Hamming HNSW index over the sign view of the bits column
     * (reference opclass dist_hamming_ops, lantern.sql:63-104). */
-  private val annHammingIndexes = TrieMap[String, String]()
   private def annHammingIndexPath(s: SparkSession, dir: String): String =
-    annHammingIndexes.getOrElseUpdate(dir, {
-      val path = java.nio.file.Files.createTempDirectory("graft_ann_ham").toString
+    graft.SharedState.value(s"annHammingIndexes:$dir") {
+      val path = graft.SharedState.tempDir("graft_ann_ham")
       val bits = s.read.parquet(bitsTablePath(s, dir))
         .withColumn("__hview", graft.ann.HammingView.signView(col("bits")))
       AnnIndex.build(bits, "vec_id", "__hview", path,
         AnnIndex.Params(Metric.Hamming, m = 16, efConstruction = 128,
           numShards = 4))
       path
-    })
+    }
 
   /** Hamming top-k through the transparent plan rewrite: `ORDER BY
     * hamming_dist(bits, q) LIMIT k` over a scanned bits table must use
@@ -668,7 +660,7 @@ object VectorQueries {
     * and groups rows — the same persisted-intermediate pattern as
     * jaccardPairsCached on the text side. */
   private def semPairsCached(s: SparkSession, dir: String): DataFrame =
-    graft.SharedState.cachedCompact(s"sempairs:$dir")(
+    graft.SharedState.frame(s"sempairs:$dir", Policy.Compact)(
       graft.dedup.Dedup.semanticPairs(emb(s, dir), col("vec_id"),
         col("embedding"), semCentroids, hyperplanes,
         bands = 4, bitsPerBand = 16, maxDist = 0.75))
@@ -713,10 +705,9 @@ object VectorQueries {
     * dir, read it back through the distributed binaryRecords reader, and
     * project verifiable values; the oracle reads the original parquet
     * (row order = ascending vec_id, the written order). */
-  private val fvecsFiles = TrieMap[String, String]()
   private def fvecsFilePath(s: SparkSession, dir: String): String =
-    fvecsFiles.getOrElseUpdate(dir, {
-      val f = java.nio.file.Files.createTempFile("graft_emb", ".fvecs").toString
+    graft.SharedState.value(s"fvecsFiles:$dir") {
+      val f = graft.SharedState.tempDir("graft_emb") + "/emb.fvecs"
       // toLocalIterator, not collect: the writer streams one partition
       // at a time to the driver (one POSIX file is inherently a
       // driver-side sink), so driver memory stays bounded by a single
@@ -726,7 +717,7 @@ object VectorQueries {
       graft.sources.Dotvecs.writeFvecs(s, f,
         vecs.asScala.map(_.getAs[Seq[Float]]("embedding").toArray))
       f
-    })
+    }
 
   private def fvecsRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val path = fvecsFilePath(s, dir)
@@ -754,14 +745,13 @@ object VectorQueries {
 
   /** IVF probe over every cell = exact top-k through the partitioned
     * path (partition pruning exercised by IvfSpec at small nprobe). */
-  private val ivfIndexes = TrieMap[String, String]()
   private def ivfIndexPath(s: SparkSession, dir: String): String =
-    ivfIndexes.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    graft.SharedState.value(s"ivfIndexes:$dir") {
+      val p = graft.SharedState.tempDir("graft_ivf")
       graft.ann.IvfIndex.build(emb(s, dir), "vec_id", "embedding", p,
         graft.ann.IvfIndex.Params(nCells = 16))
       p
-    })
+    }
 
   private def ivfTopK(s: SparkSession, dir: String): DataFrame =
     graft.ann.IvfIndex.topK(s, ivfIndexPath(s, dir), qVec.toArray, 10,
@@ -774,10 +764,9 @@ object VectorQueries {
     * the grid measures on (a capped view of) the full corpus, so the
     * exported recall-vs-nprobe frontier describes the index being
     * served, not a sub-corpus sample whose routing is easier. */
-  private val ivfTunedIndexes = TrieMap[String, String]()
   private def ivfTunedIndexPath(s: SparkSession, dir: String): String =
-    ivfTunedIndexes.getOrElseUpdate(dir, {
-      val work = java.nio.file.Files.createTempDirectory("graft_ivf_tuned").toString
+    graft.SharedState.value(s"ivfTunedIndexes:$dir") {
+      val work = graft.SharedState.tempDir("graft_ivf_tuned")
       val sample = math.min(emb(s, dir).count(), 250000L).toInt
       val (report, manifest) = graft.ann.Autotune.runIvfAndCreate(
         emb(s, dir), "vec_id", "embedding", s"$work/grid", s"$work/index",
@@ -786,7 +775,7 @@ object VectorQueries {
       require(manifest.nonEmpty,
         s"no IVF autotune variant met the 0.9 recall target: ${report.results}")
       s"$work/index"
-    })
+    }
 
   /** Recall-target IVF serving (q_ann_target_recall's routed-path
     * twin): nprobe DERIVES from the tuned index's measured
@@ -812,7 +801,7 @@ object VectorQueries {
     * test). min(10, n) rows per probe, the property both verdicts'
     * denominators lean on. Warmed in [[prepare]]. */
   private def recallTruthCached(s: SparkSession, dir: String): DataFrame =
-    graft.SharedState.checkpointedCompact(s"recalltruth:$dir") {
+    graft.SharedState.frame(s"recalltruth:$dir", Policy.CompactCheckpoint) {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("probe_id"))
         .orderBy(col("dist").asc, col("vec_id").asc)
@@ -866,31 +855,29 @@ object VectorQueries {
     * on disk), then the refine set re-ranks exactly — with refine=100
     * of a probed corpus whose true top-10 survives the ADC cut, the
     * result is the exact top-10, so the oracle is the exact SQL. */
-  private val ivfAdcIndexes = TrieMap[String, String]()
   private def ivfAdcIndexPath(s: SparkSession, dir: String): String =
-    ivfAdcIndexes.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files.createTempDirectory("graft_ivfadc").toString
+    graft.SharedState.value(s"ivfAdcIndexes:$dir") {
+      val p = graft.SharedState.tempDir("graft_ivfadc")
       val cb = graft.pq.Pq.createCodebook(emb(s, dir), "embedding",
         clusterCount = 64, subvectorCount = 16, datasetSizeLimit = 2000,
         seed = 42L)
       graft.ann.IvfIndex.build(emb(s, dir), "vec_id", "embedding", p,
         graft.ann.IvfIndex.Params(nCells = 16, pq = Some(cb)))
       p
-    })
+    }
 
   /** IVF append maintenance: an index built on the even ids and
     * appended with the odd ids (frozen-centroid assignment, partitioned
     * append) must answer an all-cells probe exactly like one built
     * whole. */
-  private val ivfAppendIndexes = TrieMap[String, String]()
   private def ivfAppendPath(s: SparkSession, dir: String): String =
-    ivfAppendIndexes.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files.createTempDirectory("graft_ivf_app").toString
+    graft.SharedState.value(s"ivfAppendIndexes:$dir") {
+      val p = graft.SharedState.tempDir("graft_ivf_app")
       graft.ann.IvfIndex.build(emb(s, dir).filter(col("vec_id") % 2 === 0),
         "vec_id", "embedding", p, graft.ann.IvfIndex.Params(nCells = 16))
       graft.ann.IvfIndex.append(emb(s, dir).filter(col("vec_id") % 2 =!= 0), p)
       p
-    })
+    }
 
   private def ivfAppend(s: SparkSession, dir: String): DataFrame =
     graft.ann.IvfIndex.topK(s, ivfAppendPath(s, dir), qVec.toArray, 10,
@@ -902,10 +889,9 @@ object VectorQueries {
     * exact top-3 ids for the fixed query vector tombstoned — so the
     * post-delete all-cells probe is exactly rows 4..13 of the exact
     * ranking (LIMIT 10 OFFSET 3 oracle, deterministic at any sf). */
-  private val ivfDeleteIndexes = TrieMap[String, String]()
   private def ivfDeleteIndexPath(s: SparkSession, dir: String): String =
-    ivfDeleteIndexes.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files.createTempDirectory("graft_ivf_del").toString
+    graft.SharedState.value(s"ivfDeleteIndexes:$dir") {
+      val p = graft.SharedState.tempDir("graft_ivf_del")
       graft.ann.IvfIndex.build(emb(s, dir), "vec_id", "embedding", p,
         graft.ann.IvfIndex.Params(nCells = 16))
       val top3 = Knn.knn(emb(s, dir), col("embedding"), vecLit(qVec), 3,
@@ -913,7 +899,7 @@ object VectorQueries {
         .select("vec_id").collect().map(_.getLong(0)).toSeq
       graft.ann.IvfIndex.delete(s, p, top3)
       p
-    })
+    }
 
   /** Post-delete IVF search: tombstoned ids are skipped executor-side
     * by the codegen tombstone_live filter over the probed cells. */
@@ -925,14 +911,13 @@ object VectorQueries {
   /** IVF vacuum = consolidate: tombstoned rows physically reclaimed
     * into a fresh cells generation (manifest-swap commit); the
     * consolidated index must return the same post-delete ranking. */
-  private val ivfVacuumed = TrieMap[String, String]()
   private def ivfVacuumPath(s: SparkSession, dir: String): String =
-    ivfVacuumed.getOrElseUpdate(dir, {
+    graft.SharedState.value(s"ivfVacuumed:$dir") {
       val p = ivfDeleteIndexPath(s, dir)
       val folded = graft.ann.IvfIndex.consolidate(s, p)
       require(folded, "consolidate found no tombstones to fold")
       p
-    })
+    }
   private def ivfVacuum(s: SparkSession, dir: String): DataFrame =
     graft.ann.IvfIndex.topK(s, ivfVacuumPath(s, dir), qVec.toArray, 10,
         nprobe = 16)
@@ -962,11 +947,7 @@ object VectorQueries {
     * probe+build (an index build is a one-time cost amortized over the
     * index's whole query lifetime). */
   def prepare(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    def timed(name: String)(f: => Unit): (String, Double) = {
-      val t0 = System.nanoTime()
-      f
-      (name, (System.nanoTime() - t0) / 1e9)
-    }
+    import graft.SharedState.timed
     Seq(
       timed("ann_hnsw") { annIndexPath(s, dir) },
       timed("ann_cos") { annCosIndexPath(s, dir) },
@@ -1114,10 +1095,10 @@ object VectorQueries {
     * hands the percentile dispatch its `knownRows` without a count job
     * per probe. Warmed alongside the centroids in [[prepare]]. */
   private def embCountCached(s: SparkSession, dir: String): Long =
-    graft.SharedState.cachedValue(s"embcount:$dir")(emb(s, dir).count())
+    graft.SharedState.value(s"embcount:$dir")(emb(s, dir).count())
 
   private def centsCached(s: SparkSession, dir: String): Array[Array[Double]] =
-    graft.SharedState.cachedValue(s"kmeanscents:$dir") {
+    graft.SharedState.value(s"kmeanscents:$dir") {
       val g = emb(s, dir).select(col("vec_id"), gridVec.as("v"))
       graft.operators.Clustering.kmeans(
         g, col("vec_id"), col("v"), k = 4, iters = 2)._2

@@ -9,7 +9,7 @@ import graft.SparkEntry
   * prints each cache's partition count, row count and optimizer size —
   * the input to guide §2.2 sizing decisions (a steady-read cache with
   * N near-empty partitions costs an N-task dispatch per stage in every
-  * consumer; see SharedState.cachedCompact). */
+  * consumer; see SharedState.Policy.Compact). */
 object CacheAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")

@@ -83,19 +83,17 @@ object ScaleGate {
     spark.sparkContext.setLogLevel("ERROR")
     runAll(spark, smallDir) // untimed warm-up: JIT/codegen/first-touch
     // COLD-SYMMETRIC timed passes (ADVICE r14): both sides first drop
-    // the per-JVM caches AND the memoized one-shot state (completed
-    // door runs, per-process boundary artifact roots) — otherwise the
-    // stateful rows (pipeline_stream / pipeline_boundaries / absorb)
-    // measure a cached small side against a cold large side and the
-    // ratios are noise. Each runAll's prepare() then pays the cold
-    // builds OUTSIDE the timed per-query region, at both scales alike.
-    def reset(): Unit = {
-      graft.SharedState.clear()
-      graft.queries.TextQueries.resetEphemeralState()
-    }
-    reset()
+    // every registry artifact — the per-JVM caches, the built indexes
+    // and the memoized one-shot state (completed door runs,
+    // per-process boundary artifact roots), their dirs deleted —
+    // otherwise the stateful rows (pipeline_stream /
+    // pipeline_boundaries / absorb) measure a cached small side against
+    // a cold large side and the ratios are noise. Each runAll's
+    // prepare() then pays the cold builds OUTSIDE the timed per-query
+    // region, at both scales alike.
+    graft.SharedState.clear()
     val small = runAll(spark, smallDir)
-    reset()
+    graft.SharedState.clear()
     val large = runAll(spark, largeDir)
     val rows = verdict(small, large, dataRatio, slack, floorSec)
     val bad = rows.filterNot(_.ok)

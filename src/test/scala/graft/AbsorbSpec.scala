@@ -176,7 +176,7 @@ class AbsorbSpec extends SparkSpec {
     val even = arrivals.filter(col("doc_id") % 2 === 0)
     val odd = arrivals.filter(col("doc_id") % 2 === 1)
     // each door output is a LINEAGE CUT, as in the contract path
-    // (SharedState.checkpointedDisk): without it the three chained
+    // (SharedState.Policy.DiskCheckpoint): without it the three chained
     // gen-2 compositions stack door-over-door lineage until plan
     // stringification alone OOMs the test JVM
     def door(batch: DataFrame,
