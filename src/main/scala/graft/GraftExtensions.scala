@@ -13,7 +13,8 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *
   * Injects the transparent ANN top-k optimizer rule
   * ([[graft.plans.AnnTopK.AnnTopKRule]]; indexes still opt in per path
-  * via [[graft.plans.AnnTopK.IndexCatalog]]) and the engine's SQL scalar
+  * via [[graft.plans.AnnTopK.IndexCatalog]]), the planner strategy for
+  * its index probe ([[graft.plans.AnnScanStrategy]]) and the engine's SQL scalar
   * function surface (same builders as `graft.functions.registerAll`,
   * which remains available for wiring an already-running session).
   */
@@ -22,6 +23,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule { session =>
       graft.plans.AnnTopK.AnnTopKRule(session)
     }
+    ext.injectPlannerStrategy(_ => graft.plans.AnnScanStrategy)
     graft.functions.sqlBuilders.foreach { case (name, builder) =>
       ext.injectFunction((
         new FunctionIdentifier(name),

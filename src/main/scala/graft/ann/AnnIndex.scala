@@ -22,8 +22,9 @@ import org.apache.spark.sql.functions._
   * (lantern_hnsw/src/hnsw/external_index.h:38-56: m, ef_construction,
   * metric, dim, num_vectors); a shard file is the analog of the usearch
   * blob. Build = the reference's external-index job model
-  * (build.c:527-587) expressed as mapPartitions; search = per-shard
-  * top-k then a global k-row merge (TakeOrderedAndProject shape);
+  * (build.c:527-587) expressed as mapPartitions; search = one
+  * [[graft.plans.AnnScan]] leaf (per-shard top-k, one task per shard)
+  * then a global k-row merge (TakeOrderedAndProject shape);
   * deletes = tombstone anti-join, compacted by [[vacuum]] (the reference
   * also leaves deleted labels in the graph and skips them at scan —
   * scan.c:294-300, delete.c).
@@ -247,7 +248,7 @@ object AnnIndex {
   /** Executor-side tombstone predicate for a probe (null = no deletes;
     * the search skips the filter branch entirely). Shared by every
     * probe path so skip semantics cannot diverge. */
-  private def tombstoneSkip(indexPath: String): Long => Boolean = {
+  private[graft] def tombstoneSkip(indexPath: String): Long => Boolean = {
     val dead = TombstoneCache.get(indexPath)
     if (dead.isEmpty) null
     else id => java.util.Arrays.binarySearch(dead, id) >= 0
@@ -301,28 +302,21 @@ object AnnIndex {
       .toDF("id", "vec")
   }
 
-  /** Approximate top-k: per-shard HNSW search (k candidates each, search
-    * breadth `ef`), tombstones skipped INSIDE each shard search (the
-    * graph still navigates through dead nodes, they just cannot enter
-    * the result set), global top-k merge. Returns (id, dist) ascending.
+  /** Approximate top-k: one [[graft.plans.AnnScan]] (per-shard HNSW
+    * search, k candidates each, search breadth `ef`, tombstones skipped
+    * INSIDE each shard search — the graph still navigates through dead
+    * nodes, they just cannot enter the result set) under a global
+    * `(dist, id)` sort and limit k. Returns (id, dist) ascending. The
+    * shards are probed one task each with no exchange, and the sort
+    * merges their k-row lists; collected, the whole probe is one job.
     * No tombstone state ever lives on the driver: each executor reads
     * the packed tombstone file once per version and binary-searches it. */
   def topK(spark: SparkSession, indexPath: String, query: Array[Float],
       k: Int, ef: Int = 64): DataFrame = {
-    val man = readManifest(indexPath)
-    import spark.implicits._
-    val shardPaths = man.shards.map(s => s"$indexPath/$s")
-    val idxPath = indexPath
-    val hits = spark.createDataset(shardPaths)
-      .repartition(math.min(shardPaths.size, 64))
-      .mapPartitions { paths =>
-        val skip = tombstoneSkip(idxPath)
-        paths.flatMap { p =>
-          ShardCache.get(p).search(query, k, math.max(ef, k), skip)
-        }
-      }
-      .toDF("id", "dist")
-    hits.orderBy(col("dist").asc, col("id").asc).limit(k)
+    graft.plans.AnnTopK.installStrategy(spark)
+    org.apache.spark.sql.graft.Bridge
+      .ofRows(spark, graft.plans.AnnScan(indexPath, query, k, ef))
+      .orderBy(col("dist").asc, col("id").asc).limit(k)
   }
 
   /** [[topK]] with the search breadth DERIVED from a recall target via

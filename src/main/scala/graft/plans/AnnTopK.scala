@@ -1,7 +1,8 @@
 package graft.plans
 
 import scala.collection.concurrent.TrieMap
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -9,7 +10,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.graft.IndexedDistance
-import graft.ann.{AnnIndex, Metric}
+import graft.ann.Metric
 
 /** Transparent ANN rewrite of `ORDER BY dist(col, const) LIMIT k`
   * (reference: the planner integration that makes `ORDER BY v <-> q
@@ -23,11 +24,20 @@ import graft.ann.{AnnIndex, Metric}
   *     scanned parquet relation and a foldable vector literal, and
   *   - that relation's path has an index registered in [[IndexCatalog]];
   * it then narrows the sort's input with a LEFT SEMI join against the
-  * index's top candidate ids. The original Sort+Limit still runs — over
-  * at most `max(k, ef)` candidate rows — so column output and exact
-  * ordering of the candidate set are preserved; like the reference
-  * (`xs_recheckorderby=false`), the overall result is approximate with
-  * the index's recall. Candidate breadth: derived from
+  * ids of one [[AnnScan]] leaf (planned by [[AnnScanStrategy]] into
+  * one task per shard, broadcast into the join). The candidate set is
+  * the UNION of the per-shard top-`fetch` lists (`fetch = max(k, ef)`,
+  * times the filter over-fetch) — no global merge runs before the
+  * join. The original Sort+Limit still runs over those candidate rows
+  * and re-ranks them by the expression's exact distance, so column
+  * output and exact ordering are preserved. Whenever the index's
+  * distance is bit-equal to the expression's (every non-PQ index:
+  * `DistanceProps` pins it), the global top-`fetch` merge is a subset
+  * of the union and the union's top-k is the merge's top-k, so the rows
+  * are identical to a merged candidate set; under a `WHERE` or with a
+  * PQ-in-index the union is a superset, so recall can only rise. Like
+  * the reference (`xs_recheckorderby=false`), the overall result is
+  * approximate with the index's recall. Candidate breadth: derived from
   * `graft.ann.targetRecall` via the index's autotune_results artifact
   * when set ([[AnnTopK.TargetRecallConfKey]]), else the pinned
   * `graft.ann.ef` conf (default 64, reference options.h:22-25).
@@ -104,15 +114,26 @@ object AnnTopK {
       .getOrElse(64)
   }
 
-  /** Install the rule once per session. */
+  /** Install the rule and [[AnnScanStrategy]] once per session. Both
+    * installs are check-then-set on the session's `ExperimentalMethods`
+    * and hold its lock, so racing callers neither drop nor duplicate an
+    * entry. */
   def install(spark: SparkSession): Unit = {
-    val already = spark.experimental.extraOptimizations.exists {
-      case _: AnnTopKRule => true
-      case _ => false
+    val ex = spark.experimental
+    ex.synchronized {
+      if (!ex.extraOptimizations.exists(_.isInstanceOf[AnnTopKRule]))
+        ex.extraOptimizations = ex.extraOptimizations :+ AnnTopKRule(spark)
+      installStrategy(spark)
     }
-    if (!already) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ AnnTopKRule(spark)
+  }
+
+  /** Install [[AnnScanStrategy]] alone (what planning an [[AnnScan]]
+    * needs; [[graft.ann.AnnIndex.topK]] calls it). */
+  def installStrategy(spark: SparkSession): Unit = {
+    val ex = spark.experimental
+    ex.synchronized {
+      if (!ex.extraStrategies.contains(AnnScanStrategy))
+        ex.extraStrategies = ex.extraStrategies :+ AnnScanStrategy
     }
   }
 
@@ -143,7 +164,7 @@ object AnnTopK {
         e.eval() match {
           case a: ArrayData =>
             try Some(metric.queryVector(a))
-            catch { case _: Throwable => None }
+            catch { case NonFatal(_) => None }
           case _ => None
         }
       } else None
@@ -164,23 +185,8 @@ object AnnTopK {
       // Cast (string, narrowing) changes the sort order, and narrowing
       // by the numeric candidate top-k would silently return wrong rows
       case c: Cast if wideningCast(c) => distanceKey(c.child)
-      // the library shape: Sort on a projected alias of the distance
-      case a: AttributeReference => None
       case _ => None
     }
-
-    private def alreadyNarrowed(child: LogicalPlan, entry: Entry): Boolean =
-      child.collectFirst {
-        case Join(_, _, LeftSemi, Some(EqualTo(l, _)), _)
-            if (l match { // the key may be Cast-wrapped (int ids)
-              case a: AttributeReference => a.name == entry.idCol
-              case c: Cast => c.child match {
-                case a: AttributeReference => a.name == entry.idCol
-                case _ => false
-              }
-              case _ => false
-            }) => true
-      }.getOrElse(false)
 
     /** Resolve the sort key through any depth of Project aliasing
       * (`filter(...).withColumn("dist", ...).select(...)` stacks
@@ -243,8 +249,8 @@ object AnnTopK {
           entry <- IndexCatalog.lookup(relationPaths(child))
           if entry.metric == metric && vecAttr.name == entry.vecCol
           // the rule runs in a fixed-point batch: don't re-narrow a
-          // sort whose input is already our candidate semi join
-          if !alreadyNarrowed(child, entry)
+          // sort whose input already holds an index probe
+          if !child.exists(_.isInstanceOf[AnnScan])
           idAttr <- child.output.collectFirst {
             case a: AttributeReference if a.name == entry.idCol => a
           }
@@ -264,12 +270,9 @@ object AnnTopK {
               .getOrElse(4)
               .max(1) // a non-positive conf must not empty the candidates
           val fetch = math.max(k, ef) * factor
-          val cands: DataFrame =
-            AnnIndex.topK(spark, entry.indexPath, qVec, fetch,
-              math.max(ef, fetch)).select("id")
-          val candPlan = cands.queryExecution.analyzed
-          val candId = candPlan.output.head
-          val narrowed = Join(child, candPlan, LeftSemi,
+          val scan = AnnScan(entry.indexPath, qVec, fetch, math.max(ef, fetch))
+          val candId = scan.output.head
+          val narrowed = Join(child, Project(Seq(candId), scan), LeftSemi,
             Some(EqualTo(idKey, candId)), JoinHint.NONE)
           val newSort = sort.copy(child = narrowed)
           limit.copy(child = LocalLimit(Literal(k),

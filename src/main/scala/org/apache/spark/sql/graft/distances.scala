@@ -17,6 +17,13 @@ object Bridge {
   def toExpression(c: Column): Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
+  /** A DataFrame over a logical plan (`Dataset.ofRows` is `private[sql]`). */
+  def ofRows(spark: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
   /** Test access to `private[sql]` SparkSessionExtensions internals:
     * what an extensions class would contribute to a new session. */
   def builtOptimizerRules(ext: org.apache.spark.sql.SparkSessionExtensions,
@@ -24,6 +31,12 @@ object Bridge {
       : Seq[org.apache.spark.sql.catalyst.rules.Rule[
         org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =
     ext.buildOptimizerRules(session)
+
+  /** Test access: the planner strategies an extensions object injects. */
+  def builtPlannerStrategies(ext: org.apache.spark.sql.SparkSessionExtensions,
+      session: org.apache.spark.sql.SparkSession)
+      : Seq[org.apache.spark.sql.execution.SparkStrategy] =
+    ext.buildPlannerStrategies(session)
 
   /** Apply an extensions object's injected functions to a session's
     * registry (what session construction does with spark.sql.extensions). */

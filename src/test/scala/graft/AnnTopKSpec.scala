@@ -2,10 +2,11 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.logical.Join
 import graft.ann.{AnnIndex, Metric}
 import graft.functions.{l2sq_dist, vecLit}
-import graft.plans.AnnTopK
+import graft.plans.{AnnScan, AnnScanStrategy, AnnTopK}
 
 /** Transparent ANN rewrite of ORDER BY dist LIMIT k (the reference's
   * planner integration, hnsw.c:150-209). */
@@ -47,6 +48,51 @@ class AnnTopKSpec extends SparkSpec {
       AnnTopK.IndexCatalog.unregister(srcPath)
       spark.conf.unset(AnnTopK.EfConfKey)
     }
+  }
+
+  test("a user's own semi join on the id column still rewrites and matches exact") {
+    setup()
+    try {
+      spark.conf.set(AnnTopK.EfConfKey, "600") // exhaustive at this scale
+      val allow = spark.range(0, 100000, 3).toDF("vec_id")
+      val df = emb.join(allow, Seq("vec_id"), "left_semi")
+        .withColumn("dist", l2sq_dist(col("embedding"), vecLit(q)))
+        .orderBy(col("dist").asc, col("vec_id").asc)
+        .limit(10)
+      val plan = df.queryExecution.optimizedPlan
+      assert(plan.collect { case j: Join if j.joinType == LeftSemi => j }.size == 2,
+        s"expected the user's semi join AND the candidate semi join:\n$plan")
+      assert(plan.exists(_.isInstanceOf[AnnScan]))
+      val exact = emb.join(allow, Seq("vec_id"), "left_semi")
+        .withColumn("d", l2sq_dist(col("embedding"), vecLit(q)))
+        .orderBy(col("d").asc, col("vec_id").asc).limit(10)
+        .collect().map(_.getAs[Long]("vec_id")).toSeq
+      assert(df.collect().map(_.getAs[Long]("vec_id")).toSeq == exact)
+    } finally {
+      AnnTopK.IndexCatalog.unregister(srcPath)
+      spark.conf.unset(AnnTopK.EfConfKey)
+    }
+  }
+
+  test("racing installs leave one AnnTopKRule and one AnnScan strategy") {
+    val session = spark.newSession()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val done = (0 until 8).map { i =>
+        pool.submit(new Runnable {
+          def run(): Unit = {
+            start.await()
+            if (i % 2 == 0) AnnTopK.install(session) else AnnTopK.installStrategy(session)
+          }
+        })
+      }
+      start.countDown()
+      done.foreach(_.get())
+    } finally pool.shutdown()
+    val ex = session.experimental
+    assert(ex.extraOptimizations.count(_.isInstanceOf[AnnTopK.AnnTopKRule]) == 1)
+    assert(ex.extraStrategies.count(_ == AnnScanStrategy) == 1)
   }
 
   test("targetRecall conf derives ef from the autotune artifact, with fallback") {

@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.graft.Bridge
-import graft.plans.AnnTopK
+import graft.plans.{AnnScanStrategy, AnnTopK}
 
 /** Config-time wiring: `spark.sql.extensions=graft.GraftExtensions`
-  * must contribute the ANN rewrite rule and the SQL function surface to
+  * must contribute the ANN rewrite rule, its probe's planner strategy
+  * and the SQL function surface to
   * a session (exercised through the same SparkSessionExtensions hooks
   * session construction uses — a second live session cannot be built
   * inside the shared-session test JVM). */
@@ -17,6 +18,12 @@ class ExtensionsSpec extends SparkSpec {
     val rules = Bridge.builtOptimizerRules(ext, spark)
     assert(rules.exists(_.isInstanceOf[AnnTopK.AnnTopKRule]),
       s"expected AnnTopKRule among ${rules.map(_.getClass.getSimpleName)}")
+  }
+
+  test("injects the AnnScan planner strategy the rewrite's probe needs") {
+    val ext = new SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    assert(Bridge.builtPlannerStrategies(ext, spark) == Seq(AnnScanStrategy))
   }
 
   test("injects the SQL function surface") {
