@@ -90,8 +90,8 @@ object GraftConf {
     longConf(spark, SimhashComboMinDocs, 1000000L)
 
   /** Session conf first, then a JVM system property of the same name
-    * (lets the fork-run tools — BenchOne, ScaleGate, the probes —
-    * pin a dispatch arm without a code change), then the default. */
+    * (lets the fork-run mains pin a dispatch arm without a code
+    * change), then the default. */
   private def longConf(spark: SparkSession, key: String, dflt: Long): Long =
     spark.conf.getOption(key).orElse(sys.props.get(key))
       .map(_.toLong).getOrElse(dflt)

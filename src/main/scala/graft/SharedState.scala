@@ -74,7 +74,7 @@ class SharedState {
   }
 
   /** Read-only view of the built frames, for diagnostics
-    * ([[graft.tools.CacheAudit]]): key -> frame. */
+    * (`Bench caches`): key -> frame. */
   def entries: Seq[(String, DataFrame)] = slots.asScala.toSeq.flatMap {
     case (k, slot) => slot.built.collect {
       case df: Dataset[_] => k -> df.asInstanceOf[DataFrame] }

@@ -664,10 +664,10 @@ object Dedup {
     * Two regimes, chosen by a COUNTED pair bound. The verified-pairs
     * graph is orders of magnitude smaller than the corpus (it holds
     * only near-duplicate ids), so up to `driverEdgeLimit` distinct
-    * undirected pairs (default 1M; ScaleProbe measures the regime's
-    * worst case AT the bound — collected Rows plus the boxed parent
-    * map — as a ~0.4 GB transient old-gen delta, bounded and far
-    * under a real driver heap) the components are solved by a driver
+    * undirected pairs (default 1M; the regime's worst case AT the
+    * bound — collected Rows plus the boxed parent map — measured a
+    * ~0.4 GB transient old-gen delta, bounded and far under a real
+    * driver heap) the components are solved by a driver
     * union-find with union-by-min + path compression — milliseconds
     * and zero shuffle rounds, against a distributed loop whose
     * per-round fixed cost (a checkpoint and a convergence probe)

@@ -806,9 +806,8 @@ object TextQueries {
     else df.repartition(cores)
   }
 
-  /** The contract pipeline's stage frames (shared with
-    * [[graft.tools.PipelineProbe]] for century per-stage
-    * attribution); boundaries persist once per dir. */
+  /** The contract pipeline's stage frames; boundaries persist once
+    * per dir. */
   private[graft] def pipelineStages(s: SparkSession,
       dir: String): Seq[(String, DataFrame)] =
     pipelineStagesWith(s, dir,
@@ -853,10 +852,9 @@ object TextQueries {
     * ScaleGate on the same sfDir interleave commits (ADVICE r14), and
     * made gate timings depend on leftover artifacts from prior runs.
     * Cross-JVM RESUME — the production semantics — is exercised with
-    * an EXPLICIT root (BoundaryProbe/DoorProbe `root=` argument),
-    * where the Runner's lock-fenced commits make sharing safe. The
-    * root is a registry-owned dir: deleted by [[graft.SharedState]]'s
-    * clear and at JVM exit. */
+    * an EXPLICIT `root`, where the Runner's lock-fenced commits make
+    * sharing safe. The root is a registry-owned dir: deleted by
+    * [[graft.SharedState]]'s clear and at JVM exit. */
   private[graft] def pipelineBoundariesRoot(dir: String): String =
     graft.SharedState.value(s"pipebounds:$dir") {
       val h = java.security.MessageDigest.getInstance("MD5")
@@ -924,8 +922,8 @@ object TextQueries {
     * restarted ingest job whose corpus is untouched serves every one
     * from disk and recomputes NOTHING before its first micro-batch
     * (the reference daemon's stored-job-spec restart discipline,
-    * lantern_extras/src/daemon.rs:149-171; DoorProbe records the
-    * fresh-JVM zero-recompute run). Returns the corpus plus the
+    * lantern_extras/src/daemon.rs:149-171; IngestPipelineSpec pins the
+    * zero-recompute restart). Returns the corpus plus the
     * per-artifact resolution reports (boundaries ++ derived). */
   private[graft] def doorArtifacts(s: SparkSession, dir: String,
       root: Option[String] = None)
@@ -1134,8 +1132,8 @@ object TextQueries {
     * band buckets the incremental candidate join uses. n_capped and
     * pairs_dropped are pinned to literal zero by the oracle — the
     * guard firing at contract scale is a gate failure, not a silent
-    * recall trade (at the century the same counters are REPORTED by
-    * PipelineProbe instead, where firing is the designed behavior). */
+    * recall trade (at the century the guard firing is the designed
+    * behavior, so these counters are read there, not gated). */
   private def doorGuard(s: SparkSession, dir: String): DataFrame = {
     val (banded, keys) =
       Dedup.bandedOf(pipeStreamCorpus(s, dir).signatures, 8, 4)

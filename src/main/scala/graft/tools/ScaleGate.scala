@@ -1,8 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
-
 /** Scale-ratio regression gate: bench the whole contract at TWO scale
   * factors in one JVM, join per-query, and assert every query's
   * growth stays inside its family's bound — the decade/century
@@ -10,7 +7,8 @@ import graft.SparkEntry
   * one reusable entry point instead of a hand-derived spreadsheet.
   *
   * `runMain graft.tools.ScaleGate <smallDir> <largeDir>
-  *   [dataRatio=10] [slack=3.0] [floorSec=10]`
+  *   [dataRatio=10] [slack=3.0] [floorSec=10]` (cores from
+  * `SPARK_GRAFT_CPUS`, like every main).
   *
   * Verdict rule (see [[ScaleGate.verdict]]): a query passes iff its
   * large-side seconds ≤ max(small-side seconds × dataRatio × slack,
@@ -55,17 +53,11 @@ object ScaleGate {
     }
   }
 
-  private def runAll(spark: SparkSession, dir: String): Map[String, Double] = {
-    SparkEntry.prepare(spark, dir) // builds outside the timed region
-    SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { fn(spark, dir).count(); Some(name -> (System.nanoTime() - t0) / 1e9) }
-      catch { case e: Throwable =>
-        System.err.println(s"[scalegate] $name FAILED at $dir: ${e.getMessage}")
-        None // missing on one side = gate failure via verdict()
-      }
-    }.toMap
-  }
+  /** Seconds per query of one [[graft.Bench.sweep]] — the `all`
+    * timing. An errored query is left out, and so fails the gate via
+    * [[verdict]]; so does a failed prepare, counted by [[main]]. */
+  private def timings(sw: graft.Bench.Sweep): Map[String, Double] =
+    sw.rows.collect { case r if r.status == "ok" => r.name -> r.secs }.toMap
 
   def main(args: Array[String]): Unit = {
     val smallDir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -73,30 +65,24 @@ object ScaleGate {
     val dataRatio = args.lift(2).map(_.toDouble).getOrElse(10.0)
     val slack = args.lift(3).map(_.toDouble).getOrElse(3.0)
     val floorSec = args.lift(4).map(_.toDouble).getOrElse(10.0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    runAll(spark, smallDir) // untimed warm-up: JIT/codegen/first-touch
+    val spark = graft.Bench.session()
+    graft.Bench.sweep(spark, smallDir) // untimed warm-up: JIT/codegen/first-touch
     // COLD-SYMMETRIC timed passes (ADVICE r14): both sides first drop
     // every registry artifact — the per-JVM caches, the built indexes
     // and the memoized one-shot state (completed door runs,
     // per-process boundary artifact roots), their dirs deleted —
     // otherwise the stateful rows (pipeline_stream /
     // pipeline_boundaries / absorb) measure a cached small side against
-    // a cold large side and the ratios are noise. Each runAll's
+    // a cold large side and the ratios are noise. Each sweep's
     // prepare() then pays the cold builds OUTSIDE the timed per-query
     // region, at both scales alike.
     graft.SharedState.clear()
-    val small = runAll(spark, smallDir)
+    val small = graft.Bench.sweep(spark, smallDir)
     graft.SharedState.clear()
-    val large = runAll(spark, largeDir)
-    val rows = verdict(small, large, dataRatio, slack, floorSec)
+    val large = graft.Bench.sweep(spark, largeDir)
+    val rows = verdict(timings(small), timings(large), dataRatio, slack, floorSec)
     val bad = rows.filterNot(_.ok)
+    val failures = bad.size + Seq(small, large).count(_.prepareStatus != "ok")
     val worst = rows.filter(_.ok).sortBy(-_.ratio).take(5)
     // explicit-locale formatting: the f interpolator uses the JVM
     // default locale, whose decimal comma would emit invalid JSON
@@ -107,8 +93,8 @@ object ScaleGate {
     def j(rs: Seq[Row]): String = rs.map(r =>
       s""""${r.name}":{"small":${fmt("%.3f", r.small)},"large":${fmt("%.3f", r.large)},"ratio":${fmt("%.2f", r.ratio)},"bound":${fmt("%.2f", r.bound)},"ok":${r.ok}}""")
       .mkString("{", ",", "}")
-    println(s"""{"metric":"scale_gate","small":"$smallDir","large":"$largeDir","data_ratio":$dataRatio,"slack":$slack,"floor_sec":$floorSec,"n":${rows.size},"failures":${bad.size},"queries":${j(rows)},"worst_ok":${j(worst)}}""")
+    println(s"""{"metric":"scale_gate","small":"$smallDir","large":"$largeDir","data_ratio":$dataRatio,"slack":$slack,"floor_sec":$floorSec,"n":${rows.size},"failures":$failures,"queries":${j(rows)},"worst_ok":${j(worst)}}""")
     spark.stop()
-    if (bad.nonEmpty) sys.exit(1)
+    if (failures > 0) sys.exit(1)
   }
 }

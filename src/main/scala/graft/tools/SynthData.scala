@@ -65,16 +65,9 @@ object SynthData {
     }.toMap
     val outDir = kv.getOrElse("out", "target/sf1")
     val mult = kv.getOrElse("mult", "10").toInt
-    val cpus = kv.getOrElse("cpus", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the fixtures carry TIMESTAMP(MICROS), not Spark's INT96 default
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the fixtures carry TIMESTAMP(MICROS), not Spark's INT96 default
+    val spark = graft.Bench.session(
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
     write(spark, outDir, mult)
     spark.stop()
   }

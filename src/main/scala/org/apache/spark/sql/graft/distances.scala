@@ -24,6 +24,13 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Blocks until every event posted so far reached every listener
+    * (`listenerBus` is `private[spark]`): the bus delivers
+    * asynchronously, so a listener read right after an action can miss
+    * its last JobEnd. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** Test access to `private[sql]` SparkSessionExtensions internals:
     * what an extensions class would contribute to a new session. */
   def builtOptimizerRules(ext: org.apache.spark.sql.SparkSessionExtensions,

@@ -116,6 +116,22 @@ class Bm25Spec extends SparkSpec {
     assert(off.keySet == exact.keySet)
     off.foreach { case (id, v) =>
       assert(math.abs(v - exact(id)) < 1e-9, s"doc $id: $v vs ${exact(id)}") }
+
+    // more accumulated docs than k ('rare' in docs 0..29): the heap
+    // fills to exactly k, still only from the rare postings, under the
+    // default bloom membership, and without deferral too
+    val fix30 = (0L until 300L).map { i =>
+      (i, (if (i < 30) "rare pop" else "pop filler")) }
+      .toDF("doc_id", "text")
+    val tbl30 = Bm25.createBm25Table(fix30, col("doc_id"), col("text"),
+      bloomThreshold = 200)
+    def run30(accT: Int): Seq[(Long, Double)] =
+      Bm25.searchBm25Approx(tbl30, "rare pop", 10, accDocsThreshold = accT)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val heap = run30(20)
+    assert(heap.size == 10 && heap.forall(_._1 < 30), heap)
+    assert(heap.map(_._2).distinct.size == 1, heap) // uniform docs
+    assert(run30(Int.MaxValue).size == 10)
   }
 
   test("searchBm25Approx bloom membership differs from exact only by fp noise") {

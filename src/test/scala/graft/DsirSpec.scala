@@ -160,4 +160,31 @@ class DsirSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet
     assert(cold == Set(7L))
   }
+
+  test("train, score, select: a planted in-domain minority dominates, at any partitioning") {
+    // 24-token docs: in-domain text draws from the 500-token vocabulary
+    // w0..w499, out-of-domain from the disjoint 20000-token w500..w20499;
+    // the raw pool plants 1 in 32 in-domain docs, and the target slice
+    // is n/20 in-domain docs
+    val n = 4000
+    def text(base: Int, vocab: Int) =
+      concat_ws(" ", transform(sequence(lit(0), lit(23)), j =>
+        concat(lit("w"), pmod(col("id") * 31 + j * 7, lit(vocab)) + base)))
+    val target = spark.range(n / 20).select(col("id"), text(0, 500).as("text"))
+    val raw = spark.range(n).select(col("id"),
+      when(col("id") % 32 === 0, text(0, 500))
+        .otherwise(text(500, 20000)).as("text"))
+    val w = Dsir.importanceWeights(target, raw, col("text"), col("text"))
+    val sel = n / 64 // half the planted mass
+    def select(pool: org.apache.spark.sql.DataFrame): Set[Long] =
+      Dsir.resampleTopN(Dsir.score(pool, col("id"), col("text"), w), sel)
+        .collect().map(_.getLong(0)).toSet
+    val ids = select(raw)
+    assert(ids.size == sel)
+    // a collapsed hash-bucket model would select at the plant rate, 1/32
+    val precision = ids.count(_ % 32 == 0).toDouble / sel
+    assert(precision > 0.9, s"planted precision $precision")
+    assert(select(raw.repartition(7)) == ids,
+      "selection must be partitioning-independent")
+  }
 }

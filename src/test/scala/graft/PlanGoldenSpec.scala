@@ -2,7 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.exchange.Exchange
+import graft.plans.AnnScanExec
 
 /** Golden physical-plan snapshots for expensive contract queries —
   * catches a silent Catalyst regression (a lost dynamic-pruning
@@ -567,5 +569,20 @@ class PlanGoldenSpec extends SparkSpec {
       "value gating regressed to a per-cluster rank window")
     assert(!plan.contains("CartesianProduct"))
     checkGolden("q_prototype_prune", skel)
+  }
+
+  test("q_ann_l2sq: one AnnScanExec under the TakeOrderedAndProject, no exchange below it") {
+    val (plan, skel) = snapshot("q_ann_l2sq")
+    // the probe is one planned leaf: one task per shard feeds the
+    // global (dist, id) top-k directly — no shuffle or merge stage
+    val exec = SparkEntry.queries("q_ann_l2sq")(spark, sf("sf0.01"))
+      .queryExecution.executedPlan
+    val tops = exec.collect { case t: TakeOrderedAndProjectExec => t }
+    assert(tops.size == 1, s"expected one TakeOrderedAndProject:\n$plan")
+    assert(tops.head.collect { case a: AnnScanExec => a }.size == 1,
+      s"AnnScanExec is not under the TakeOrderedAndProject:\n$plan")
+    assert(!tops.head.exists(_.isInstanceOf[Exchange]),
+      s"an Exchange runs below the top-k:\n$plan")
+    checkGolden("q_ann_l2sq", skel)
   }
 }
