@@ -3,7 +3,8 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, LogicalRDD}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.graft.Bridge
 
 /** The measurement harness over the driver contract, one mode per
@@ -213,15 +214,28 @@ object Bench {
       case Mode.Caches =>
         // partition width of every registry frame after a full sweep:
         // a steady-read cache with N near-empty partitions costs an
-        // N-task dispatch per stage in every consumer
+        // N-task dispatch per stage in every consumer. Sizes: the
+        // optimizer's estimate (joins plan with it) and the held bytes
         sweep(spark, sfDir)
-        println(f"${"cache key"}%-40s parts rows      sizeB")
+        println(f"${"cache key"}%-40s parts      rows ${"estimatedB"}%12s ${"heldB"}%12s")
         SharedState.entries.foreach { case (key, df) =>
-          val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-          println(f"$key%-40s ${df.rdd.getNumPartitions}%5d ${df.count()}%9d $bytes")
+          val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+          println(f"$key%-40s ${df.rdd.getNumPartitions}%5d ${df.count()}%9d $est%12s ${heldBytes(spark, df)}%12d")
         }
     }
     if (mode != Mode.All) spark.stop()
+  }
+
+  /** Memory + disk bytes the block manager holds for a frame's
+    * persisted column buffers or checkpointed `LogicalRDD`. */
+  private def heldBytes(spark: SparkSession, df: DataFrame): Long = {
+    val ids = df.queryExecution.withCachedData.collect {
+      case r: InMemoryRelation if r.cacheBuilder.isCachedColumnBuffersLoaded =>
+        r.cacheBuilder.cachedColumnBuffers.id
+      case l: LogicalRDD => l.rdd.id
+    }.toSet
+    spark.sparkContext.getRDDStorageInfo.filter(i => ids(i.id))
+      .map(i => i.memSize + i.diskSize).sum
   }
 
   private def all(spark: SparkSession, sfDir: String): Unit = {

@@ -125,23 +125,17 @@ object SharedState extends SharedState {
       * extra pass lands in build time, not in any steady row. */
     case object Compact extends Policy
 
-    /** DISK_ONLY + LINEAGE CUT (eager disk-level local checkpoint).
-      * DISK_ONLY is for WIDE boundary frames (full cleaned document
-      * text per pipeline stage) whose MEMORY_AND_DISK unroll buffers,
-      * stacked on the corpus caches already resident, OOM'd a century
-      * JVM: disk-only persists stream partition-by-partition with no
-      * memory-store attempt, trading re-read I/O (cheap, local) for a
-      * bounded heap. The lineage cut: a persisted boundary still
-      * carries its full logical lineage, and for a deep composed
-      * pipeline the DRIVER re-analyzes that whole tree on every fresh
-      * query over the boundary — measured ~10 s of scale-INDEPENDENT
-      * planning per q_pipeline_e2e call (the cost grew with lineage
-      * depth: 0.06 s at the first boundary, 1.7 s five stages in, ~10 s
-      * at the selection). The checkpoint replaces the lineage with a
-      * LogicalRDD over disk-stored blocks, so downstream plans analyze a
-      * leaf. Eager: the boundary computes at registration (prepare pays
+    /** DISK_ONLY + LINEAGE CUT (eager disk-level local checkpoint),
+      * for per-dir frames over deep or costly lineages (the quality
+      * and DSIR-mix scored pools, the absorb door survivors). The cut
+      * turns the lineage into a LogicalRDD leaf, so a fresh query over
+      * the frame analyzes a leaf, not the tree (an uncut composed-
+      * pipeline boundary cost ~10 s of driver planning per query);
+      * DISK_ONLY streams partition by partition with no memory-store
+      * unroll, which kept text-carrying frames from OOMing a century
+      * JVM. Eager: the frame computes at registration (prepare pays
       * it). Same recompute-on-loss caveat as any local checkpoint —
-      * acceptable for per-JVM shared state, which is what this is. */
+      * acceptable for per-JVM shared state. */
     case object DiskCheckpoint extends Policy
 
     /** [[Compact]] sizing + LINEAGE CUT: size-aware repartition, then an

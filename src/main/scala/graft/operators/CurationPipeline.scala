@@ -28,10 +28,11 @@ import graft.text.{Dsir, QualityClassifier, TextOps}
   * re-derives the whole upstream chain per reference; at a past
   * century run exactly this class of hidden recompute OOM'd a
   * first-cut operator). In a cluster deployment the same boundaries
-  * are parquet tables between jobs; here they persist DISK_ONLY
-  * via the caller's cache hook (the boundaries carry full cleaned
-  * text; memory-store unroll buffers stacked on the resident corpus
-  * caches OOM'd a century JVM — disk-only streams with no unroll). Per stage:
+  * are parquet tables between jobs, and so they are here: the
+  * caller's cache hook materializes each one (the contract rows pass
+  * [[PipelineBoundaries.Runner]]'s, which writes fingerprint-guarded
+  * parquet; the boundaries carry full cleaned text, so they stay off
+  * the memory store). Per stage:
   *  - clean/gate: narrow per-row transforms + ONE doc-keyed join each
   *    to carry (source, text) past the stage operators' own outputs;
   *  - classifier: broadcast weight join on exploded tokens, one
@@ -54,15 +55,13 @@ object CurationPipeline {
     * survivors), `cls` (above-mean classifier survivors with
     * score_fp), `exd` (exact-dedup keepers), `sh` (hashed shingle
     * sets — the verify-join boundary), `ndk` (near-dup keepers),
-    * `selected` (the final mixed selection). Stage boundaries are
-    * materialized through `cache` (see [[curate]]); counting each
-    * frame is the pipeline's per-stage attribution. */
+    * `selected` (the final mixed selection). Each stage boundary is
+    * materialized through `cache(stage, build)`; counting each frame
+    * is the pipeline's per-stage attribution. */
   def stages(docs: DataFrame, idCol: Column, sourceCol: Column,
       textCol: Column, qualityWeights: DataFrame, dsirWeights: Array[Long],
       budgets: Map[String, Long], jaccardThreshold: Double = 0.6,
-      cache: (String, () => DataFrame) => DataFrame =
-        (_, f) => f().persist(
-          org.apache.spark.storage.StorageLevel.DISK_ONLY))
+      cache: (String, () => DataFrame) => DataFrame)
       : Seq[(String, DataFrame)] = {
     require(jaccardThreshold >= 0 && jaccardThreshold <= 1,
       "jaccardThreshold must be in [0, 1]")
@@ -172,15 +171,4 @@ object CurationPipeline {
     Seq("c4" -> c4, "gok" -> gok, "cls" -> cls, "exd" -> exd,
       "sh" -> shh, "ndk" -> ndk, "selected" -> selected)
   }
-
-  /** The composed pipeline's final selection — see [[stages]]. */
-  def curate(docs: DataFrame, idCol: Column, sourceCol: Column,
-      textCol: Column, qualityWeights: DataFrame, dsirWeights: Array[Long],
-      budgets: Map[String, Long], jaccardThreshold: Double = 0.6,
-      cache: (String, () => DataFrame) => DataFrame =
-        (_, f) => f().persist(
-          org.apache.spark.storage.StorageLevel.DISK_ONLY))
-      : DataFrame =
-    stages(docs, idCol, sourceCol, textCol, qualityWeights, dsirWeights,
-      budgets, jaccardThreshold, cache).last._2
 }

@@ -9,10 +9,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * CLUSTER-literal form of [[CurationPipeline]]'s materialization
   * policy: each stage boundary is written as a parquet artifact under
   * one root directory and re-read by every downstream consumer, so a
-  * pipeline whose stages run as SEPARATE jobs (the production shape
-  * the per-JVM `SharedState` checkpoints only approximate) resumes
-  * from whatever boundaries are still valid instead of recomputing
-  * the funnel from the input scan.
+  * pipeline whose stages run as SEPARATE jobs (the production shape)
+  * resumes from whatever boundaries are still valid instead of
+  * recomputing the funnel from the input scan. Every contract
+  * consumer of a stage boundary reads these artifacts.
   *
   * Reference context: this is the engine-level analog of the
   * reference daemon's job-table persistence
@@ -37,6 +37,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * recomputes itself and cascades, and a changed input (new files,
   * new lengths, new mtimes) or changed parameters recomputes the
   * whole funnel — while an untouched prefix is NEVER recomputed.
+  * The marker also records the sorted names and byte lengths of the
+  * payload files, so a boundary that lost or truncated a part file
+  * fails validation and recomputes (cascading like a deleted one)
+  * instead of being served short.
   *
   * Scale shape: validity checks are driver-side directory listings
   * (milliseconds); a served boundary is a bare parquet scan leaf —
@@ -130,8 +134,18 @@ object PipelineBoundaries {
       } catch { case _: java.io.IOException => None }
     }
 
+    /** What a valid marker in `dir` reads: the fingerprint, then one
+      * `name=bytes` line per payload file (every file but the marker
+      * and its checksum sidecar), sorted by name. */
+    private def markerOf(dir: Path, expected: String): String =
+      (expected +: fs.listStatus(dir).toSeq
+        .filterNot(_.getPath.getName.contains(Marker))
+        .map(st => s"${st.getPath.getName}=${st.getLen}").sorted)
+        .mkString("\n")
+
     private[operators] def valid(dir: Path, expected: String): Boolean =
-      fs.exists(dir) && readMarker(dir).contains(expected)
+      try readMarker(dir).contains(markerOf(dir, expected))
+      catch { case _: java.io.IOException => false }
 
     private def tryLock(lock: Path): Boolean =
       try { fs.create(lock, false).close(); true }
@@ -150,9 +164,10 @@ object PipelineBoundaries {
       try {
         write(tmp)
         // marker LAST: its presence inside the committed dir witnesses
-        // a complete payload
+        // a complete payload, and its listing pins that payload's files
+        val marker = markerOf(tmp, expected)
         val out = fs.create(new Path(tmp, Marker), true)
-        try out.write(expected.getBytes("UTF-8")) finally out.close()
+        try out.write(marker.getBytes("UTF-8")) finally out.close()
         val lock = new Path(root, s".$name.lock")
         val deadline = System.nanoTime() + LockWaitMs * 1000000L
         var done = false
@@ -192,10 +207,6 @@ object PipelineBoundaries {
 
     /** Per-stage resolution reports, in pipeline order. */
     def reports: Seq[StageReport] = log.toSeq
-
-    /** The chain state after every stage resolved so far — the seed
-      * for [[Derived]] artifact stores hanging off the last boundary. */
-    def currentChain: String = chain
 
     /** The hook to pass as [[CurationPipeline.stages]]' `cache`. */
     def cache(stage: String, f: () => DataFrame): DataFrame = {

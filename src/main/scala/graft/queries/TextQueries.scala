@@ -190,8 +190,8 @@ object TextQueries {
     // TIMING attribution: a future starts its clock only after its
     // deps resolved, so a build never reports a dependency's wall as
     // its own (waiting on another thread's build would):
-    //   stages ─┬─> ndk_scored ─┬─> refresh
-    //   bounds ─┴─> door ───────┼─> stream ─> absorb
+    //   bounds ─┬─> ndk_scored ─┬─> refresh
+    //           └─> door ───────┼─> stream ─> absorb
     //   arrivals ───────────────┘   (refresh also needs door+arrivals)
     // Job descriptions are thread-local, so UI attribution survives
     // the overlap. The pipeline still materializes before the corpus
@@ -212,13 +212,11 @@ object TextQueries {
     def after(deps: Future[_]*)(body: => Future[(String, Double)])
         : Future[(String, Double)] =
       Future.sequence(deps.toSeq).flatMap(_ => body)
-    // the checkpoint-runner stage chain (q_pipeline_e2e's boundaries)
-    val fStages = timedF("pipeline_stages") {
-      pipelineE2e(s, dir).count() }
-    // the parquet-boundary twin: first touch writes (or validates)
-    // the fingerprint-guarded artifacts; steady-state re-reads them
+    // the stage boundaries, built once through the memo that
+    // q_pipeline_e2e reads; q_pipeline_boundaries then validates the
+    // same fingerprint-guarded artifacts, as its steady state does
     val fBounds = timedF("pipeline_boundaries") {
-      pipelineBoundariesQ(s, dir).count() }
+      pipelineE2e(s, dir).count(); pipelineBoundariesQ(s, dir).count() }
     // the ingest drop parquet leaf (stream source + refresh halves)
     val fArrivals = timedF("pipeline_arrivals") {
       pipeArrivalsPath(s, dir); () }
@@ -227,7 +225,7 @@ object TextQueries {
     val fDoor = after(fBounds)(timedF("pipeline_door") {
       pipeStreamCorpus(s, dir); () })
     // the frozen corpus' scored kept rows (absorb + refresh input)
-    val fNdk = after(fStages)(timedF("pipeline_ndk_scored") {
+    val fNdk = after(fBounds)(timedF("pipeline_ndk_scored") {
       ndkScored(s, dir).count() })
     // the streaming door: runs the AvailableNow ingest job once per
     // dir against the batch pipeline's prepared artifacts
@@ -241,8 +239,8 @@ object TextQueries {
     val fAbsorb = after(fStream, fNdk)(timedF("pipeline_absorb") {
       pipelineAbsorb(s, dir).count() })
     val pipeline =
-      try Await.result(Future.sequence(Seq(fStages, fBounds, fArrivals,
-        fDoor, fNdk, fStream, fRefresh, fAbsorb)), Duration.Inf)
+      try Await.result(Future.sequence(Seq(fBounds, fArrivals, fDoor,
+        fNdk, fStream, fRefresh, fAbsorb)), Duration.Inf)
       finally pool.shutdown()
     trainers ++ pipeline ++ Seq(
       timed("bm25_postings") { postCached(s, dir).count() },
@@ -768,16 +766,17 @@ object TextQueries {
     * planted pipeline corpus. Every stage is demonstrably active at
     * every scale (sf0.01 funnel: 500 → 388 → 242 → 120 → 109 → 98 →
     * 6 selected). Prepared artifacts (classifier weights, DSIR weight
-    * array) ride the shared per-dir caches; stage boundaries persist
-    * once per dir through SharedState, so the documents scan is paid
-    * once. The oracle chains the per-stage CTE chains verbatim. */
+    * array) ride the shared per-dir caches; stage boundaries are the
+    * parquet runner's, built once per dir ([[pipelineStages]]), so the
+    * documents scan is paid once. The oracle chains the per-stage CTE
+    * chains verbatim. */
   private val pipelineBudgets =
     Map("src5" -> 800L, "src6" -> 400L, "src7" -> 200L, "src8" -> 0L)
 
-  /** The contract pipeline with a caller-chosen materialization hook —
-    * the per-JVM checkpoint runner ([[pipelineStages]]) and the
-    * parquet-boundary runner ([[pipelineBoundariesRun]]) build the
-    * SAME stage graph and differ only here. */
+  /** The contract pipeline with a caller-chosen materialization hook:
+    * [[pipelineBoundariesRun]] passes its Runner's, and the parity
+    * spec passes a plain persist to get a reference run of the SAME
+    * stage graph over the same inputs. */
   private[graft] def pipelineStagesWith(s: SparkSession, dir: String,
       cache: (String, () => DataFrame) => DataFrame)
       : Seq[(String, DataFrame)] =
@@ -806,55 +805,44 @@ object TextQueries {
     else df.repartition(cores)
   }
 
-  /** The contract pipeline's stage frames; boundaries persist once
-    * per dir. */
+  /** The contract pipeline's stage frames: one run of
+    * [[pipelineBoundariesRun]] per dir, memoized. Each frame is a bare
+    * parquet leaf over the files q_pipeline_boundaries validates;
+    * consumers read them without re-checking the fingerprints. */
   private[graft] def pipelineStages(s: SparkSession,
       dir: String): Seq[(String, DataFrame)] =
-    pipelineStagesWith(s, dir,
-      // DISK_ONLY + lineage cut: the stage boundaries carry full
-      // cleaned text — at the century their MEMORY_AND_DISK unroll
-      // buffers on top of the resident corpus caches killed the JVM
-      // (r13, first cut) — and an uncut lineage made every fresh
-      // query over the final boundary re-analyze the whole pipeline
-      // tree on the driver (~10 s, scale-independent; see
-      // SharedState.Policy.DiskCheckpoint)
-      (stage, f) => graft.SharedState.frame(s"pipee2e:$stage:$dir",
-        Policy.DiskCheckpoint)(f()))
+    graft.SharedState.value(s"pipestages:$dir")(
+      pipelineBoundariesRun(s, dir)._1)
 
-  /** The parquet-boundary runner over the SAME contract pipeline —
-    * stage boundaries become fingerprint-guarded parquet artifacts
-    * under one root ([[graft.operators.PipelineBoundaries]]), the
-    * cluster-literal materialization the checkpoint runner only
-    * approximates per-JVM: valid boundaries survive JVM restarts and
-    * an invalidated one recomputes itself plus everything downstream,
-    * never the untouched prefix. The seed folds the documents
-    * parquet's listing stamp with the pipeline parameters (and a
-    * version token to bump when stage LOGIC changes — data and params
-    * alone can't see a code change). */
+  /** The contract pipeline's runner — stage boundaries become
+    * fingerprint-guarded parquet artifacts under one root
+    * ([[graft.operators.PipelineBoundaries]]): valid boundaries
+    * survive JVM restarts and an invalidated one recomputes itself
+    * plus everything downstream, never the untouched prefix. The seed
+    * folds the documents parquet's listing stamp with the pipeline
+    * parameters. */
   private[graft] def pipelineBoundariesRun(s: SparkSession, dir: String,
       root: Option[String] = None): (Seq[(String, DataFrame)],
-        () => Seq[graft.operators.PipelineBoundaries.StageReport]) = {
+        Seq[graft.operators.PipelineBoundaries.StageReport]) = {
     val seed = graft.operators.PipelineBoundaries.seedOf(s,
       Seq(s"$dir/documents.parquet"),
       // v bumps on any stage-LOGIC change (data and params alone
       // can't see a code change): v=2 = the selection became the
       // seventh chained boundary
-      "pipee2e;budgets=src5:800,src6:400,src7:200,src8:0;jt=0.6;v=2")
+      "curation;budgets=src5:800,src6:400,src7:200,src8:0;jt=0.6;v=2")
     val runner = new graft.operators.PipelineBoundaries.Runner(s,
       root.getOrElse(pipelineBoundariesRoot(dir)), seed)
-    (pipelineStagesWith(s, dir, runner.cache), () => runner.reports)
+    // the hook resolves each boundary as the graph is built: the
+    // reports are complete once the stages return
+    (pipelineStagesWith(s, dir, runner.cache), runner.reports)
   }
 
-  /** Contract rows use a PER-PROCESS artifact root (stable across
-    * calls within one JVM — the second call onward serves every
-    * boundary — but never shared between concurrent JVMs): a
-    * predictable shared /tmp root let a bench, a test suite, and a
-    * ScaleGate on the same sfDir interleave commits (ADVICE r14), and
-    * made gate timings depend on leftover artifacts from prior runs.
-    * Cross-JVM RESUME — the production semantics — is exercised with
-    * an EXPLICIT `root`, where the Runner's lock-fenced commits make
-    * sharing safe. The root is a registry-owned dir: deleted by
-    * [[graft.SharedState]]'s clear and at JVM exit. */
+  /** Contract rows use a PER-PROCESS artifact root — stable within
+    * one JVM, never shared between concurrent JVMs (a shared /tmp root
+    * let a bench, a test suite and a ScaleGate interleave commits and
+    * made gate timings depend on leftovers). Cross-JVM RESUME is
+    * exercised with an EXPLICIT `root`. The root is a registry-owned
+    * dir: deleted by [[graft.SharedState]]'s clear and at JVM exit. */
   private[graft] def pipelineBoundariesRoot(dir: String): String =
     graft.SharedState.value(s"pipebounds:$dir") {
       val h = java.security.MessageDigest.getInstance("MD5")
@@ -866,12 +854,9 @@ object TextQueries {
   /** The parquet-runner contract row. Steady state does what a
     * resumed cluster job does: validate the seven fingerprints
     * (driver-side listings, milliseconds) and read the SELECTION
-    * boundary as one bare parquet leaf — since r15 the selection is
-    * the seventh chained artifact, so the warm path no longer
-    * recomputes the mix's two passes off ndk per call (VERDICT r14
-    * "what's wrong" #1). No per-JVM caching here by design: the row
-    * measures the production re-read path, not the cache the
-    * checkpoint twin (q_pipeline_e2e) already measures. */
+    * boundary as one bare parquet leaf. No memo here by design:
+    * q_pipeline_e2e reads the same boundaries through the
+    * [[pipelineStages]] memo. */
   private def pipelineBoundariesQ(s: SparkSession, dir: String): DataFrame =
     pipelineBoundariesRun(s, dir)._1.last._2
       .orderBy(col("source").asc, col("mix_rank").asc).limit(500)
@@ -933,7 +918,7 @@ object TextQueries {
     val (stages, reports) = pipelineBoundariesRun(s, dir, Some(theRoot))
     val st = stages.toMap
     val ndk = st("ndk")
-    val ndkChain = reports().find(_.stage == "ndk").get.resolved
+    val ndkChain = reports.find(_.stage == "ndk").get.resolved
     val d = new graft.operators.PipelineBoundaries.Derived(s,
       s"$theRoot/door", ndkChain)
     val hashes = d.table("hash")(() =>
@@ -966,7 +951,7 @@ object TextQueries {
       try Array.fill(in.readInt())(in.readLong()) finally in.close()
     }
     (graft.streaming.IngestPipeline.PreparedCorpus(hashes, bloom, shh,
-      sigs, weights), reports() ++ d.reports)
+      sigs, weights), reports ++ d.reports)
   }
 
   /** The door corpus the contract rows use — the artifact-backed
@@ -977,9 +962,9 @@ object TextQueries {
     graft.SharedState.value(s"door:corpus:$dir")(
       doorArtifacts(s, dir)._1)
 
-  /** The per-JVM DERIVED twin of [[doorArtifacts]] — the same corpus
-    * artifacts computed directly off the checkpoint runner's ndk
-    * boundary with no persistence (what the door did before the
+  /** The DERIVED twin of [[doorArtifacts]] — the same corpus
+    * artifacts computed directly off the ndk boundary with no
+    * persistence of their own (what the door did before the
     * artifacts moved onto the fingerprint chain). Kept for the
     * artifact-served == derived parity spec. */
   private[graft] def pipeStreamCorpusDerived(s: SparkSession, dir: String)
@@ -1143,9 +1128,10 @@ object TextQueries {
   }
 
   /** Shared DuckDB oracle for the composed pipeline rows
-    * (q_pipeline_e2e and q_pipeline_boundaries — two materialization
-    * policies, one result): the per-stage CTE chains with
-    * AS MATERIALIZED on every reused boundary. */
+    * (q_pipeline_e2e and q_pipeline_boundaries — the memoized read and
+    * the validated re-read of one set of boundaries, one result): the
+    * per-stage CTE chains with AS MATERIALIZED on every reused
+    * boundary. */
   private def sqlLines(block: String): String =
     block.split("\n").map(l => s"'$l'").mkString(" || chr(10) || ")
 
@@ -1443,8 +1429,8 @@ object TextQueries {
     doorDropCtes("d2", " AND doc_id % 2 = 1", "hashg2", "bandedg2", "hshg2")
 
   private def pipelineE2e(s: SparkSession, dir: String): DataFrame =
-    // the selection is itself a materialized stage boundary
-    // ("pipee2e:selected:<dir>" through the hook) — no extra wrapper
+    // the selection is itself a materialized stage boundary (the
+    // memoized `selected` parquet leaf) — no extra wrapper
     pipelineStages(s, dir).last._2
       .orderBy(col("source").asc, col("mix_rank").asc).limit(500)
 

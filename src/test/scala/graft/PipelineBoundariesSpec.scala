@@ -7,11 +7,15 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.PipelineBoundaries
 
-/** The parquet-boundary pipeline runner: bit-parity with the
-  * checkpoint runner at two scales, resume-from-boundary semantics
-  * (only the invalidated suffix recomputes), and the Runner's chained
-  * listing-stamp staleness discipline on a toy two-stage pipeline. */
+/** The parquet-boundary pipeline runner: every boundary bit-equal to
+  * a plain-persist run of the same stage graph at two scales,
+  * resume-from-boundary semantics (only the invalidated suffix
+  * recomputes, including after a lost part file), and the Runner's
+  * chained listing-stamp staleness discipline on a toy two-stage
+  * pipeline. */
 class PipelineBoundariesSpec extends SparkSpec {
+
+  private val TQ = graft.queries.TextQueries
 
   private def freshRoot(): String =
     Files.createTempDirectory("graft_pb_spec").toString
@@ -19,22 +23,29 @@ class PipelineBoundariesSpec extends SparkSpec {
   private def selectedRows(df: DataFrame): Seq[Row] =
     df.orderBy(col("source").asc, col("mix_rank").asc).collect().toSeq
 
-  test("parquet boundaries == checkpoint boundaries, bit-equal at two scales") {
+  test("all seven boundaries == a plain-persist run, bit-equal at two scales") {
     for (scale <- Seq("sf0.001", "sf0.01")) {
       val dir = sf(scale)
-      val expected = selectedRows(
-        graft.queries.TextQueries.pipelineStages(spark, dir).last._2)
+      // the reference: the same stage graph over the same inputs, each
+      // boundary a plain DISK_ONLY persist — no parquet, no registry
+      val reference = TQ.pipelineStagesWith(spark, dir, (_, f) =>
+        f().persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
       val (stages, reports) =
-        graft.queries.TextQueries.pipelineBoundariesRun(spark, dir,
-          root = Some(freshRoot()))
-      val actual = selectedRows(stages.last._2)
-      assert(reports().forall(_.computed),
-        s"fresh root at $scale must compute every boundary")
-      assert(actual == expected,
-        s"parquet-boundary selection diverged from the checkpoint " +
-          s"runner at $scale")
-      // all integral columns — exact equality is meaningful
-      assert(expected.nonEmpty && actual.nonEmpty)
+        TQ.pipelineBoundariesRun(spark, dir, root = Some(freshRoot()))
+      try {
+        assert(reports.forall(_.computed),
+          s"fresh root at $scale must compute every boundary")
+        assert(stages.map(_._1) == reference.map(_._1))
+        // doc_id is unique in every boundary; the columns are integral,
+        // strings and long arrays — exact equality is meaningful
+        for (((stage, want), (_, got)) <- reference.zip(stages)) {
+          val w = want.orderBy(col("doc_id")).collect().toSeq
+          val g = got.orderBy(col("doc_id")).collect().toSeq
+          assert(w.nonEmpty, s"empty $stage boundary at $scale")
+          assert(g == w,
+            s"parquet boundary $stage diverged from the reference at $scale")
+        }
+      } finally reference.foreach(_._2.unpersist())
     }
   }
 
@@ -43,11 +54,10 @@ class PipelineBoundariesSpec extends SparkSpec {
     val root = freshRoot()
     def run() = {
       val (stages, reports) =
-        graft.queries.TextQueries.pipelineBoundariesRun(spark, dir,
-          root = Some(root))
+        TQ.pipelineBoundariesRun(spark, dir, root = Some(root))
       val rows = selectedRows(stages.last._2)
-      (rows, reports().map(r => r.stage -> r.computed).toMap,
-        reports().map(_.stage))
+      (rows, reports.map(r => r.stage -> r.computed).toMap,
+        reports.map(_.stage))
     }
     val (rows1, flags1, order) = run()
     assert(flags1.values.forall(identity), "first run computes all stages")
@@ -82,6 +92,37 @@ class PipelineBoundariesSpec extends SparkSpec {
       "exd" -> false, "sh" -> true, "ndk" -> true, "selected" -> true),
       s"marker-corruption flags wrong: $flags4")
     assert(rows4 == rows1)
+  }
+
+  test("resume: a boundary that lost a part file recomputes with its suffix") {
+    val dir = sf("sf0.001")
+    val root = freshRoot()
+    def run() = {
+      val (stages, reports) =
+        TQ.pipelineBoundariesRun(spark, dir, root = Some(root))
+      (stages.toMap, reports.map(r => r.stage -> r.computed))
+    }
+    val (st1, flags1) = run()
+    assert(flags1.forall(_._2), "first run computes all stages")
+    val order = flags1.map(_._1)
+    def parts(stage: String): Seq[java.io.File] =
+      Option(new java.io.File(s"$root/$stage").listFiles()).toSeq.flatten
+        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+    val victim = order.find(parts(_).size >= 2).getOrElse(fail(
+      s"no boundary has two part files: ${order.map(s => s -> parts(s).size)}"))
+    val rows1 = st1(victim).count()
+    val sel1 = selectedRows(st1("selected"))
+    // the marker still matches its fingerprint; only the payload
+    // listing it records can tell the boundary is short
+    assert(parts(victim).head.delete())
+    val (st2, flags2) = run()
+    val from = order.indexOf(victim)
+    assert(flags2 == order.zipWithIndex.map { case (s, i) => s -> (i >= from) },
+      s"after losing a part file of $victim: $flags2")
+    assert(st2(victim).count() == rows1,
+      s"$victim was served or recomputed short")
+    assert(selectedRows(st2("selected")) == sel1,
+      "the selection changed after the recompute")
   }
 
   test("Runner: seed change invalidates the whole chain; upstream recompute cascades") {
