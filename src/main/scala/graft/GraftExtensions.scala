@@ -13,10 +13,12 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *
   * Injects the transparent ANN top-k optimizer rule
   * ([[graft.plans.AnnTopK.AnnTopKRule]]; indexes still opt in per path
-  * via [[graft.plans.AnnTopK.IndexCatalog]]), the planner strategy for
-  * its index probe ([[graft.plans.AnnScanStrategy]]) and the engine's SQL scalar
-  * function surface (same builders as `graft.functions.registerAll`,
-  * which remains available for wiring an already-running session).
+  * via [[graft.plans.AnnTopK.IndexCatalog]]), the planner strategies for
+  * its index probe ([[graft.plans.AnnScanStrategy]]) and for the
+  * approximate BM25 search ([[graft.plans.Bm25ScanStrategy]]), and the
+  * engine's SQL scalar function surface (same builders as
+  * `graft.functions.registerAll`, which remains available for wiring an
+  * already-running session).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -24,6 +26,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       graft.plans.AnnTopK.AnnTopKRule(session)
     }
     ext.injectPlannerStrategy(_ => graft.plans.AnnScanStrategy)
+    ext.injectPlannerStrategy(_ => graft.plans.Bm25ScanStrategy)
     graft.functions.sqlBuilders.foreach { case (name, builder) =>
       ext.injectFunction((
         new FunctionIdentifier(name),

@@ -313,7 +313,7 @@ object AnnIndex {
     * the packed tombstone file once per version and binary-searches it. */
   def topK(spark: SparkSession, indexPath: String, query: Array[Float],
       k: Int, ef: Int = 64): DataFrame = {
-    graft.plans.AnnTopK.installStrategy(spark)
+    graft.plans.installStrategy(spark, graft.plans.AnnScanStrategy)
     org.apache.spark.sql.graft.Bridge
       .ofRows(spark, graft.plans.AnnScan(indexPath, query, k, ef))
       .orderBy(col("dist").asc, col("id").asc).limit(k)

@@ -3,6 +3,7 @@ package graft.bm25
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{text_to_stem_array, tokenize}
+import graft.plans.Bm25Scan
 
 /** BM25 full-text ranking (reference: lantern_extras/src/bm25_agg.rs and
   * bm25_api.sql).
@@ -32,6 +33,11 @@ object Bm25 {
 
   private def toksCol(textCol: Column, stemmed: Boolean): Column =
     if (stemmed) text_to_stem_array(textCol) else tokenize(textCol)
+
+  /** The query's distinct terms, tokenized as the corpus was. */
+  private def queryTerms(query: String, stemmed: Boolean): Seq[String] =
+    (if (stemmed) graft.text.Stemmer.stemTokens(query)
+     else graft.text.Stemmer.tokens(query)).toSeq.distinct
 
   /** Tokenized docs with length: (doc_id, toks, doc_len). */
   def tokenized(docs: DataFrame, idCol: Column, textCol: Column,
@@ -191,6 +197,14 @@ object Bm25 {
     idf(nDocs, docFreq) * (fq * lit(p.k1 + 1.0)) /
       (fq + lit(p.k1) * (lit(1.0 - p.b) + lit(p.b) * docLen / avgDocLen))
 
+  /** [[postingScore]] on doubles: the same operations in the same order,
+    * and Spark's `log` is `StrictMath.log`, so the bits are the Column
+    * path's. */
+  def postingScoreOf(fq: Double, docLen: Double, nDocs: Double,
+      docFreq: Double, avgDocLen: Double, p: Params): Double =
+    StrictMath.log((nDocs - docFreq + 0.5) / (docFreq + 0.5) + 1.0) *
+      (fq * (p.k1 + 1.0)) / (fq + p.k1 * ((1.0 - p.b) + p.b * docLen / avgDocLen))
+
   /** End-to-end search (reference `search_bm25`, bm25_api.sql:61-104):
     * top-k docs by BM25 for a query string. `precomputed` lets callers
     * pass a persisted postings table + stats. */
@@ -206,11 +220,8 @@ object Bm25 {
   def searchBm25Of(tok: DataFrame, query: String, k: Int,
       params: Params = Params(), stemmed: Boolean = false,
       postings: Option[DataFrame] = None): DataFrame = {
-    val terms: Seq[String] =
-      (if (stemmed) graft.text.Stemmer.stemTokens(query)
-       else graft.text.Stemmer.tokens(query)).toSeq.distinct
     val post = postings.getOrElse(postingsOf(tok))
-      .filter(col("term").isin(terms: _*))
+      .filter(col("term").isin(queryTerms(query, stemmed): _*))
     scoreAndRank(post, corpusStatsOf(tok), k, params)
   }
 
@@ -256,246 +267,54 @@ object Bm25 {
       .sum
   }
 
-  /** The reference's popular-term APPROXIMATE scoring over a
+  /** The reference's popular-term APPROXIMATE search over a
     * reference-shaped [[createBm25Table]] table — the opt-in fidelity
     * mode for score parity with reference deployments running the
     * approximation (bm25_agg.rs:162-188 state_base, 311-401 finalize;
-    * exact scoring stays this library's default — Spark's distributed
-    * aggregate removes the single-backend memory bound the
-    * approximation exists for). Mechanisms, all four of the
-    * reference's:
+    * exact scoring stays this library's default). It plans one
+    * [[graft.plans.Bm25Scan]] node: the query terms' rows and the
+    * `term IS NULL` stats row are read in one task, with the filter
+    * pushed into the scan, no driver action and no exchange, and ranked
+    * there by the reference's four mechanisms — rarest-first
+    * accumulation up to `accDocsThreshold` distinct docs, deferral of
+    * bloom-carrying terms past it to an fq=1/doc_len=avg_doc_len
+    * constant, a 10×k candidate heap over the exact part, and membership
+    * re-ranking ([[graft.plans.Bm25Scan.rank]] lists the steps).
+    * `exactMembership = true` tests membership on the stored doc_ids
+    * instead of the posting bloom (no false positives; blooms have no
+    * false negatives) — the deterministic contract/oracle mode, since a
+    * DuckDB oracle cannot replay splitmix64 bloom bits.
     *
-    *  1. ACCUMULATED-DOCS THRESHOLD: terms process in the aggregate's
-    *     declared order — `ORDER BY doc_ids_len ASC` per the
-    *     reference's search_bm25 (bm25_api.sql:84-99), term ascending
-    *     as the tiebreak the reference leaves to the executor — and a
-    *     term may defer only once more than `accDocsThreshold`
-    *     DISTINCT doc ids have been accumulated from earlier terms
-    *     (`self.data.len() > 100`, bm25_agg.rs:207): the baseline
-    *     candidates must come from somewhere before popular terms
-    *     stop contributing postings.
-    *  2. SUBSTITUTION: a deferred term scores as a per-term CONSTANT
-    *     with fq=1 and doc_len=avg_doc_len (maybe_use_bloom_filter,
-    *     bm25_agg.rs:164-188) — its posting arrays are NEVER read,
-    *     which is the approximation's entire scale win.
-    *  3. BLOOM-MEMBERSHIP DEFERRAL: only terms whose table row
-    *     carries a posting bloom (built when df > the build
-    *     threshold) may defer; at finalize each candidate doc gains
-    *     the constants of the deferred terms whose bloom CONTAINS its
-    *     id. `exactMembership = true` resolves membership from the
-    *     stored doc_ids instead (no false positives; blooms have no
-    *     false negatives, so the two differ only by the fp-rate noise
-    *     the approximation accepts) — the deterministic contract/
-    *     oracle mode, since a DuckDB oracle cannot replay splitmix64
-    *     bloom bits.
-    *  4. 10x-LIMIT TOP-K HEAP: candidate docs are the top
-    *     `10 * k` by accumulated EXACT score (finalize_base's
-    *     bloom_limit heap, bm25_agg.rs:313-336) — a doc appearing
-    *     ONLY in deferred terms is never a candidate, faithfully to
-    *     the reference (it never enters `self.data`); deferred
-    *     constants then re-rank within the candidates. Ties break by
-    *     doc_id ascending (the reference's unstable heap/sort leaves
-    *     ties unspecified; a deterministic engine must pick).
-    *
-    * Deferral decisions are driver-computed from per-term METADATA
-    * only (term_freq, doc_ids_len, bloom presence) plus the doc_ids
-    * of terms shorter than `accDocsThreshold` (bounded:
-    * ≤ threshold x #query-terms ids): the first crossing point is
-    * reached either by one term longer than the threshold (its own
-    * distinct count crosses alone) or by the union of short ones.
-    * Popular-term arrays are read only if the term lands BEFORE the
-    * crossing in rare-first order — the same read the reference's
-    * aggregate pays while collecting its baseline.
-    *
-    * Scale shape: deferred posting arrays never explode; the exact
-    * part shuffles once on doc_id; the heap is a bounded
-    * TakeOrderedAndProject; membership tests run on ≤ 10k candidate
-    * rows x #deferred terms via a broadcast. Returns (doc_id, score)
-    * top-k by (score desc, doc_id asc). */
+    * Returns (doc_id, score), the top k by (round(score, 6) desc, doc_id
+    * asc), in one partition. A table without its stats row fails loudly;
+    * a query whose terms are all absent returns no rows. */
   def searchBm25Approx(tbl: DataFrame, query: String, k: Int,
       params: Params = Params(), stemmed: Boolean = false,
       accDocsThreshold: Int = 100,
-      exactMembership: Boolean = false): DataFrame = {
-    val p = approxParts(tbl, query, k, params, stemmed, accDocsThreshold)
-    val scored = p.defRows match {
-      case None => p.cands.select(col("doc_id"),
-        col("exact_score").as("score"))
-      case Some(defRows) =>
-        val member =
-          if (exactMembership) array_contains(col("__ids"), col("doc_id"))
-          else graft.functions.elem_in_bloom(col("doc_id"), col("__bloom"))
-        // project ONLY what the chosen membership needs before the
-        // broadcast: production (bloom) mode must never ship a popular
-        // term's posting array to every task — that array never being
-        // read is the approximation's entire point
-        val defSel =
-          if (exactMembership) defRows.select(col("const"), col("__ids"))
-          else defRows.select(col("const"), col("__bloom"))
-        p.cands.crossJoin(broadcast(defSel))
-          .withColumn("add", when(member, col("const")).otherwise(lit(0.0)))
-          .groupBy(col("doc_id"), col("exact_score"))
-          .agg(sum(col("add")).as("__adds"))
-          .select(col("doc_id"),
-            (col("exact_score") + col("__adds")).as("score"))
-    }
-    scored.orderBy(round(col("score"), 6).desc, col("doc_id").asc).limit(k)
-  }
-
-  /** The approximate search's shared internals: the 10×k candidate
-    * heap over the exact part, plus (when the crossing fired) the
-    * deferred-term rows carrying the substituted constant, the
-    * posting bloom, AND the true posting ids — so the exact and bloom
-    * membership modes, and [[bloomModeCheck]]'s side-by-side replay,
-    * all read one candidate pipeline that cannot drift. */
-  private case class ApproxParts(cands: DataFrame, defRows: Option[DataFrame])
-
-  private def approxParts(tbl: DataFrame, query: String, k: Int,
-      params: Params, stemmed: Boolean,
-      accDocsThreshold: Int): ApproxParts = {
-    require(k > 0, "k must be positive")
-    val spark = tbl.sparkSession
-    import spark.implicits._
-    val qTerms: Seq[String] =
-      (if (stemmed) graft.text.Stemmer.stemTokens(query)
-       else graft.text.Stemmer.tokens(query)).toSeq.distinct
-    val rows = tbl.filter(col("term").isin(qTerms: _*))
-    // per-term metadata only — posting arrays stay distributed
-    case class TermMeta(term: String, df: Long, len: Int, hasBloom: Boolean)
-    val meta = rows
-      .select(col("term"), col("term_freq"), col("doc_ids_len"),
-        col("doc_ids_bloom").isNotNull)
-      .collect()
-      .map(r => TermMeta(r.getString(0), r.getLong(1), r.getInt(2),
-        r.getBoolean(3)))
-      .sortBy(t => (t.len, t.term)) // the reference's doc_ids_len ASC
-    // short-term doc ids (each array <= accDocsThreshold entries)
-    val shortTerms = meta.filter(_.len <= accDocsThreshold).map(_.term)
-    val shortDocs: Map[String, Array[Long]] =
-      if (shortTerms.isEmpty) Map.empty
-      else rows.filter(col("term").isin(shortTerms.toSeq: _*))
-        .select(col("term"), col("doc_ids"))
-        .collect()
-        .map(r => r.getString(0) -> r.getSeq[Long](1).toArray).toMap
-    // sequential deferral decisions (reference state_base order)
-    var crossed = false
-    val accSet = scala.collection.mutable.HashSet[Long]()
-    val deferred = scala.collection.mutable.ArrayBuffer[String]()
-    val accumulated = scala.collection.mutable.ArrayBuffer[String]()
-    meta.foreach { t =>
-      if (t.hasBloom && crossed) deferred += t.term
-      else {
-        accumulated += t.term
-        if (t.len > accDocsThreshold) crossed = true
-        else if (!crossed) {
-          shortDocs.get(t.term).foreach(ids => accSet ++= ids)
-          if (accSet.size > accDocsThreshold) crossed = true
-        }
-      }
-    }
-    // corpus stats from the NULL row: n exact, avgdl at the table's
-    // stored fixed-point precision (doc_ids_len = avgdl x100,
-    // bm25_api.sql corpus_stats: doc_ids_len / 100.0)
-    val stats = tbl.filter(col("term").isNull)
-      .select(col("term_freq").cast("double").as("n_docs"),
-        (col("doc_ids_len").cast("double") / 100.0).as("avg_doc_len"))
-    // exact part: accumulated terms' postings, one doc_id shuffle
-    val exactPart = rows
-      .filter(col("term").isin(accumulated.toSeq: _*))
-      .select(col("term"), col("term_freq").cast("double").as("doc_freq"),
-        explode(arrays_zip(col("doc_ids"), col("fqs"), col("doc_lens")))
-          .as("p"))
-      .select(col("term"), col("doc_freq"),
-        col("p.doc_ids").as("doc_id"), col("p.fqs").as("fq"),
-        col("p.doc_lens").as("doc_len"))
-      .crossJoin(broadcast(stats))
-      .withColumn("sc", postingScore(col("fq").cast("double"),
-        col("doc_len").cast("double"), col("n_docs"), col("doc_freq"),
-        col("avg_doc_len"), params))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("sc")).as("exact_score"))
-    // the 10x-limit candidate heap (bounded TakeOrderedAndProject).
-    // The cut orders on the ROUNDED exact score (ADVICE r12): sum()
-    // accumulates in partition-dependent order, and a raw-double cut
-    // could admit a different near-cutoff candidate set across
-    // layouts — rounding to 6dp here mirrors the final-ordering
-    // discipline and keeps the candidate set layout-independent.
-    val cands = exactPart
-      .orderBy(round(col("exact_score"), 6).desc, col("doc_id").asc)
-      .limit(10 * k)
-    val defRows =
-      if (deferred.isEmpty) None
-      else
-        // deferred rows: constant = the substituted posting score
-        // (fq=1, doc_len=avg_doc_len) in the SAME column-expression
-        // shape the exact path uses, so an oracle replays it verbatim
-        Some(rows.filter(col("term").isin(deferred.toSeq: _*))
-          .select(col("term"), col("term_freq").cast("double").as("doc_freq"),
-            col("doc_ids_bloom").as("__bloom"), col("doc_ids").as("__ids"))
-          .crossJoin(broadcast(stats))
-          .withColumn("const", postingScore(lit(1.0), col("avg_doc_len"),
-            col("n_docs"), col("doc_freq"), col("avg_doc_len"), params)))
-    ApproxParts(cands, defRows)
-  }
+      exactMembership: Boolean = false): DataFrame =
+    Bm25Scan.frame(tbl, Bm25Scan.Query(queryTerms(query, stemmed), k, params,
+      accDocsThreshold,
+      if (exactMembership) Bm25Scan.ExactMembership else Bm25Scan.BloomMembership))
 
   /** Self-checking PRODUCTION-mode (bloom membership) verdict for the
-    * approximate search — the `q_classify_recall` discipline applied
-    * to the BM25 bloom path, whose splitmix64 bits no external oracle
-    * can replay: run the bloom membership the production path uses
-    * side by side with the stored-posting truth over the SAME
-    * candidate pipeline, and verify IN-QUERY the two invariants the
-    * approximation's correctness rests on (bm25_agg.rs:311-401):
-    *
-    *  - `nfn_ok` — NO FALSE NEGATIVES: every (candidate, deferred
-    *    term) membership the true posting list contains, the bloom
-    *    contains too (a bloom can only over-admit), so a bloom-mode
-    *    score can never drop a constant an exact replay would add;
-    *  - `fp_rate_ok` — the bloom's over-admission on true NON-members
-    *    is bounded: observed false-positive memberships ≤
-    *    max(5% of non-member tests, 3) — 5× the build's 0.01 design
-    *    rate plus an absolute floor for small non-member counts.
-    *    Deterministic (seed-42 blooms over a fixed corpus), so a
-    *    green verdict at a scale stays green.
-    *
-    * `deferral_active` pins that the check exercised the bloom path
-    * at all (≥ 1 deferred term — true at every contract scale; a
-    * corpus where the crossing never fires yields (false, true,
-    * true) honestly). An EMPTY candidate set (deferral fired but the
-    * query matched no stored postings) is vacuously true on both
-    * invariants — the aggregates return null over zero rows, so the
-    * verdicts coalesce to true rather than surfacing a null a caller's
-    * getBoolean would throw on. One verdict row; the oracle pins
-    * all-TRUE. */
+    * approximate search, whose splitmix64 bloom bits no external oracle
+    * can replay (the `q_classify_recall` discipline). The
+    * [[graft.plans.Bm25Scan]] task that ranks [[searchBm25Approx]]
+    * builds the same candidate heap, tests every (candidate, deferred
+    * term) pair by bloom AND by stored postings, and returns one row:
+    * `nfn_ok` — no false negatives, so a bloom-mode score never drops a
+    * constant an exact replay adds; `fp_rate_ok` — false positives on
+    * true non-members ≤ max(5% of non-member tests, 3), 5x the build's
+    * 0.01 design rate plus a floor (seed-42 blooms: deterministic);
+    * `deferral_active` — at least one term deferred. With nothing
+    * deferred the row is (false, true, true), and an empty candidate
+    * set is vacuously true on both invariants. The oracle pins all-TRUE
+    * (bm25_agg.rs:311-401). */
   def bloomModeCheck(tbl: DataFrame, query: String, k: Int,
       params: Params = Params(), stemmed: Boolean = false,
-      accDocsThreshold: Int = 100): DataFrame = {
-    val spark = tbl.sparkSession
-    import spark.implicits._
-    val p = approxParts(tbl, query, k, params, stemmed, accDocsThreshold)
-    p.defRows match {
-      case None =>
-        Seq((false, true, true))
-          .toDF("deferral_active", "nfn_ok", "fp_rate_ok")
-      case Some(defRows) =>
-        p.cands
-          .crossJoin(broadcast(defRows.select(col("__bloom"), col("__ids"))))
-          .select(
-            graft.functions.elem_in_bloom(col("doc_id"), col("__bloom"))
-              .as("__bm"),
-            array_contains(col("__ids"), col("doc_id")).as("__em"))
-          .agg(
-            coalesce(bool_and(col("__bm") || !col("__em")), lit(true))
-              .as("nfn_ok"),
-            coalesce(
-              sum(when(col("__bm") && !col("__em"), 1L).otherwise(0L)) <=
-                greatest(
-                  sum(when(!col("__em"), 1L).otherwise(0L))
-                    .cast("double") * 0.05,
-                  lit(3.0)),
-              lit(true)).as("fp_rate_ok"))
-          .select(lit(true).as("deferral_active"), col("nfn_ok"),
-            col("fp_rate_ok"))
-    }
-  }
+      accDocsThreshold: Int = 100): DataFrame =
+    Bm25Scan.frame(tbl, Bm25Scan.Query(queryTerms(query, stemmed), k, params,
+      accDocsThreshold, Bm25Scan.BloomCheck))
 
   /** Compact a bm25 table containing duplicate term rows (after
     * incremental appends) back to one row per term — reference

@@ -98,7 +98,7 @@ case class AnnScanExec(scan: AnnScan) extends LeafExecNode {
 }
 
 /** Plans [[AnnScan]] into [[AnnScanExec]]; installed by
-  * [[AnnTopK.install]] / [[AnnTopK.installStrategy]] or injected by
+  * [[AnnTopK.install]] / [[installStrategy]] or injected by
   * [[graft.GraftExtensions]]. */
 object AnnScanStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

@@ -123,17 +123,7 @@ object AnnTopK {
     ex.synchronized {
       if (!ex.extraOptimizations.exists(_.isInstanceOf[AnnTopKRule]))
         ex.extraOptimizations = ex.extraOptimizations :+ AnnTopKRule(spark)
-      installStrategy(spark)
-    }
-  }
-
-  /** Install [[AnnScanStrategy]] alone (what planning an [[AnnScan]]
-    * needs; [[graft.ann.AnnIndex.topK]] calls it). */
-  def installStrategy(spark: SparkSession): Unit = {
-    val ex = spark.experimental
-    ex.synchronized {
-      if (!ex.extraStrategies.contains(AnnScanStrategy))
-        ex.extraStrategies = ex.extraStrategies :+ AnnScanStrategy
+      installStrategy(spark, AnnScanStrategy)
     }
   }
 

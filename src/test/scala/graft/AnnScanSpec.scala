@@ -3,8 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
-import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import graft.ann.{AnnIndex, HammingView, Metric, ShardCache}
@@ -27,14 +26,6 @@ class AnnScanSpec extends SparkSpec {
   }
   private lazy val l2Index = build(emb, "embedding", Metric.L2Sq)
 
-  /** Every node of an executed plan, through adaptive wrappers and
-    * query stages (a stage is a leaf whose plan is not a child). */
-  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-    case s: QueryStageExec => s +: nodes(s.plan)
-    case other => other +: other.children.flatMap(nodes)
-  }
-
   private def rewritten(indexPath: String)(body: => Unit): Unit = {
     AnnTopK.install(spark)
     AnnTopK.IndexCatalog.register(srcPath,
@@ -56,7 +47,7 @@ class AnnScanSpec extends SparkSpec {
       spark.conf.set(AnnTopK.EfConfKey, "32")
       val df = topkQuery(10)
       assert(df.collect().length == 10)
-      val all = nodes(df.queryExecution.executedPlan)
+      val all = planNodes(df.queryExecution.executedPlan)
       val bcasts = all.collect { case b: BroadcastExchangeExec => b }
       val scanned = bcasts.filter(_.exists(_.isInstanceOf[AnnScanExec]))
       assert(scanned.size == 1, s"expected AnnScanExec under a broadcast:\n${df.queryExecution.executedPlan}")
@@ -79,7 +70,7 @@ class AnnScanSpec extends SparkSpec {
       spark.conf.set(AnnTopK.EfConfKey, "32")
       val df = topkQuery(10)
       df.collect()
-      val exec = nodes(df.queryExecution.executedPlan).collectFirst { case s: AnnScanExec => s }.get
+      val exec = planNodes(df.queryExecution.executedPlan).collectFirst { case s: AnnScanExec => s }.get
       val shards = AnnIndex.readManifest(l2Index).shards.size
       val fetch = math.max(10, 32) // no filter: no over-fetch
       assert(exec.metrics("shardsProbed").value == shards)

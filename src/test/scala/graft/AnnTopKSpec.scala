@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.logical.Join
 import graft.ann.{AnnIndex, Metric}
 import graft.functions.{l2sq_dist, vecLit}
-import graft.plans.{AnnScan, AnnScanStrategy, AnnTopK}
+import graft.bm25.Bm25
+import graft.plans.{AnnScan, AnnScanStrategy, AnnTopK, Bm25ScanStrategy}
 
 /** Transparent ANN rewrite of ORDER BY dist LIMIT k (the reference's
   * planner integration, hnsw.c:150-209). */
@@ -76,6 +77,11 @@ class AnnTopKSpec extends SparkSpec {
 
   test("racing installs leave one AnnTopKRule and one AnnScan strategy") {
     val session = spark.newSession()
+    val table = {
+      import session.implicits._
+      Bm25.createBm25Table(Seq((0L, "rare")).toDF("doc_id", "text"),
+        col("doc_id"), col("text"))
+    }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     try {
       val start = new java.util.concurrent.CountDownLatch(1)
@@ -83,7 +89,12 @@ class AnnTopKSpec extends SparkSpec {
         pool.submit(new Runnable {
           def run(): Unit = {
             start.await()
-            if (i % 2 == 0) AnnTopK.install(session) else AnnTopK.installStrategy(session)
+            i % 4 match {
+              case 0 => AnnTopK.install(session)
+              case 1 => graft.plans.installStrategy(session, AnnScanStrategy)
+              case 2 => graft.plans.installStrategy(session, Bm25ScanStrategy)
+              case _ => Bm25.searchBm25Approx(table, "rare", 1) // installs as it builds
+            }
           }
         })
       }
@@ -93,6 +104,8 @@ class AnnTopKSpec extends SparkSpec {
     val ex = session.experimental
     assert(ex.extraOptimizations.count(_.isInstanceOf[AnnTopK.AnnTopKRule]) == 1)
     assert(ex.extraStrategies.count(_ == AnnScanStrategy) == 1)
+    assert(ex.extraStrategies.count(_ == Bm25ScanStrategy) == 1)
+    assert(ex.extraStrategies.size == 2, ex.extraStrategies)
   }
 
   test("targetRecall conf derives ef from the autotune artifact, with fallback") {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.bm25.Bm25
+import graft.plans.Bm25ScanExec
 import graft.text.UserStopwords
 
 /** BM25 extensions: consolidation semantics, ad-hoc scoring, user
@@ -177,6 +178,45 @@ class Bm25Spec extends SparkSpec {
     val noDef = Bm25.bloomModeCheck(tbl, "rare pop", 10,
       accDocsThreshold = 100000).collect()(0)
     assert(!noDef.getBoolean(0) && noDef.getBoolean(1) && noDef.getBoolean(2))
+  }
+
+  /** The "rare pop" fixture: 'rare' in docs 0..2, 'pop' in all 300
+    * (bloom-carrying above the 200 build threshold). */
+  private def rarePopTable(): DataFrame = {
+    import spark.implicits._
+    Bm25.createBm25Table((0L until 300L)
+        .map(i => (i, if (i < 3) "rare pop" else "pop filler")).toDF("doc_id", "text"),
+      col("doc_id"), col("text"), bloomThreshold = 200)
+  }
+
+  test("searchBm25Approx: a table without its corpus-stats row fails loudly") {
+    val tbl = rarePopTable()
+    val noStats = tbl.filter(col("term").isNotNull)
+    for (exact <- Seq(true, false)) {
+      val e = intercept[Exception](Bm25.searchBm25Approx(noStats, "rare pop", 10,
+        accDocsThreshold = 2, exactMembership = exact).collect())
+      assert(e.getMessage.contains("corpus-stats row (term IS NULL)"), e.getMessage)
+    }
+    val e = intercept[Exception](
+      Bm25.bloomModeCheck(noStats, "rare pop", 10, accDocsThreshold = 2).collect())
+    assert(e.getMessage.contains("corpus-stats row (term IS NULL)"), e.getMessage)
+    // with the stats row, terms absent from the table are no error: no rows
+    assert(Bm25.searchBm25Approx(tbl, "absent words", 10).collect().isEmpty)
+    assert(Bm25.searchBm25Approx(tbl, "", 10).collect().isEmpty)
+  }
+
+  test("Bm25ScanExec metrics on the rare-pop fixture: 1 deferred, 3 scored, 3 candidates") {
+    val df = Bm25.searchBm25Approx(rarePopTable(), "rare pop", 10,
+      accDocsThreshold = 2, exactMembership = true)
+    assert(df.collect().length == 3)
+    val scans = planNodes(df.queryExecution.executedPlan).collect { case b: Bm25ScanExec => b }
+    assert(scans.size == 1, df.queryExecution.executedPlan)
+    val m = scans.head.metrics.map { case (k, v) => k -> v.value }
+    assert(m("termsRead") == 2 && m("termsDeferred") == 1, m)
+    assert(m("postingsScored") == 3 && m("candidates") == 3, m)
+    // 3 candidates x 1 deferred term, by stored doc_ids
+    assert(m("membershipTests") == 3, m)
+    assert(m("searchTime") > 0, m)
   }
 
   test("user stopwords replace the default list") {

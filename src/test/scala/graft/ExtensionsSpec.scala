@@ -2,11 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.graft.Bridge
-import graft.plans.{AnnScanStrategy, AnnTopK}
+import graft.plans.{AnnScanStrategy, AnnTopK, Bm25ScanStrategy}
 
 /** Config-time wiring: `spark.sql.extensions=graft.GraftExtensions`
-  * must contribute the ANN rewrite rule, its probe's planner strategy
-  * and the SQL function surface to
+  * must contribute the ANN rewrite rule, the planner strategies of its
+  * probe and of the approximate BM25 search, and the SQL function
+  * surface to
   * a session (exercised through the same SparkSessionExtensions hooks
   * session construction uses — a second live session cannot be built
   * inside the shared-session test JVM). */
@@ -23,7 +24,7 @@ class ExtensionsSpec extends SparkSpec {
   test("injects the AnnScan planner strategy the rewrite's probe needs") {
     val ext = new SparkSessionExtensions
     new GraftExtensions().apply(ext)
-    assert(Bridge.builtPlannerStrategies(ext, spark) == Seq(AnnScanStrategy))
+    assert(Bridge.builtPlannerStrategies(ext, spark) == Seq(AnnScanStrategy, Bm25ScanStrategy))
   }
 
   test("injects the SQL function surface") {

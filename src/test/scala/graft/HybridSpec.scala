@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.functions._
 import graft.operators.Hybrid
@@ -75,14 +73,6 @@ class HybridSpec extends SparkSpec {
     assert(math.abs(rows.head._2 - (1.0 / 63 + 2.0 / 61)) < 1e-12)
   }
 
-  /** Every node of a physical plan, through adaptive wrappers and
-    * query stages. */
-  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-    case s: QueryStageExec => s +: nodes(s.plan)
-    case other => other +: other.children.flatMap(nodes)
-  }
-
   test("the batched plan has no single-partition stage") {
     val exec = Hybrid.rrfPerQuery("qid", "id", ranked, k = 5)
       .queryExecution.executedPlan
@@ -91,7 +81,7 @@ class HybridSpec extends SparkSpec {
       s"every window and join must be partitioned by the query key:\n$plan")
     // fusion parallelism grows with the query count: every rank
     // window (and window group limit) partitions on the query id
-    val partitionSpecs = nodes(exec).collect {
+    val partitionSpecs = planNodes(exec).collect {
       case w: WindowExec => w.partitionSpec
       case w: WindowGroupLimitExec => w.partitionSpec
     }

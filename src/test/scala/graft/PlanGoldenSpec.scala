@@ -2,9 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{ExplainMode, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.{ExplainMode, SortExec, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
-import graft.plans.AnnScanExec
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+import graft.plans.{AnnScanExec, Bm25ScanExec}
 
 /** Golden physical-plan snapshots for expensive contract queries —
   * catches a silent Catalyst regression (a lost dynamic-pruning
@@ -261,18 +263,23 @@ class PlanGoldenSpec extends SparkSpec {
     checkGolden("q_bm25_search", skel)
   }
 
-  test("q_bm25_search_approx: bounded heap, broadcast deferred constants") {
+  test("q_bm25_search_approx: one Bm25ScanExec over the cached table, no exchange") {
     val (plan, skel) = snapshot("q_bm25_search_approx")
-    // the 10x-limit candidate heap is a TakeOrderedAndProject, never a
-    // global sort of the exact part
-    assert(plan.contains("TakeOrderedAndProject"))
-    // the deferred-term constants reach the bounded candidates via a
-    // broadcast (a BNLJ over <= #terms rows), not a shuffle or a
-    // cartesian over anything corpus-sized
-    assert(plan.contains("Broadcast"))
-    assert(!plan.contains("CartesianProduct"))
-    // the reference-shaped table comes from the shared cache
-    assert(plan.contains("InMemoryTableScan"))
+    // the search is one planned node reading the shared cache in one
+    // task: no shuffle, broadcast, join or sort around or below it (the
+    // cached table's own build plan is not part of the query's tree)
+    val exec = SparkEntry.queries("q_bm25_search_approx")(spark, sf("sf0.01"))
+      .queryExecution.executedPlan
+    val all = planNodes(exec)
+    val scans = all.collect { case b: Bm25ScanExec => b }
+    assert(scans.size == 1, s"expected one Bm25ScanExec:\n$plan")
+    assert(!all.exists {
+      case _: Exchange | _: BroadcastNestedLoopJoinExec | _: CartesianProductExec |
+          _: SortExec | _: TakeOrderedAndProjectExec => true
+      case _ => false
+    }, s"an exchange, a join or a sort runs in the search:\n$plan")
+    assert(planNodes(scans.head).exists(_.isInstanceOf[InMemoryTableScanExec]),
+      s"the cached table is not scanned under the node:\n$plan")
     checkGolden("q_bm25_search_approx", skel)
   }
 
