@@ -1,9 +1,8 @@
 package graft.ann
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
-import scala.collection.concurrent.TrieMap
+import java.io.{BufferedOutputStream, DataOutputStream}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,9 +13,14 @@ import org.apache.spark.sql.functions._
   * {{{
   *   manifest.properties     metric, dim, m, ef_construction, count, shards
   *   shard_00000.hnsw        one [[Hnsw]] graph per build partition
-  *   tombstones-g<n>.bin     sorted packed-long deleted ids (optional;
-  *                           monotonic generations, highest wins)
+  *   tombstones-g<n>.bin     sorted packed-long deleted ids (monotonic
+  *                           generations from the empty g0, highest wins)
   * }}}
+  *
+  * Every probe reads one [[IndexSnapshot]]: the driver pins each shard
+  * file and the newest tombstone generation by `(mtime, length)` when it
+  * reads the manifest. Executors read only the pinned shards, and the
+  * pinned tombstone generation or a newer one ([[Tombstones]]).
   *
   * The manifest mirrors the reference's index header
   * (lantern_hnsw/src/hnsw/external_index.h:38-56: m, ef_construction,
@@ -32,7 +36,8 @@ import org.apache.spark.sql.functions._
   * Scale: shards build in parallel (one graph per partition fits
   * executor memory — size shards accordingly), searches touch every
   * shard but return only k rows each, so the merge is k x shards rows —
-  * trivial at any corpus size. Shard graphs are cached per executor JVM.
+  * trivial at any corpus size. Shard graphs are cached per executor JVM,
+  * keyed by their pinned stamp.
   */
 object AnnIndex {
 
@@ -47,9 +52,19 @@ object AnnIndex {
   case class Manifest(metric: Metric, dim: Int, m: Int, efConstruction: Int,
       count: Long, shards: Seq[String], pq: Boolean = false)
 
-  /** Build a sharded index from (id, vector) rows. Returns the manifest. */
+  /** Build a sharded index from (id, vector) rows, starting at the empty
+    * tombstone generation 0 ([[Tombstones.init]]). Returns the manifest. */
   def build(df: DataFrame, idCol: String, vecCol: String, indexPath: String,
       params: Params = Params()): Manifest = {
+    Tombstones.init(indexPath,
+      new Path(indexPath).getFileSystem(df.sparkSession.sessionState.newHadoopConf()))
+    buildShards(df, idCol, vecCol, indexPath, params)
+  }
+
+  /** The shards and manifest of [[build]] (an append stage has no
+    * tombstones of its own). */
+  private def buildShards(df: DataFrame, idCol: String, vecCol: String,
+      indexPath: String, params: Params): Manifest = {
     val spark = df.sparkSession
     val data = df.select(col(idCol).cast("long"), col(vecCol))
     // hash-partition by id, not round-robin, AND sort each shard by id:
@@ -128,7 +143,7 @@ object AnnIndex {
       if (!existing.pq) None
       else ShardCache.get(s"$indexPath/${existing.shards.head}").pq
     val stage = subdir.getOrElse(s"append_${existing.shards.length}")
-    val appended = build(df, idCol, vecCol, s"$indexPath/$stage",
+    val appended = buildShards(df, idCol, vecCol, s"$indexPath/$stage",
       Params(existing.metric, existing.m, existing.efConstruction, pq = cb))
     require(appended.dim == existing.dim,
       s"expected equally sized arrays but got dimensions ${appended.dim} and ${existing.dim}")
@@ -204,72 +219,50 @@ object AnnIndex {
 
   /** Record deleted ids; searches skip them inside the shard graphs
     * (scan.c:294-300 semantics — labels invalidated, skipped at scan).
-    * Storage is a sorted packed-long file (`tombstones.bin`): 8 bytes
-    * per id, readable on executors straight through the Hadoop FS with
-    * no Spark job, binary-searchable once mapped into memory — a
-    * million deletes is an 8 MB artifact, never a driver-held Set on
-    * the probe path. */
+    * Storage is a sorted packed-long generation file
+    * (`tombstones-g<n>.bin`): 8 bytes per id, readable on executors
+    * straight through the Hadoop FS with no Spark job, binary-searchable
+    * once mapped into memory — a million deletes is an 8 MB artifact,
+    * never a driver-held Set on the probe path. */
   def delete(spark: SparkSession, indexPath: String, ids: Seq[Long]): Unit = {
     // read-merge-write: concurrent delete() calls on one index must be
     // serialized by the caller (the reference serializes via table
-    // locks). Readers never hit a gap: each write is a NEW immutable
-    // generation file (tombstones-g<n>.bin, readers pick the highest
-    // generation) and only generations older than the previous one are
-    // pruned, so a reader that listed just before a delete still finds
-    // its file intact. The generation number is parsed from the newest
-    // existing file and incremented — NOT derived from a clock — so
-    // write order always matches generation order even when deletes
-    // come from different JVMs/hosts against shared storage (a clock
-    // like nanoTime has a per-boot origin: a "newer" delete could sort
-    // before an older one and be served stale, or pruned outright).
+    // locks). Each write is a NEW immutable generation file, and only
+    // generations older than the previous one are pruned, so a probe
+    // that pinned the newest generation just before a delete still
+    // finds its file intact. The generation number is parsed from the
+    // newest existing file and incremented — NOT derived from a clock —
+    // so write order always matches generation order even when deletes
+    // come from different JVMs/hosts against shared storage.
     val fs = new Path(indexPath).getFileSystem(
       spark.sessionState.newHadoopConf())
-    // merge from a FRESH listing, never the TTL probe cache: merging a
-    // <TTL-stale set here would resurrect another JVM's recent deletes
-    // into the new (winning) generation
-    val merged = (TombstoneCache.getFresh(indexPath) ++ ids).distinct.sorted
-    val next = TombstoneCache.nextGeneration(indexPath, fs)
-    TombstoneCache.writeGeneration(indexPath, fs, next, merged)
-    // prune all but the newest two generations + any legacy files
-    val gens = TombstoneCache.generationFiles(indexPath, fs)
-    gens.sortBy(TombstoneCache.genOrder).dropRight(2)
-      .foreach(fs.delete(_, false))
-    val legacyBin = new Path(indexPath, "tombstones.bin")
-    if (fs.exists(legacyBin)) fs.delete(legacyBin, false)
-    val legacyTxt = new Path(indexPath, "tombstones.txt")
-    if (fs.exists(legacyTxt)) fs.delete(legacyTxt, false)
-    // same-JVM probes see the new generation immediately; remote
-    // executors converge within the listing TTL
-    TombstoneCache.invalidateListing(indexPath)
+    // merge from a FRESH listing: merging an older set would resurrect
+    // another process's recent deletes into the new (winning) generation
+    val gens = Tombstones.generations(indexPath,
+      IndexSnapshot.list(fs, indexPath, new Path(indexPath)))
+    val merged = (gens.lastOption.fold(Array.emptyLongArray)(g => Tombstones.read(g._2)) ++
+      ids).distinct.sorted
+    Tombstones.write(indexPath, fs, gens.lastOption.fold(0L)(_._1) + 1, merged)
+    // keep the new generation and its predecessor
+    gens.dropRight(1).foreach { case (_, pin) => fs.delete(new Path(pin.path), false) }
   }
 
-  private[ann] val TombstoneMagic = 0x47544f4d // "GTOM"
-
-  /** Executor-side tombstone predicate for a probe (null = no deletes;
-    * the search skips the filter branch entirely). Shared by every
-    * probe path so skip semantics cannot diverge. */
-  private[graft] def tombstoneSkip(indexPath: String): Long => Boolean = {
-    val dead = TombstoneCache.get(indexPath)
-    if (dead.isEmpty) null
-    else id => java.util.Arrays.binarySearch(dead, id) >= 0
-  }
-
+  /** The index's current tombstoned ids (sorted), from a fresh listing. */
   def tombstones(indexPath: String): Seq[Long] =
-    TombstoneCache.get(indexPath).toSeq
+    Tombstones.load(indexPath, IndexSnapshot.tombstonesOf(indexPath)).toSeq
 
   /** Rebuild the index without tombstoned rows (graph compaction the
     * reference never does — delete.c leaves holes forever).
     *
     * Fully distributed: the driver never materializes a single vector.
-    * Shard PATHS parallelize one-per-task; each task loads its shard on
-    * an executor, anti-joins the tombstone set there (binary search over
-    * the packed file, read fresh — compacting against a <TTL-stale
-    * cached set would bake a recently deleted row into the rebuilt
-    * index with no tombstone), and streams the survivors straight into
-    * [[build]]'s per-partition graph construction. Driver traffic is
-    * shard names + the manifest — a 100 M x 1536d index compacts
-    * without ever exceeding a few MB of driver heap (VacuumSpec asserts
-    * the plan is RDD-backed, not a driver LocalRelation). */
+    * Shard PATHS parallelize one-per-task; each task loads its pinned
+    * shard on an executor, anti-joins the pinned tombstone generation
+    * there (binary search over the packed file), and streams the
+    * survivors straight into [[build]]'s per-partition graph
+    * construction. Driver traffic is the snapshot + the manifest — a
+    * 100 M x 1536d index compacts without ever exceeding a few MB of
+    * driver heap (VacuumSpec asserts the plan is RDD-backed, not a
+    * driver LocalRelation). */
   def vacuum(spark: SparkSession, indexPath: String, outPath: String): Manifest = {
     val man = readManifest(indexPath)
     build(survivors(spark, indexPath, man), "id", "vec", outPath,
@@ -277,23 +270,25 @@ object AnnIndex {
   }
 
   /** The index's live (id, vector) rows as a distributed DataFrame, one
-    * input partition per shard (exposed to specs so the no-driver-
-    * materialization property is assertable on the plan). */
+    * input partition per shard, over the snapshot of `man` taken now
+    * (exposed to specs so the no-driver-materialization property is
+    * assertable on the plan). */
   private[graft] def survivors(spark: SparkSession, indexPath: String,
       man: Manifest): DataFrame = {
     require(!man.pq,
       "vacuum needs raw vectors; a PQ index stores only codes - rebuild from the source table instead")
-    val shardPaths = man.shards.map(s => s"$indexPath/$s")
-    val idxPath = indexPath
+    val snap = IndexSnapshot.of(indexPath, man.shards,
+      new Path(indexPath).getFileSystem(spark.sessionState.newHadoopConf()))
+    val tomb = snap.tombstones
     import spark.implicits._
     spark.sparkContext
-      .parallelize(shardPaths, math.max(shardPaths.size, 1))
-      .mapPartitions { paths =>
-        paths.flatMap { p =>
-          val h = ShardCache.get(p)
+      .parallelize(snap.shards, math.max(snap.shards.size, 1))
+      .mapPartitions { pins =>
+        pins.flatMap { pin =>
+          val h = ShardCache.get(pin)
           require(h.pq.isEmpty,
             "vacuum needs raw vectors; a PQ index stores only codes - rebuild from the source table instead")
-          val dead = TombstoneCache.getFresh(idxPath)
+          val dead = Tombstones.load(indexPath, tomb)
           h.ids.indices.iterator
             .filter(i => java.util.Arrays.binarySearch(dead, h.ids(i)) < 0)
             .map(i => (h.ids(i), h.vecs(i)))
@@ -309,8 +304,9 @@ object AnnIndex {
     * `(dist, id)` sort and limit k. Returns (id, dist) ascending. The
     * shards are probed one task each with no exchange, and the sort
     * merges their k-row lists; collected, the whole probe is one job.
-    * No tombstone state ever lives on the driver: each executor reads
-    * the packed tombstone file once per version and binary-searches it. */
+    * The frame reads the [[IndexSnapshot]] resolved when it first runs,
+    * and deletes written after it. No tombstone state ever lives on the driver: each executor
+    * reads the packed tombstone file once and binary-searches it. */
   def topK(spark: SparkSession, indexPath: String, query: Array[Float],
       k: Int, ef: Int = 64): DataFrame = {
     graft.plans.installStrategy(spark, graft.plans.AnnScanStrategy)
@@ -341,14 +337,14 @@ object AnnIndex {
     * LRU-cached shard graphs locally and merges per-query results, so
     * an executor downloads each shard at most once per eviction
     * lifetime and the driver never sees more than the final
-    * (queries x k) rows. Returns (query_id, id, dist, rank). */
+    * (queries x k) rows. The join reads the shards of the
+    * [[IndexSnapshot]] resolved here, and deletes written after it.
+    * Returns (query_id, id, dist, rank). */
   def topKJoin(queries: DataFrame, idCol: String, vecCol: String,
       indexPath: String, k: Int, ef: Int = 64,
       targetRecall: Option[Double] = None): DataFrame = {
-    val man = readManifest(indexPath)
     val spark = queries.sparkSession
-    val shardPaths = man.shards.map(s => s"$indexPath/$s")
-    val idxPath = indexPath
+    val snap = IndexSnapshot(indexPath)
     // recall-target serving (the sf10 lesson: a pinned ef decays as
     // the corpus grows) — derived from the index's autotune artifact
     // when resolvable, the explicit ef otherwise
@@ -362,8 +358,8 @@ object AnnIndex {
       .mapPartitions { rows =>
         if (!rows.hasNext) Iterator.empty // don't load shards for nothing
         else {
-          val skip = tombstoneSkip(idxPath)
-          val graphs = shardPaths.map(ShardCache.get)
+          val skip = Tombstones.skip(indexPath, snap.tombstones)
+          val graphs = snap.shards.map(ShardCache.get)
           rows.flatMap { case (qid, qv) =>
             val q = qv.toArray
             graphs.flatMap(_.search(q, k, math.max(effEf, k), skip))
@@ -409,10 +405,12 @@ object AnnIndex {
     finally out.close()
   }
 
-  def readManifest(indexPath: String): Manifest = {
-    val p = new Path(indexPath, "manifest.properties")
-    val fs = p.getFileSystem(graft.HadoopConfs.driver())
-    val in = fs.open(p)
+  def readManifest(indexPath: String): Manifest =
+    readManifest(indexPath,
+      new Path(indexPath).getFileSystem(graft.HadoopConfs.driver()))
+
+  private[ann] def readManifest(indexPath: String, fs: FileSystem): Manifest = {
+    val in = fs.open(new Path(indexPath, "manifest.properties"))
     val props = new java.util.Properties()
     try props.load(in) finally in.close()
     Manifest(
@@ -428,10 +426,13 @@ object AnnIndex {
 
 /** Per-executor-JVM cache of deserialized shard graphs (the analog of
   * the reference's buffer-cache-backed lazy node retriever,
-  * scan.c:90-110 — immutable artifacts, so memoization works), bounded
-  * by a byte budget with LRU eviction so many indexes/variants (e.g. an
-  * autotune sweep) cannot pin every graph in executor memory forever.
-  * Budget: `graft.ann.shardCacheBytes` system property, default 8 GiB. */
+  * scan.c:90-110), one entry per shard path holding the graph of the
+  * [[Pinned]] stamp it was read at: a probe pinned to a newer stamp
+  * (the same path rebuilt) re-reads the file and replaces the entry.
+  * Bounded by a byte budget with LRU eviction so many indexes/variants
+  * (e.g. an autotune sweep) cannot pin every graph in executor memory
+  * forever. Budget: `graft.ann.shardCacheBytes` system property,
+  * default 8 GiB. */
 object ShardCache {
   val BudgetProp = "graft.ann.shardCacheBytes"
   private val DefaultBudget = 8L * 1024 * 1024 * 1024
@@ -444,27 +445,30 @@ object ShardCache {
   // run while holding the lock other tasks' cache hits need.
   private val lock = new Object
   private val cache =
-    new java.util.LinkedHashMap[String, (Hnsw, Long)](64, 0.75f, true)
+    new java.util.LinkedHashMap[String, (Pinned, Hnsw, Long)](64, 0.75f, true)
   private var totalBytes = 0L
 
   private def budget: Long =
     sys.props.get(BudgetProp).flatMap(v =>
       scala.util.Try(v.trim.toLong).toOption).getOrElse(DefaultBudget)
 
-  def get(path: String): Hnsw = {
-    lock.synchronized(Option(cache.get(path))) match {
-      case Some((h, _)) => h
-      case None =>
-        val p = new Path(path)
-        val fs = p.getFileSystem(new Configuration())
-        val in = new DataInputStream(new BufferedInputStream(fs.open(p)))
-        val h = try Hnsw.read(in) finally in.close()
+  /** The shard at `path` as the file stands now (one `getFileStatus`). */
+  def get(path: String): Hnsw = get(Pinned.stat(path))
+
+  /** The shard graph of a pinned file; fails naming the file when it is
+    * gone or no longer carries the pinned stamp. */
+  def get(shard: Pinned): Hnsw = {
+    lock.synchronized(Option(cache.get(shard.path))) match {
+      case Some((pin, h, _)) if pin == shard => h
+      case _ =>
+        val h = Pinned.read(shard)(Hnsw.read)
         val bytes = h.estimatedBytes // outside the lock: O(nodes) scan
         lock.synchronized {
-          Option(cache.get(path)) match {
-            case Some((raced, _)) => raced // a concurrent load won
-            case None =>
-              cache.put(path, (h, bytes))
+          Option(cache.get(shard.path)) match {
+            case Some((pin, raced, _)) if pin == shard => raced // a concurrent load won
+            case old =>
+              old.foreach(e => totalBytes -= e._3)
+              cache.put(shard.path, (shard, h, bytes))
               totalBytes += bytes
               evictOver(budget)
               h
@@ -479,7 +483,7 @@ object ShardCache {
     val it = cache.entrySet().iterator()
     while (totalBytes > limit && cache.size() > 1 && it.hasNext) {
       val e = it.next()
-      totalBytes -= e.getValue._2
+      totalBytes -= e.getValue._3
       it.remove()
     }
   }
@@ -489,7 +493,7 @@ object ShardCache {
     while (it.hasNext) {
       val e = it.next()
       if (e.getKey.startsWith(prefix)) {
-        totalBytes -= e.getValue._2
+        totalBytes -= e.getValue._3
         it.remove()
       }
     }
@@ -497,249 +501,4 @@ object ShardCache {
 
   def cachedBytes: Long = lock.synchronized(totalBytes)
   def cachedCount: Int = lock.synchronized(cache.size())
-}
-
-/** Per-executor-JVM cache of an index's packed tombstone file, keyed by
-  * the file's (mtime, length) version stamp so a new `delete()` is
-  * picked up without any executor coordination. The array is sorted;
-  * probes binary-search it.
-  *
-  * The directory LISTING is itself cached per index with a short TTL
-  * (`graft.ann.tombstoneListTtlMs`, default 10 s): without it every
-  * task of every probe pays one `listStatus` round-trip even for an
-  * index with zero tombstones — on an object store those LISTs dwarf a
-  * sub-millisecond graph walk. A same-JVM `delete()` invalidates the
-  * listing immediately; remote executors converge within the TTL
-  * (deletes are rare, probes are the hot path). */
-object TombstoneCache {
-  // keyed by the concrete file read; stamp = mtime ^ shifted length
-  private val cache = TrieMap[String, (Long, Array[Long])]()
-  private val MaxEntries = 256 // arrays re-read on demand; a full clear is cheap
-
-  val TtlProp = "graft.ann.tombstoneListTtlMs"
-  private val DefaultTtlMs = 10000L
-  // indexPath -> (cache deadline millis, resolved sorted tombstones)
-  private val listingCache = TrieMap[String, (Long, Array[Long])]()
-  /** Real FS listings performed per index (diagnostics: specs assert
-    * the steady-state probe path performs none). */
-  private val listingCounts = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.atomic.AtomicLong]()
-  private[graft] def listingCount(indexPath: String): Long =
-    Option(listingCounts.get(indexPath)).map(_.get()).getOrElse(0L)
-
-  private def ttlMs: Long =
-    sys.props.get(TtlProp).flatMap(v =>
-      scala.util.Try(v.trim.toLong).toOption).getOrElse(DefaultTtlMs)
-
-  private val GenName = """tombstones-g(\d+)\.bin""".r
-
-  /** Generation number of a `tombstones-g<n>.bin` name (None for the
-    * pre-round-4 clock-named `tombstones-<nanos>.bin` files). */
-  private[ann] def generationNumber(name: String): Option[Long] =
-    name match {
-      case GenName(d) => scala.util.Try(d.toLong).toOption
-      case _ => None
-    }
-
-  /** Total order over generation files: numbered generations always
-    * beat legacy clock-named files, and compare numerically among
-    * themselves (lexicographic order breaks once a number outgrows its
-    * zero-pad). Legacy files keep their lexicographic order. */
-  private[ann] def genOrder(p: Path): (Int, Long, String) =
-    generationNumber(p.getName) match {
-      case Some(n) => (1, n, "")
-      case None => (0, 0L, p.getName)
-    }
-
-  /** Next generation number to write: newest existing + 1. */
-  private[ann] def nextGeneration(indexPath: String,
-      fs: org.apache.hadoop.fs.FileSystem): Long =
-    generationFiles(indexPath, fs)
-      .flatMap(p => generationNumber(p.getName))
-      .foldLeft(0L)(math.max) + 1
-
-  private[ann] def generationFiles(indexPath: String,
-      fs: org.apache.hadoop.fs.FileSystem): Seq[Path] = {
-    val dir = new Path(indexPath)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        n.startsWith("tombstones-") && n.endsWith(".bin")
-      }
-  }
-
-  // Bumped by invalidateListing; a resolve-then-put only caches if no
-  // invalidation happened in between. Without it a probe thread could
-  // read the pre-delete listing, lose the race with delete()'s
-  // invalidate, and then put the stale set back with a fresh TTL —
-  // breaking the same-JVM immediate-visibility guarantee for up to
-  // ttlMs.
-  private val invalidations = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.atomic.AtomicLong]()
-  // bumped whenever the bounded map is cleared, so a version observed
-  // before the clear can never compare equal to one observed after it
-  // (clearing alone could erase another path's fresh bump and reopen
-  // the stale-caching race)
-  private val invalidationEpoch = new java.util.concurrent.atomic.AtomicLong()
-  private def invalidationVersion(indexPath: String): (Long, Long) =
-    (invalidationEpoch.get(),
-      Option(invalidations.get(indexPath)).map(_.get()).getOrElse(0L))
-
-  /** Cache `arr` only if no invalidation raced the resolve. The put is
-    * guarded twice: before (cheap skip) AND after — an invalidate that
-    * lands between the pre-check and the put bumps the version, so the
-    * post-check removes the just-written stale entry. Either the put
-    * happens-before the invalidate's remove (removed), or after it
-    * (post-check sees the bumped version and removes). Conservative
-    * either way: the worst outcome is an uncached listing. */
-  private def putIfCurrent(indexPath: String, v0: (Long, Long),
-      deadline: Long, arr: Array[Long]): Unit =
-    if (invalidationVersion(indexPath) == v0) {
-      if (listingCache.size >= MaxEntries) listingCache.clear()
-      listingCache.put(indexPath, (deadline, arr))
-      if (invalidationVersion(indexPath) != v0)
-        listingCache.remove(indexPath)
-    }
-
-  /** Row-level skip probe for the codegen `tombstone_live` filter
-    * expression (stable public entry point for generated code). */
-  def isLive(indexPath: String, id: Long): Boolean = {
-    val dead = get(indexPath)
-    dead.length == 0 || java.util.Arrays.binarySearch(dead, id) < 0
-  }
-
-  def get(indexPath: String): Array[Long] = {
-    val now = System.currentTimeMillis()
-    listingCache.get(indexPath) match {
-      case Some((deadline, arr)) if now < deadline => arr
-      case _ =>
-        val v0 = invalidationVersion(indexPath)
-        val arr = resolve(indexPath)
-        putIfCurrent(indexPath, v0, now + ttlMs, arr)
-        arr
-    }
-  }
-
-  /** Drop the cached listing for one index (same-JVM delete()). The
-    * version map is bounded by clearing it when it outgrows the cache
-    * cap: probes that read a now-cleared version conservatively skip
-    * caching (their recheck sees a different value), so the clear can
-    * never resurrect a stale listing. */
-  private[ann] def invalidateListing(indexPath: String): Unit = {
-    if (invalidations.size > 4 * MaxEntries) {
-      // epoch first: a reader racing the clear sees either the old map
-      // (old epoch mismatch later) or the cleared map under a new epoch
-      invalidationEpoch.incrementAndGet()
-      invalidations.clear()
-    }
-    invalidations.computeIfAbsent(indexPath,
-      _ => new java.util.concurrent.atomic.AtomicLong).incrementAndGet()
-    listingCache.remove(indexPath)
-  }
-
-  /** Read one SPECIFIC tombstone file, bypassing every cache layer —
-    * for write paths that must pin the file they act on to the listing
-    * they derived it from (IVF consolidate: the generation it reads
-    * must be exactly the generation it watermarks, or a racing
-    * delete() slips between the listing and the read). Generations are
-    * cumulative merges, so the newest file IS the full set. */
-  private[ann] def readPinned(p: Path,
-      fs: org.apache.hadoop.fs.FileSystem): Array[Long] = readBin(p, fs)
-
-  /** Write a dead-id set as the numbered generation file
-    * `tombstones-g<gen>.bin` — the ONE place the on-disk tombstone
-    * format is produced (delete's merge write and IvfIndex's
-    * legacy-file migration both go through here). create(overwrite =
-    * false): an already-exists race surfaces as IOException for the
-    * caller to resolve. */
-  private[ann] def writeGeneration(indexPath: String,
-      fs: org.apache.hadoop.fs.FileSystem, gen: Long,
-      ids: Array[Long]): Path = {
-    val p = new Path(indexPath, f"tombstones-g$gen%012d.bin")
-    val out = new java.io.DataOutputStream(
-      new java.io.BufferedOutputStream(fs.create(p, false)))
-    try {
-      out.writeInt(AnnIndex.TombstoneMagic)
-      out.writeInt(ids.length)
-      ids.foreach(out.writeLong)
-    } finally out.close()
-    p
-  }
-
-  /** Fresh read that bypasses (and refreshes) the TTL cache — for WRITE
-    * paths (delete merge, vacuum) where serving a <TTL-stale set would
-    * lose or resurrect another writer's deletes. Probes use [[get]]. */
-  private[ann] def getFresh(indexPath: String): Array[Long] = {
-    val v0 = invalidationVersion(indexPath)
-    val arr = resolve(indexPath)
-    putIfCurrent(indexPath, v0, System.currentTimeMillis() + ttlMs, arr)
-    arr
-  }
-
-  private def resolve(indexPath: String): Array[Long] = {
-    listingCounts.computeIfAbsent(indexPath,
-      _ => new java.util.concurrent.atomic.AtomicLong).incrementAndGet()
-    val fs = new Path(indexPath).getFileSystem(new Configuration())
-    val gens = generationFiles(indexPath, fs)
-    if (gens.nonEmpty) readBin(gens.maxBy(genOrder), fs)
-    else {
-      val legacyBin = new Path(indexPath, "tombstones.bin")
-      if (fs.exists(legacyBin)) readBin(legacyBin, fs)
-      else legacyTxt(indexPath, fs)
-    }
-  }
-
-  private def readBin(p: Path,
-      fs: org.apache.hadoop.fs.FileSystem): Array[Long] = {
-    val st = fs.getFileStatus(p)
-    val stamp = st.getModificationTime ^ (st.getLen << 20)
-    val key = p.toString
-    cache.get(key) match {
-      case Some((s, arr)) if s == stamp => arr
-      case _ =>
-        val in = new DataInputStream(new BufferedInputStream(fs.open(p)))
-        val arr =
-          try {
-            require(in.readInt() == AnnIndex.TombstoneMagic,
-              s"$p is not a graft tombstone file")
-            val n = in.readInt()
-            val a = new Array[Long](n)
-            var i = 0
-            while (i < n) { a(i) = in.readLong(); i += 1 }
-            a
-          } finally in.close()
-        if (cache.size >= MaxEntries) cache.clear() // unbounded paths guard
-        cache.put(key, (stamp, arr))
-        arr
-    }
-  }
-
-  /** Pre-round-3 indexes stored deletes as `tombstones.txt` (one id per
-    * line); read it when no packed file exists, so old deletions stay
-    * hidden and the next delete() migrates them into the bin format.
-    * Cached like the bin path (the probe path would otherwise re-read
-    * the file per task); lines are trimmed (CRLF tolerance). */
-  private def legacyTxt(indexPath: String,
-      fs: org.apache.hadoop.fs.FileSystem): Array[Long] = {
-    val p = new Path(indexPath, "tombstones.txt")
-    if (!fs.exists(p)) Array.emptyLongArray
-    else {
-      val st = fs.getFileStatus(p)
-      val stamp = st.getModificationTime ^ (st.getLen << 20)
-      val key = p.toString
-      cache.get(key) match {
-        case Some((s, arr)) if s == stamp => arr
-        case _ =>
-          val in = scala.io.Source.fromInputStream(fs.open(p), "UTF-8")
-          val arr =
-            try in.getLines().map(_.trim).filter(_.nonEmpty)
-              .map(_.toLong).toArray.sorted
-            finally in.close()
-          if (cache.size >= MaxEntries) cache.clear()
-          cache.put(key, (stamp, arr))
-          arr
-      }
-    }
-  }
 }

@@ -165,6 +165,8 @@ object IvfIndex {
         .repartition(1)
         .write.mode(SaveMode.Overwrite).parquet(s"$outPath/codebook")
     }
+    Tombstones.init(outPath,
+      new Path(outPath).getFileSystem(spark.sessionState.newHadoopConf()))
     writeManifest(outPath,
       Manifest(idCol, vecCol, params.metric, cents.length, params.pq.isDefined))
     cents
@@ -224,10 +226,14 @@ object IvfIndex {
     AnnIndex.tombstones(indexPath)
 
   /** Tombstone-skip filter over a cells frame: rows whose id is in the
-    * packed tombstone file vanish from every search. Resolved on the
-    * executors (TTL-cached file read + binary search per row — no
-    * driver-held set on the probe path); sits ABOVE the partitioned
-    * scan so partition pruning / DPP on cell_id are untouched. */
+    * newest tombstone generation vanish from every search. The
+    * generation is pinned here, when the frame is built — the moment
+    * [[cellsBranches]] pins its batches — and read on the executors
+    * each time the frame runs, or a newer one written since, so a
+    * delete after the build is still seen (one file read per task +
+    * binary search per row — no driver-held set on the probe path);
+    * sits ABOVE the partitioned scan so partition pruning / DPP on
+    * cell_id are untouched. */
   private def liveOnly(df: DataFrame, idCol: String,
       indexPath: String): DataFrame =
     df.filter(graft.functions.tombstone_live(col(idCol), indexPath))
@@ -413,7 +419,8 @@ object IvfIndex {
     val man = readManifest(indexPath)
     val root = new Path(indexPath)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val names = fs.listStatus(root).map(_.getPath.getName)
+    val listing = fs.listStatus(root)
+    val names = listing.map(_.getPath.getName)
     val committedIds = names.collect {
       case GenMarker(gen, id) if gen == man.cellsDir => id.toLong
     }.sorted
@@ -428,11 +435,7 @@ object IvfIndex {
       }
     // tombstoned rows are also fold work: consolidation doubles as the
     // IVF vacuum, physically reclaiming deleted rows (the graph path's
-    // [[AnnIndex.vacuum]] analog). Fresh read — folding against a
-    // <TTL-stale cached set would bake a just-deleted row into the new
-    // generation (it would still be FILTERED at probe time, since the
-    // tombstone files survive consolidation, and reclaimed by the next
-    // fold — but the fresh read makes reclamation deterministic).
+    // [[AnnIndex.vacuum]] analog), read from a FRESH listing.
     // Convergence: tombstone FILES outlive the fold (in-flight readers
     // of the previous generation need them), so "tombstones exist" is
     // not fold work — only tombstone GENERATIONS newer than the
@@ -443,49 +446,9 @@ object IvfIndex {
     // into the watermark without its ids being in the fold — those
     // rows would then never be reclaimed (the next consolidate sees
     // tsGen <= watermark and no-ops).
-    val tsFiles = TombstoneCache.generationFiles(indexPath, fs)
-    val tsGenListed = tsFiles
-      .flatMap(p => TombstoneCache.generationNumber(p.getName))
-      .foldLeft(-1L)(math.max)
-    val dead: Array[Long] =
-      if (tsFiles.isEmpty) Array.emptyLongArray
-      else TombstoneCache.readPinned(tsFiles.maxBy(TombstoneCache.genOrder), fs)
-    // legacy clock-named tombstone files (pre-generation-numbering)
-    // carry no generation, so tsGen would stay -1 and the fresh-deletes
-    // test below would never fire: deletes recorded ONLY in such files
-    // were filtered at probe time but never physically reclaimed, and
-    // the `_tsfolded` watermark write would skip them. Normalize on
-    // first touch — the same migration delete() performs on its write
-    // path: the pinned dead set becomes numbered generation 1, the
-    // clock-named files go away, and the regular watermark machinery
-    // takes over from here.
-    var deadSet = dead
-    val tsGen =
-      if (dead.isEmpty || tsGenListed >= 0) tsGenListed
-      else {
-        try {
-          val next = TombstoneCache.nextGeneration(indexPath, fs)
-          TombstoneCache.writeGeneration(indexPath, fs, next, dead)
-          tsFiles.foreach(fs.delete(_, false))
-          TombstoneCache.invalidateListing(indexPath)
-          next
-        } catch {
-          case _: java.io.IOException =>
-            // a concurrent delete() migrated first (its write path
-            // merges the legacy ids, so its generation is a superset).
-            // Adopt ITS newest generation AND its pinned dead set from
-            // one fresh listing — stamping a generation whose ids are
-            // not all in this fold would leave rows filtered forever
-            // but never reclaimed.
-            val fresh = TombstoneCache.generationFiles(indexPath, fs)
-            deadSet =
-              if (fresh.isEmpty) Array.emptyLongArray
-              else TombstoneCache.readPinned(
-                fresh.maxBy(TombstoneCache.genOrder), fs)
-            fresh.flatMap(p => TombstoneCache.generationNumber(p.getName))
-              .foldLeft(-1L)(math.max)
-        }
-      }
+    val newestTs = Tombstones.generations(indexPath, listing).lastOption
+    val tsGen = newestTs.fold(-1L)(_._1)
+    val deadSet = newestTs.fold(Array.emptyLongArray)(g => Tombstones.read(g._2))
     val hasFreshDeletes = deadSet.nonEmpty &&
       tsGen > tsFoldedUpto(names, man.cellsDir)
     val foldable = hasBatches || hasFreshDeletes
@@ -534,8 +497,8 @@ object IvfIndex {
     val folded = cellsBranches(spark, indexPath, man.cellsDir)
       .reduce(_ unionByName _)
     // drop tombstoned rows via a broadcast anti-join against the
-    // driver-read set (this is the WRITE path — deterministic, no TTL;
-    // deletes are rare events so the set broadcasts at any real size)
+    // driver-read set (deletes are rare events so the set broadcasts at
+    // any real size)
     val live = if (deadSet.isEmpty) folded else {
       import spark.implicits._
       val deadDf = spark.createDataset(deadSet.toSeq).toDF("__dead_id")

@@ -8,23 +8,23 @@ import graft.plans.Bm25Scan
 /** BM25 full-text ranking (reference: lantern_extras/src/bm25_agg.rs and
   * bm25_api.sql).
   *
-  * Spark-first design: instead of the reference's per-term posting-array
-  * table probed by a custom aggregate, the index is a flat postings
-  * DataFrame `(term, doc_id, fq, doc_len)` — the shape Spark shuffles and
-  * prunes best. Search is: filter postings to the query terms (predicate
-  * pushdown on `term` when the postings table is persisted partitioned/
-  * sorted by term), join document frequencies (broadcast — one row per
-  * query term), score each posting, partial-aggregate per doc (map-side
-  * combine), global top-k (TakeOrderedAndProject). No full shuffle of the
-  * corpus ever happens at search time; the only shuffle is on doc_id for
-  * the hit set. At 100 TB the postings table is bucketed by term.
+  * Two search paths:
+  *  - exact ([[searchBm25]] / [[searchBm25Of]]): the index is a flat
+  *    postings DataFrame `(term, doc_id, fq, doc_len)` — the shape Spark
+  *    shuffles and prunes best. Filter postings to the query terms, join
+  *    document frequencies (broadcast — one row per query term), score
+  *    each posting, partial-aggregate per doc (map-side combine — the
+  *    parallel `combine` the reference never implemented,
+  *    bm25_agg.rs:297-310), global top-k. The only shuffle is on doc_id
+  *    for the hit set.
+  *  - approximate ([[searchBm25Approx]]): the reference's own search
+  *    over its reference-shaped side table ([[createBm25Table]]), with
+  *    the popular-term approximation (bm25_agg.rs:162-188), planned as
+  *    one [[graft.plans.Bm25Scan]].
   *
-  * The reference's bloom-filter approximation for popular terms
-  * (bm25_agg.rs:162-188) exists to bound a single Postgres backend's
-  * memory; Spark's distributed aggregate replaces it, so scoring here is
-  * exact (the reference's exact path). The reference also never
-  * implemented the aggregate's parallel `combine` (bm25_agg.rs:297-310);
-  * Spark's sum-merge IS that combine.
+  * Every per-posting score, on either path and in [[bm25Score]], is
+  * [[postingScore]] / [[postingScoreOf]]: the same operations in the
+  * same order with `StrictMath.log`, so the bits agree across paths.
   */
 object Bm25 {
 
@@ -257,21 +257,15 @@ object Bm25 {
         .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     qTerms.iterator
       .filter(fq.contains)
-      .map { t =>
-        val df = dfs.getOrElse(t, 0.0)
-        val f = fq(t).toDouble
-        math.log((n - df + 0.5) / (df + 0.5) + 1.0) *
-          (f * (params.k1 + 1.0)) /
-          (f + params.k1 * (1.0 - params.b + params.b * dLen / avgdl))
-      }
+      .map(t => postingScoreOf(fq(t).toDouble, dLen, n, dfs.getOrElse(t, 0.0),
+        avgdl, params))
       .sum
   }
 
   /** The reference's popular-term APPROXIMATE search over a
-    * reference-shaped [[createBm25Table]] table — the opt-in fidelity
-    * mode for score parity with reference deployments running the
-    * approximation (bm25_agg.rs:162-188 state_base, 311-401 finalize;
-    * exact scoring stays this library's default). It plans one
+    * reference-shaped [[createBm25Table]] table — the reference's own
+    * search (bm25_agg.rs:162-188 state_base, 311-401 finalize), for
+    * score parity with reference deployments. It plans one
     * [[graft.plans.Bm25Scan]] node: the query terms' rows and the
     * `term IS NULL` stats row are read in one task, with the filter
     * pushed into the scan, no driver action and no exchange, and ranked
@@ -342,29 +336,15 @@ object Bm25 {
     terms.unionByName(stats)
   }
 
-  /** Score pre-filtered postings and return top-k (doc_id, score).
-    *
-    * `approxThreshold` > 0 enables the reference's popular-term
-    * approximation (bm25_agg.rs:162-188, GUC default 8000): terms with
-    * more postings than the threshold score every posting with fq=1 and
-    * doc_len=avg_doc_len. The reference needs it to bound one backend's
-    * hashmap; Spark's distributed aggregate doesn't, so it is OFF by
-    * default and exists for score-parity with approximated reference
-    * deployments (it also lets Catalyst fold the popular-term score to
-    * a constant per term). */
+  /** Score pre-filtered postings exactly and return top-k
+    * (doc_id, score). */
   def scoreAndRank(queryPostings: DataFrame, stats: DataFrame, k: Int,
-      params: Params = Params(), approxThreshold: Int = 0): DataFrame = {
+      params: Params = Params()): DataFrame = {
     val dfreq = queryPostings.groupBy(col("term"))
       .agg(count(lit(1)).cast("double").as("doc_freq"))
-    val exactScore = postingScore(col("fq").cast("double"),
+    val score = postingScore(col("fq").cast("double"),
       col("doc_len").cast("double"), col("n_docs"), col("doc_freq"),
       col("avg_doc_len"), params)
-    val score =
-      if (approxThreshold <= 0) exactScore
-      else when(col("doc_freq") > approxThreshold,
-        postingScore(lit(1.0), col("avg_doc_len"), col("n_docs"),
-          col("doc_freq"), col("avg_doc_len"), params))
-        .otherwise(exactScore)
     queryPostings
       .join(broadcast(dfreq), "term")
       .crossJoin(broadcast(stats))

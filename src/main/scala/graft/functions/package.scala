@@ -95,11 +95,13 @@ package object functions {
       planes.flatten.toArray, dim))
   }
 
-  /** true iff `id` is not tombstoned in the index at `indexPath`
-    * (executor-side resolution against the packed tombstone file — the
-    * DataFrame filter the IVF probes apply). */
+  /** true iff `id` is not tombstoned in the index at `indexPath`: the
+    * newest tombstone generation is pinned when the column is built and
+    * read executor-side, or a newer one written since (the DataFrame
+    * filter the IVF probes apply). */
   def tombstone_live(id: Column, indexPath: String): Column =
-    col(org.apache.spark.sql.graft.TombstoneLive(expr(id.cast("long")), indexPath))
+    col(org.apache.spark.sql.graft.TombstoneLive(expr(id.cast("long")), indexPath,
+      graft.ann.IndexSnapshot.tombstonesOf(indexPath)))
 
   /** Byte-level BPE token count under `tok`'s merge table (defaults to
     * the embedded-fixture tokenizer) — the real-tokenizer basis for

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.util.truncatedString
 import org.apache.spark.sql.execution.{LeafExecNode, SQLExecution, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types.{DoubleType, LongType}
-import graft.ann.{AnnIndex, ShardCache}
+import graft.ann.{AnnIndex, IndexSnapshot, ShardCache, Tombstones}
 
 /** One ANN index probe as a plan leaf (reference: the HNSW index scan
   * node, `scan.c:24-338`): every shard of the index at `indexPath`
@@ -20,9 +20,12 @@ import graft.ann.{AnnIndex, ShardCache}
   * and limits on top ([[AnnIndex.topK]]), and the [[AnnTopK]] rewrite
   * semi-joins the ids and lets the query's own Sort+Limit rank them.
   *
-  * `shards` are the shard file paths, resolved from the manifest when
-  * the node is built; [[AnnScanStrategy]] plans the node into
-  * [[AnnScanExec]]. */
+  * `shards` are the manifest's shard names when the node is built, for
+  * its statistics; the probe itself reads the [[IndexSnapshot]] that
+  * [[AnnScanExec]] resolves when the plan runs (a physical plan keeps
+  * the RDD of its first run, so a frame collected again reuses those
+  * pins; [[graft.ann.Tombstones]] still finds later deletes).
+  * [[AnnScanStrategy]] plans the node into [[AnnScanExec]]. */
 case class AnnScan(indexPath: String, shards: Seq[String], query: Array[Float],
     k: Int, ef: Int, output: Seq[Attribute])
     extends LeafNode with MultiInstanceRelation {
@@ -48,17 +51,17 @@ object AnnScan {
   /** A scan over the index's current manifest; `ef` below `k` is raised
     * to `k` (a graph walk cannot return more rows than its breadth). */
   def apply(indexPath: String, query: Array[Float], k: Int, ef: Int): AnnScan =
-    AnnScan(indexPath,
-      AnnIndex.readManifest(indexPath).shards.map(s => s"$indexPath/$s"),
-      query, k, math.max(ef, k),
+    AnnScan(indexPath, AnnIndex.readManifest(indexPath).shards, query, k, math.max(ef, k),
       Seq(AttributeReference("id", LongType, nullable = false)(),
         AttributeReference("dist", DoubleType, nullable = false)()))
 }
 
-/** Physical [[AnnScan]]: one task per shard and no exchange. Each task
-  * loads its shard through the executor's [[ShardCache]] and runs one
-  * graph search with the index's tombstone skip. Metrics: shards
-  * probed, candidates returned, the ef used and the probe time. */
+/** Physical [[AnnScan]]: one task per shard and no exchange. Its first
+  * run resolves the index's [[IndexSnapshot]] on the driver; each task
+  * loads its pinned shard through the executor's [[ShardCache]] and
+  * runs one graph search that skips the snapshot's deleted ids.
+  * Metrics: shards probed, candidates returned, the ef used and the
+  * probe time. */
 case class AnnScanExec(scan: AnnScan) extends LeafExecNode {
 
   override def output: Seq[Attribute] = scan.output
@@ -78,12 +81,13 @@ case class AnnScanExec(scan: AnnScan) extends LeafExecNode {
     val shardsProbed = longMetric("shardsProbed")
     val candidates = longMetric("candidates")
     val probeTime = longMetric("probeTime")
-    val AnnScan(idx, shards, q, kk, e, _) = scan
+    val AnnScan(idx, _, q, kk, e, _) = scan
+    val IndexSnapshot(shards, tomb) = IndexSnapshot(idx)
     val schema = this.schema
-    sparkContext.parallelize(shards, math.max(shards.size, 1)).mapPartitions { paths =>
-      val skip = AnnIndex.tombstoneSkip(idx)
+    sparkContext.parallelize(shards, math.max(shards.size, 1)).mapPartitions { pins =>
+      val skip = Tombstones.skip(idx, tomb)
       val toRow = UnsafeProjection.create(schema)
-      paths.flatMap { p =>
+      pins.flatMap { p =>
         val t0 = System.nanoTime()
         val hits = ShardCache.get(p).search(q, kk, e, skip)
         probeTime += System.nanoTime() - t0

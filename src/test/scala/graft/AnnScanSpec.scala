@@ -26,7 +26,7 @@ class AnnScanSpec extends SparkSpec {
   }
   private lazy val l2Index = build(emb, "embedding", Metric.L2Sq)
 
-  private def rewritten(indexPath: String)(body: => Unit): Unit = {
+  private def rewritten[T](indexPath: String)(body: => T): T = {
     AnnTopK.install(spark)
     AnnTopK.IndexCatalog.register(srcPath,
       AnnTopK.Entry(indexPath, "vec_id", "embedding", Metric.L2Sq))
@@ -82,6 +82,7 @@ class AnnScanSpec extends SparkSpec {
   }
 
   test("deleted ids never come back from topK or the rewrite") {
+    import spark.implicits._
     val dir = build(emb, "embedding", Metric.L2Sq)
     val before = AnnIndex.topK(spark, dir, q, 10, 600).collect().map(_.getLong(0)).toSeq
     val dead = before.take(3)
@@ -89,10 +90,73 @@ class AnnScanSpec extends SparkSpec {
     val after = AnnIndex.topK(spark, dir, q, 10, 600).collect().map(_.getLong(0)).toSeq
     assert(after.size == 10 && after.intersect(dead).isEmpty)
     assert(after == before.drop(3) ++ after.drop(7), "the survivors keep their order")
-    rewritten(dir) {
+    def viaRule(): Seq[Long] = rewritten(dir) {
       spark.conf.set(AnnTopK.EfConfKey, "600")
-      val viaRule = topkQuery(10).collect().map(_.getAs[Long]("vec_id")).toSeq
-      assert(viaRule == after)
+      topkQuery(10).collect().map(_.getAs[Long]("vec_id")).toSeq
+    }
+    assert(viaRule() == after)
+    // another process deletes one more id: it writes the next generation
+    // on shared storage, and every probe path hides it on its next probe
+    val remote = after.head
+    AnnScanSpec.writeGeneration(dir, 2, dead :+ remote)
+    val afterRemote = AnnIndex.topK(spark, dir, q, 10, 600).collect().map(_.getLong(0)).toSeq
+    assert(!afterRemote.contains(remote) && afterRemote.take(9) == after.tail)
+    assert(viaRule() == afterRemote)
+    val joined = AnnIndex.topKJoin(Seq((0L, q.toSeq)).toDF("qid", "qv"), "qid", "qv", dir,
+        k = 10, ef = 600)
+      .orderBy("rank").collect().map(_.getLong(1)).toSeq
+    assert(joined == afterRemote)
+  }
+
+  test("a frame collected again hides later deletes, or fails once its generation is pruned") {
+    import spark.implicits._
+    val dir = build(emb, "embedding", Metric.L2Sq)
+    val frame = AnnIndex.topK(spark, dir, q, 10, 600)
+    val queries = Seq((0L, q.toSeq)).toDF("qid", "qv")
+    val joinFrame = AnnIndex.topKJoin(queries, "qid", "qv", dir, k = 10, ef = 600)
+    val first = frame.collect().map(_.getLong(0)).toSeq // pins generation 0
+    def joined(): Seq[Long] =
+      joinFrame.collect().sortBy(_.getInt(3)).map(_.getLong(1)).toSeq
+    assert(joined() == first)
+    // two deletes: the second prunes the pinned generation 0, and both
+    // frames still find the newest generation by name
+    for (n <- 1 to 2) {
+      AnnIndex.delete(spark, dir, Seq(first(n - 1)))
+      val again = frame.collect().map(_.getLong(0)).toSeq
+      assert(again.size == 10 && again.intersect(first.take(n)).isEmpty, s"after delete $n: $again")
+      assert(again.take(10 - n) == first.drop(n), "the survivors keep their order")
+      assert(joined() == again, s"topKJoin after delete $n")
+    }
+    // a third delete prunes generation 1 too: no name leads from the pin
+    // to the newest generation, so both frames fail naming the pin
+    AnnIndex.delete(spark, dir, Seq(first(2)))
+    for (run <- Seq(() => frame.collect(), () => joinFrame.collect())) {
+      val e = intercept[Exception](run())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+      assert(msgs.exists(m => m != null && m.contains(s"$dir/tombstones-g000000000000.bin")),
+        e.getMessage)
+    }
+    val fresh = AnnIndex.topK(spark, dir, q, 10, 600).collect().map(_.getLong(0)).toSeq
+    assert(fresh.take(7) == first.drop(3), "a new frame pins anew")
+  }
+
+  test("a shard the manifest names but storage lost fails the probe naming the file") {
+    val dir = build(emb, "embedding", Metric.L2Sq)
+    val lost = s"$dir/${AnnIndex.readManifest(dir).shards.last}"
+    assert(new java.io.File(lost).delete())
+    def failsNaming(run: => Any): Unit = {
+      val e = intercept[Exception](run)
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+      assert(msgs.exists(m => m != null && m.contains(lost)), e.getMessage)
+    }
+    failsNaming(AnnIndex.topK(spark, dir, q, 10, 64).collect())
+    // the rewrite still fires (the manifest reads fine) and the probe
+    // fails; it never falls back to an exact scan in silence
+    rewritten(dir) {
+      spark.conf.set(AnnTopK.EfConfKey, "64")
+      val df = topkQuery(10)
+      assert(df.queryExecution.optimizedPlan.exists(_.isInstanceOf[AnnScan]))
+      failsNaming(df.collect())
     }
   }
 
@@ -123,5 +187,19 @@ class AnnScanSpec extends SparkSpec {
     assert(self.select(col("x.id")).collect().map(_.getLong(0)).toSet == ids)
     val pair = a.join(b, a("id") === b("id")).select(a("id"), b("dist"))
     assert(pair.collect().map { case Row(id: Long, _: Double) => id }.toSet == ids)
+  }
+}
+
+object AnnScanSpec {
+  /** Write tombstone generation `gen` as another process would: magic,
+    * count, sorted ids. */
+  def writeGeneration(dir: String, gen: Long, ids: Seq[Long]): Unit = {
+    val out = new java.io.DataOutputStream(new java.io.FileOutputStream(
+      f"$dir/tombstones-g$gen%012d.bin"))
+    try {
+      out.writeInt(0x47544f4d)
+      out.writeInt(ids.distinct.size)
+      ids.distinct.sorted.foreach(out.writeLong)
+    } finally out.close()
   }
 }

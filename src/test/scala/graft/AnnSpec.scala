@@ -121,6 +121,33 @@ class AnnSpec extends SparkSpec {
     assert(vres == after)
   }
 
+  test("a same-path rebuild answers from the new shards") {
+    val dir = Files.createTempDirectory("annrebuild").toString
+    buildIndex(dir)
+    val q = corpus.head._2
+    val topFrame = AnnIndex.topK(spark, dir, q, 5, ef = 600)
+    topFrame.collect() // caches the first build's graphs
+    val queries = emb.filter(col("vec_id") === corpus.head._1)
+    val joinFrame = AnnIndex.topKJoin(queries, "vec_id", "embedding", dir, k = 5, ef = 600)
+    // rebuild at the same path (same shard names) from ids 1000-1199
+    val second = emb.filter(col("vec_id") < 200).withColumn("vec_id", col("vec_id") + 1000)
+    AnnIndex.build(second, "vec_id", "embedding", dir,
+      AnnIndex.Params(Metric.L2Sq, m = 16, efConstruction = 128, numShards = 4))
+    val want = corpus.filter(_._1 < 200)
+      .map { case (id, v) => (id + 1000, Metric.L2Sq.dist(q, v)) }
+      .sortBy(x => (x._2, x._1)).take(5).map(_._1).toSeq
+    assert(AnnIndex.topK(spark, dir, q, 5, ef = 600).collect().map(_.getLong(0)).toSeq == want)
+    val joined = AnnIndex.topKJoin(queries, "vec_id", "embedding", dir, k = 5, ef = 600)
+      .orderBy("rank").collect().map(_.getLong(1)).toSeq
+    assert(joined == want)
+    // frames that pinned the first build's shards fail naming one
+    for (run <- Seq(() => topFrame.collect(), () => joinFrame.collect())) {
+      val e = intercept[Exception](run())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+      assert(msgs.exists(m => m != null && m.contains(s"$dir/shard_")), e.getMessage)
+    }
+  }
+
   test("vacuum is distributed: survivors plan is RDD-backed, one partition per shard") {
     val dir = Files.createTempDirectory("annvacdist").toString
     val man = buildIndex(dir)
@@ -162,55 +189,58 @@ class AnnSpec extends SparkSpec {
     val dir = Files.createTempDirectory("anngen").toString
     buildIndex(dir)
     AnnIndex.delete(spark, dir, Seq(1L))
-    // simulate a stale pre-round-4 clock-named generation whose name
-    // sorts after every realistic nanoTime (the old scheme's failure
-    // mode: a JVM with a larger clock origin wrote first, a freshly
-    // booted JVM deletes later with a smaller stamp and its deletes
-    // are served stale / pruned). Numbered generations must win.
-    val stale = new java.io.DataOutputStream(new java.io.FileOutputStream(
-      s"$dir/tombstones-9999999999999999998.bin"))
-    try {
-      stale.writeInt(0x47544f4d) // TombstoneMagic
-      stale.writeInt(1)
-      stale.writeLong(999L) // a deletion that never happened
-    } finally stale.close()
     AnnIndex.delete(spark, dir, Seq(2L))
-    // the newer numbered generation wins: both real deletes visible,
-    // the stale clock-named file ignored (and pruned)
-    assert(AnnIndex.tombstones(dir).toSet == Set(1L, 2L))
-    assert(!new java.io.File(s"$dir/tombstones-9999999999999999998.bin").exists())
-    // generation files are numbered g1, g2, ...
+    AnnIndex.delete(spark, dir, Seq(3L))
+    // each delete writes the next numbered generation (parsed from
+    // storage, never a clock) holding the full set; the newest two stay
+    assert(AnnIndex.tombstones(dir).toSet == Set(1L, 2L, 3L))
     val names = new java.io.File(dir).list().filter(_.startsWith("tombstones-")).sorted
-    assert(names.forall(_.matches("tombstones-g\\d{12}\\.bin")), names.mkString(","))
+    assert(names.toSeq == Seq("tombstones-g000000000002.bin", "tombstones-g000000000003.bin"),
+      names.mkString(","))
   }
 
-  test("steady-state probes never re-list the tombstone directory (TTL cache)") {
-    val dir = Files.createTempDirectory("annlist").toString
-    buildIndex(dir)
-    // pin a long TTL so the assertion can't race the deadline on a
-    // slow/loaded host (the default is 10s)
-    val prevTtl = sys.props.get(graft.ann.TombstoneCache.TtlProp)
-    sys.props(graft.ann.TombstoneCache.TtlProp) = "3600000"
-    try {
-      val q = corpus.head._2
-      AnnIndex.topK(spark, dir, q, 5, ef = 64).collect() // warms the listing cache
-      val before = graft.ann.TombstoneCache.listingCount(dir)
-      (0 until 3).foreach(_ => AnnIndex.topK(spark, dir, q, 5, ef = 64).collect())
-      assert(graft.ann.TombstoneCache.listingCount(dir) == before,
-        "tombstone-free probes must not pay a listStatus per task")
-      // a same-JVM delete invalidates immediately: the next probe
-      // re-lists and the deleted row disappears even within the TTL
-      val top = AnnIndex.topK(spark, dir, q, 5, ef = 600)
-        .collect().map(_.getLong(0)).toSeq
-      AnnIndex.delete(spark, dir, Seq(top.head))
-      val after = AnnIndex.topK(spark, dir, q, 5, ef = 600)
-        .collect().map(_.getLong(0)).toSeq
-      assert(!after.contains(top.head))
-    } finally {
-      prevTtl match {
-        case Some(v) => sys.props(graft.ann.TombstoneCache.TtlProp) = v
-        case None => sys.props.remove(graft.ann.TombstoneCache.TtlProp)
+  test("a tombstone file of an earlier format fails probes and deletes naming it") {
+    val dir = Files.createTempDirectory("annlegacy").toString
+    buildIndex(dir, 2)
+    val q = corpus.head._2
+    for (name <- Seq("tombstones.txt", "tombstones.bin", "tombstones-1699999999999.bin")) {
+      val f = new java.io.File(dir, name)
+      java.nio.file.Files.write(f.toPath, Array[Byte](1, 2, 3))
+      def failsNaming(run: => Any): Unit = {
+        val e = intercept[Exception](run)
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+        assert(msgs.exists(m => m != null && m.contains(s"$dir/$name")), e.getMessage)
       }
+      failsNaming(AnnIndex.topK(spark, dir, q, 5, ef = 64).collect())
+      failsNaming(AnnIndex.delete(spark, dir, Seq(1L)))
+      failsNaming(AnnIndex.tombstones(dir))
+      assert(f.delete())
+    }
+    assert(AnnIndex.topK(spark, dir, q, 5, ef = 64).collect().length == 5)
+  }
+
+  test("one driver listing per probe, whatever the shard count") {
+    for (shards <- Seq(1, 4)) {
+      val dir = Files.createTempDirectory(s"annlist$shards").toString
+      buildIndex(dir, shards)
+      val q = corpus.head._2
+      val queries = emb.filter(col("vec_id") < 3).select("vec_id", "embedding")
+      def listingsOf(probe: => Unit): Long = {
+        val before = graft.ann.IndexSnapshot.listingCount(dir)
+        probe
+        graft.ann.IndexSnapshot.listingCount(dir) - before
+      }
+      // the driver lists the index directory once per probe; executors
+      // (same JVM in local mode) list nothing, with or without deletes
+      val top = AnnIndex.topK(spark, dir, q, 5, ef = 600).collect().map(_.getLong(0)).toSeq
+      assert(listingsOf(AnnIndex.topK(spark, dir, q, 5, ef = 64).collect()) == 1)
+      assert(listingsOf(AnnIndex.topKJoin(queries, "vec_id", "embedding", dir, 5).collect()) == 1)
+      AnnIndex.delete(spark, dir, Seq(top.head))
+      var after = Seq.empty[Long]
+      assert(listingsOf {
+        after = AnnIndex.topK(spark, dir, q, 5, ef = 600).collect().map(_.getLong(0)).toSeq
+      } == 1, s"$shards shards")
+      assert(!after.contains(top.head))
     }
   }
 
@@ -218,20 +248,14 @@ class AnnSpec extends SparkSpec {
     val dir = Files.createTempDirectory("annfresh").toString
     buildIndex(dir)
     val q = corpus.head._2
-    // warm THIS JVM's listing cache with the empty tombstone set
+    // probe once: this JVM has seen the index with no tombstones
     AnnIndex.topK(spark, dir, q, 5, ef = 64).collect()
     // another JVM deletes id 7: a new generation appears on shared
-    // storage without any local invalidation
-    val remote = new java.io.DataOutputStream(new java.io.FileOutputStream(
-      s"$dir/tombstones-g000000000001.bin"))
-    try {
-      remote.writeInt(0x47544f4d)
-      remote.writeInt(1)
-      remote.writeLong(7L)
-    } finally remote.close()
-    // a local delete within the TTL must still see and carry forward
-    // the remote delete (merging the stale cached set would resurrect
-    // id 7 in the winning generation)
+    // storage without this JVM knowing
+    AnnScanSpec.writeGeneration(dir, 1, Seq(7L))
+    // a local delete must still see and carry forward the remote
+    // delete (merging the set this JVM saw last would resurrect id 7
+    // in the winning generation)
     AnnIndex.delete(spark, dir, Seq(11L))
     assert(AnnIndex.tombstones(dir).toSet == Set(7L, 11L))
   }

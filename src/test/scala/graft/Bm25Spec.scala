@@ -50,28 +50,6 @@ class Bm25Spec extends SparkSpec {
       "nothing relevant here", "spark join") == 0.0)
   }
 
-  test("popular-term approximation changes scores only above the threshold") {
-    val tok = Bm25.tokenized(docs, col("doc_id"), col("text"))
-    val post = Bm25.postingsOf(tok)
-      .filter(col("term").isin("spark", "join"))
-    val stats = Bm25.corpusStatsOf(tok)
-    val exact = Bm25.scoreAndRank(post, stats, 100000)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-    // threshold above every doc_freq -> identical to exact
-    val same = Bm25.scoreAndRank(post, stats, 100000, approxThreshold = 1000000)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-    assert(same == exact)
-    // threshold 1 -> every posting scores with fq=1/len=avgdl, so scores
-    // collapse to one value per term-membership class ({spark}, {join},
-    // {both}) - at most 3 distinct scores across the whole corpus
-    val approx = Bm25.scoreAndRank(post, stats, 100000, approxThreshold = 1)
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    assert(approx.nonEmpty)
-    assert(approx.map(x => BigDecimal(x._2).setScale(9,
-      BigDecimal.RoundingMode.HALF_UP)).distinct.length <= 3)
-    assert(approx.map(_._1).toSet == exact.keySet) // same doc set, new scores
-  }
-
   test("searchBm25Approx: deferral, substituted constants, candidate heap") {
     import spark.implicits._
     // 'rare' in docs 0..2 (df 3), 'pop' in every doc (df 300, > the 200

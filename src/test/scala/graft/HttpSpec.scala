@@ -182,6 +182,30 @@ class HttpSpec extends SparkSpec {
     }
   }
 
+  test("an index dropped and created again under its name serves the new rows") {
+    withServer() { port =>
+      assert(req(port, "POST", "/collections", """{"name": "re"}""")._1 == 200)
+      insertCorpus(port, "re")
+      val create = """{"column": "vector", "metric": "l2sq", "m": 8,
+           "ef_construction": 64, "ef": 64, "name": "re_idx"}"""
+      val search = """{"column": "vector", "query_vector": [0,0,0,0], "k": 2,
+           "select": "data"}"""
+      def top2(): List[String] = {
+        val (st, res) = req(port, "POST", "/collections/re/search", search)
+        assert(st == 200, res)
+        rowsOf(res).map(r => r("data").asInstanceOf[JString].s)
+      }
+      assert(req(port, "POST", "/collections/re/index", create)._1 == 200)
+      assert(top2() == List("origin", "mid"))
+      // a row the first build never saw, then the same index name again
+      assert(req(port, "PUT", "/collections/re",
+        """{"rows": [{"vector": [0,0,0,0.0625], "data": "post-index"}]}""")._1 == 200)
+      assert(req(port, "DELETE", "/index/re_idx")._1 == 200)
+      assert(req(port, "POST", "/collections/re/index", create)._1 == 200)
+      assert(top2() == List("origin", "post-index"))
+    }
+  }
+
   test("pq endpoint trains a codebook; pq index search works") {
     withServer() { port =>
       assert(req(port, "POST", "/collections", """{"name": "pqc"}""")._1 == 200)

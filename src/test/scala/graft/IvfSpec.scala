@@ -785,51 +785,51 @@ class IvfSpec extends SparkSpec {
     assert(genFiles.length <= 2, s"generations not pruned: ${genFiles.toSeq}")
   }
 
-  test("legacy clock-named tombstone files are migrated and reclaimed by consolidate") {
+  test("IVF topK hides a generation another process wrote, on the next probe") {
     import spark.implicits._
     val pts = clusterPts(13)
-    val df = pts.toDF("id", "v")
-    val dir = Files.createTempDirectory("ivflegacy").toString
-    IvfIndex.build(df, "id", "v", dir,
+    val dir = Files.createTempDirectory("ivfremote").toString
+    IvfIndex.build(pts.toDF("id", "v"), "id", "v", dir,
       IvfIndex.Params(nCells = 8, sampleLimit = pts.length, seed = 2L))
     val q = pts.head._2.toArray
     val ranked = pts.map { case (id, v) =>
-      (id, Metric.L2Sq.dist(q, v.toArray)) }.sortBy(x => (x._2, x._1))
-    val top2 = ranked.take(2).map(_._1).sorted
-    // plant a PRE-generation clock-named tombstone file (the round-4
-    // format): magic + count + sorted ids, no generation number
-    val legacy = new java.io.File(dir, "tombstones-1699999999999.bin")
-    val out = new java.io.DataOutputStream(
-      new java.io.FileOutputStream(legacy))
-    try {
-      out.writeInt(0x47544f4d)
-      out.writeInt(top2.length)
-      top2.foreach(out.writeLong)
-    } finally out.close()
+      (id, Metric.L2Sq.dist(q, v.toArray)) }.sortBy(x => (x._2, x._1)).map(_._1)
+    def probe(): Seq[Long] = IvfIndex.topK(spark, dir, q, 10, nprobe = 8)
+      .collect().map(_.getLong(0)).toSeq
+    assert(probe() == ranked.take(10))
+    IvfIndex.delete(spark, dir, Seq(ranked.head))
+    assert(probe() == ranked.slice(1, 11))
+    AnnScanSpec.writeGeneration(dir, 2, ranked.take(2))
+    assert(probe() == ranked.slice(2, 12))
+    assert(IvfIndex.tombstones(dir) == ranked.take(2).sorted)
+  }
 
-    // probes filter through legacy files (pre-fix behavior, unchanged)
-    val expect = ranked.slice(2, 12).map(_._1).toSeq
-    assert(IvfIndex.topK(spark, dir, q, 10, nprobe = 8)
-      .collect().map(_.getLong(0)).toSeq == expect)
-
-    // THE fix: a dead set recorded only in legacy files is still fold
-    // work — consolidate must not report "nothing to do"
-    assert(IvfIndex.consolidate(spark, dir),
-      "legacy-only deletes were not treated as fold work")
-    val man = IvfIndex.readManifest(dir)
-    val genIds = spark.read.parquet(s"$dir/${man.cellsDir}")
-      .select("id").collect().map(_.getLong(0)).toSet
-    assert(top2.forall(id => !genIds.contains(id)),
-      "legacy-recorded deletes were not physically reclaimed")
-    // the clock-named file was migrated to a numbered generation
-    val names = new java.io.File(dir).listFiles().map(_.getName)
-    assert(!names.contains(legacy.getName))
-    assert(names.exists(_.startsWith("tombstones-g")))
-    // the watermark now covers the migrated generation: a second
-    // consolidate with nothing new is a no-op, not a corpus rewrite
-    assert(!IvfIndex.consolidate(spark, dir))
-    assert(IvfIndex.topK(spark, dir, q, 10, nprobe = 8)
-      .collect().map(_.getLong(0)).toSeq == expect)
+  test("IVF: a topK frame collected again hides later deletes, or fails once its generation is pruned") {
+    import spark.implicits._
+    val pts = clusterPts(16)
+    val dir = Files.createTempDirectory("ivfreuse").toString
+    IvfIndex.build(pts.toDF("id", "v"), "id", "v", dir,
+      IvfIndex.Params(nCells = 8, sampleLimit = pts.length, seed = 2L))
+    val q = pts.head._2.toArray
+    val ranked = pts.map { case (id, v) =>
+      (id, Metric.L2Sq.dist(q, v.toArray)) }.sortBy(x => (x._2, x._1)).map(_._1)
+    val frame = IvfIndex.topK(spark, dir, q, 10, nprobe = 8) // pins generation 0
+    assert(frame.collect().map(_.getLong(0)).toSeq == ranked.take(10))
+    // the second delete prunes generation 0; the frame still finds the
+    // newest generation by name
+    for (n <- 1 to 2) {
+      IvfIndex.delete(spark, dir, Seq(ranked(n - 1)))
+      assert(frame.collect().map(_.getLong(0)).toSeq == ranked.slice(n, n + 10),
+        s"after delete $n")
+    }
+    // the third prunes generation 1 as well: the frame fails naming its pin
+    IvfIndex.delete(spark, dir, Seq(ranked(2)))
+    val e = intercept[Exception](frame.collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(msgs.exists(m => m != null && m.contains(s"$dir/tombstones-g000000000000.bin")),
+      e.getMessage)
+    assert(IvfIndex.topK(spark, dir, q, 10, nprobe = 8).collect().map(_.getLong(0)).toSeq ==
+      ranked.slice(3, 13), "a new frame pins anew")
   }
 
   test("IVFADC probe skips tombstones") {
