@@ -1,10 +1,12 @@
 package graft
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.Path
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{ExplainMode, LogicalRDD}
+import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.graft.Bridge
 
 /** The measurement harness over the driver contract, one mode per
@@ -226,16 +228,22 @@ object Bench {
     if (mode != Mode.All) spark.stop()
   }
 
-  /** Memory + disk bytes the block manager holds for a frame's
-    * persisted column buffers or checkpointed `LogicalRDD`. */
+  /** The bytes a frame holds: memory + disk bytes the block manager
+    * holds for a persisted frame's column buffers, the part files'
+    * bytes (stat'ed now, not the scan's listing) for a parquet leaf. */
   private def heldBytes(spark: SparkSession, df: DataFrame): Long = {
-    val ids = df.queryExecution.withCachedData.collect {
+    val conf = spark.sessionState.newHadoopConf()
+    df.queryExecution.withCachedData.collect {
       case r: InMemoryRelation if r.cacheBuilder.isCachedColumnBuffersLoaded =>
-        r.cacheBuilder.cachedColumnBuffers.id
-      case l: LogicalRDD => l.rdd.id
-    }.toSet
-    spark.sparkContext.getRDDStorageInfo.filter(i => ids(i.id))
-      .map(i => i.memSize + i.diskSize).sum
+        val id = r.cacheBuilder.cachedColumnBuffers.id
+        spark.sparkContext.getRDDStorageInfo.filter(_.id == id)
+          .map(i => i.memSize + i.diskSize).sum
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) =>
+        r.inputFiles.map { f =>
+          val p = new Path(f)
+          p.getFileSystem(conf).getFileStatus(p).getLen
+        }.sum
+    }.sum
   }
 
   private def all(spark: SparkSession, sfDir: String): Unit = {

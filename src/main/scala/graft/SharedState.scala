@@ -8,13 +8,12 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.storage.StorageLevel
 
 /** The per-JVM registry of build-once artifacts shared between
-  * driver-contract queries: persisted frames (e.g. MinHash signatures
-  * reused by the minhash / LSH-pairs / Jaccard-verify queries),
-  * driver-side values (index paths, centroids, stream-run sinks) and
-  * the temp dirs those artifacts live in. Keys must embed the data
-  * directory. This is the library-level "persist the signature table
-  * once, reuse it across the pipeline" pattern — at cluster scale the
-  * same intermediate would be a persisted Parquet table.
+  * driver-contract queries: frames (e.g. MinHash signatures reused by
+  * the minhash / LSH-pairs / Jaccard-verify queries), driver-side
+  * values (index paths, centroids, stream-run sinks) and the temp dirs
+  * those artifacts live in. Keys must embed the data directory.
+  * Everything here is local to the driver process and host: nothing
+  * is fingerprinted or shared across JVMs.
   *
   * Every key builds at most once at a time (single-flight): the first
   * caller runs the build, concurrent callers of the same key block
@@ -24,7 +23,7 @@ import org.apache.spark.storage.StorageLevel
   * ones included — run concurrently. The companion object is the
   * process-wide registry; a fresh instance is an isolated one. */
 class SharedState {
-  import SharedState.{Policy, materialize}
+  import SharedState.{Policy, shrinkTo}
 
   private final class Slot(val owner: Thread) {
     val result: Promise[Any] = Promise[Any]()
@@ -55,7 +54,27 @@ class SharedState {
 
   /** The frame under `key`, built once and materialized per `policy`. */
   def frame(key: String, policy: Policy)(build: => DataFrame): DataFrame =
-    once(key)(materialize(build, policy))
+    once(key)(materialize(key, build, policy))
+
+  private def materialize(key: String, f: DataFrame, policy: Policy)
+      : DataFrame = policy match {
+    case Policy.Persist => f.persist(StorageLevel.MEMORY_AND_DISK)
+    case Policy.Compact =>
+      val raw = f.persist(StorageLevel.MEMORY_AND_DISK)
+      raw.count()
+      shrinkTo(raw).fold(raw) { n =>
+        val sized = raw.repartition(n).persist(StorageLevel.MEMORY_AND_DISK)
+        sized.count()
+        raw.unpersist()
+        sized
+      }
+    case Policy.Parquet =>
+      val path = tempDir("graft_frame_" + key.take(24).replaceAll("\\W", "_")) +
+        "/frame"
+      f.write.parquet(path)
+      val leaf = f.sparkSession.read.schema(f.schema).parquet(path)
+      shrinkTo(leaf).fold(leaf)(leaf.coalesce)
+  }
 
   /** Small driver-side artifacts (e.g. the contract kmeans centroids —
     * k·dim doubles — or the path of a built index): the value-level
@@ -112,8 +131,7 @@ object SharedState extends SharedState {
 
     /** [[Persist]] + SIZE-AWARE COMPACTION: after materializing, if the
       * cached bytes ask for fewer partitions than the frame carries
-      * (target = ceil(bytes / 64 MB), the shuffle-partition sizing rule
-      * of guide §2.2), re-persist a repartitioned copy and drop the
+      * (see [[shrinkTo]]), re-persist a repartitioned copy and drop the
       * original. Shuffle-built caches inherit spark.sql.shuffle.partitions
       * — at contract scale that is 32 near-empty partitions, and EVERY
       * steady query over the cache paid a 32-task dispatch per stage
@@ -125,61 +143,29 @@ object SharedState extends SharedState {
       * extra pass lands in build time, not in any steady row. */
     case object Compact extends Policy
 
-    /** DISK_ONLY + LINEAGE CUT (eager disk-level local checkpoint),
-      * for per-dir frames over deep or costly lineages (the quality
-      * and DSIR-mix scored pools, the absorb door survivors). The cut
-      * turns the lineage into a LogicalRDD leaf, so a fresh query over
-      * the frame analyzes a leaf, not the tree (an uncut composed-
-      * pipeline boundary cost ~10 s of driver planning per query);
-      * DISK_ONLY streams partition by partition with no memory-store
-      * unroll, which kept text-carrying frames from OOMing a century
-      * JVM. Eager: the frame computes at registration (prepare pays
-      * it). Same recompute-on-loss caveat as any local checkpoint —
-      * acceptable for per-JVM shared state. */
-    case object DiskCheckpoint extends Policy
-
-    /** [[Compact]] sizing + LINEAGE CUT: size-aware repartition, then an
-      * eager LOCAL CHECKPOINT instead of a persist. For caches whose
-      * BUILD lineage is huge (candidate tables: banding + skew-guard +
-      * self-join + distinct; ground-truth tables: cross-join + rank):
-      * a persisted frame keeps its full logical plan, and that costs
-      * twice per steady query — the consumer re-analyzes the tree, and
-      * EVERY OTHER query's CacheManager lookup canonical-compares its
-      * plan nodes against the giant cached tree. Measured: registering
-      * 8 such caches inflated UNTOUCHED bench rows 30–100 % (q_hybrid_rrf
-      * 0.72 → 1.1–1.7 s) — scale-independent driver planning cost. The
-      * checkpoint turns the cache into a LogicalRDD leaf: nothing to
-      * re-analyze, nothing for other queries to compare against.
-      * MEMORY_AND_DISK blocks (these frames are small by construction —
-      * compaction just measured their bytes); same recompute-on-loss
-      * caveat as [[DiskCheckpoint]]. */
-    case object CompactCheckpoint extends Policy
+    /** The one LINEAGE CUT: the build is written once as parquet into
+      * its own [[SharedState.tempDir]] and the frame is the bare scan
+      * of it, coalesced at read to [[shrinkTo]] — the leaf a
+      * [[graft.operators.PipelineBoundaries]] boundary serves. For
+      * frames over deep or costly lineages (scored pools, door
+      * survivors, candidate and ground-truth tables): a persisted frame
+      * keeps its plan, which every consumer re-analyzes and every
+      * other query's CacheManager lookup compares against (8 such
+      * caches once inflated UNTOUCHED bench rows 30–100 %); the leaf's
+      * size estimate is its file bytes. Eager (prepare pays the write).
+      * The files stay on the driver host and go with [[clear]] or the
+      * JVM; a lost or truncated one fails the next scan naming it. */
+    case object Parquet extends Policy
   }
 
-  private def materialize(f: DataFrame, policy: Policy): DataFrame =
-    policy match {
-      case Policy.Persist => f.persist(StorageLevel.MEMORY_AND_DISK)
-      case Policy.DiskCheckpoint =>
-        f.localCheckpoint(true, StorageLevel.DISK_ONLY)
-      case Policy.Compact | Policy.CompactCheckpoint =>
-        val raw = f.persist(StorageLevel.MEMORY_AND_DISK)
-        raw.count()
-        val bytes = raw.queryExecution.optimizedPlan.stats.sizeInBytes
-        val parts = raw.rdd.getNumPartitions
-        val target = ((bytes + (64L << 20) - 1) / (64L << 20))
-          .max(1).min(parts).toInt
-        val sized = if (target >= parts) raw else raw.repartition(target)
-        if (policy == Policy.CompactCheckpoint) {
-          val cp = sized.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK)
-          raw.unpersist()
-          cp
-        } else if (sized eq raw) raw
-        else {
-          sized.persist(StorageLevel.MEMORY_AND_DISK).count()
-          raw.unpersist()
-          sized
-        }
-    }
+  /** The partitions a materialized frame should shrink to, if it has
+    * more: one per 64 MB of its bytes, at least one (guide §2.2). */
+  private def shrinkTo(df: DataFrame): Option[Int] = {
+    val parts = df.rdd.getNumPartitions
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val target = ((bytes + (64L << 20) - 1) / (64L << 20)).max(1)
+    Option.when(target < parts)(target.toInt)
+  }
 
   /** Runs one prepare build and reports its wall seconds under `name`
     * (the `build` object of the bench line). */

@@ -96,7 +96,7 @@ object VectorQueries {
     * (q_neardup_lsh); both warmed in [[prepare]]. */
   private def hpCandidatesCached(s: SparkSession, dir: String,
       blocked: Boolean): DataFrame =
-    graft.SharedState.frame(s"hpcands:$blocked:$dir", Policy.CompactCheckpoint)(
+    graft.SharedState.frame(s"hpcands:$blocked:$dir", Policy.Parquet)(
       graft.dedup.Dedup.hyperplanePairs(emb(s, dir),
           col("vec_id"), col("embedding"), hyperplanes,
           bands = 4, bitsPerBand = 16,
@@ -304,7 +304,7 @@ object VectorQueries {
     * per dir, so the exact labels are reference data the verdict reads,
     * not per-probe work). Warmed in [[prepare]]. */
   private def classifyExactCached(s: SparkSession, dir: String): DataFrame =
-    graft.SharedState.frame(s"clsexact:$dir", Policy.CompactCheckpoint)(
+    graft.SharedState.frame(s"clsexact:$dir", Policy.Parquet)(
       graft.operators.Classify.classifyExact(
         emb(s, dir).filter(col("vec_id") < 20)
           .select(col("vec_id"), col("embedding")),
@@ -801,7 +801,7 @@ object VectorQueries {
     * test). min(10, n) rows per probe, the property both verdicts'
     * denominators lean on. Warmed in [[prepare]]. */
   private def recallTruthCached(s: SparkSession, dir: String): DataFrame =
-    graft.SharedState.frame(s"recalltruth:$dir", Policy.CompactCheckpoint) {
+    graft.SharedState.frame(s"recalltruth:$dir", Policy.Parquet) {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("probe_id"))
         .orderBy(col("dist").asc, col("vec_id").asc)

@@ -144,12 +144,13 @@ object QualityClassifier {
     * default stays the 100-TB path — one pass, bounded memory, no
     * shuffle of the distinct-score frame at all. */
   def keepTopFraction(scored: DataFrame, scoreCol: Column,
-      frac: Double, exact: Boolean = false): DataFrame = {
+      frac: Double, exact: Boolean = false,
+      knownRows: Long = -1L): DataFrame = {
     require(frac > 0 && frac <= 1, s"frac must be in (0, 1], got $frac")
     if (frac == 1.0) return scored // strict > would drop the minimum ties
     val thr =
       if (exact) graft.operators.Percentiles
-        .exactQuantiles(scored, scoreCol, Seq(1.0 - frac), "__thrs")
+        .exactQuantiles(scored, scoreCol, Seq(1.0 - frac), "__thrs", knownRows)
         .select(element_at(col("__thrs"), 1).as("__thr"))
       else scored.agg(
         percentile_approx(scoreCol, lit(1.0 - frac), lit(10000))
@@ -172,11 +173,11 @@ object QualityClassifier {
     * scan with a broadcast map — no corpus sort, no ntile window
     * (which would move the corpus through one unpartitioned sort). */
   def tierByQuantile(scored: DataFrame, scoreCol: Column, nTiers: Int,
-      exact: Boolean = false): DataFrame = {
+      exact: Boolean = false, knownRows: Long = -1L): DataFrame = {
     require(nTiers >= 2, s"need at least 2 tiers, got $nTiers")
     val thr =
       if (exact) graft.operators.Percentiles.exactQuantiles(scored,
-        scoreCol, (1 until nTiers).map(_.toDouble / nTiers), "__thr")
+        scoreCol, (1 until nTiers).map(_.toDouble / nTiers), "__thr", knownRows)
       else scored.agg(percentile_approx(scoreCol,
         array((1 until nTiers).map(j => lit(j.toDouble / nTiers)): _*),
         lit(10000)).as("__thr"))

@@ -175,10 +175,11 @@ class AbsorbSpec extends SparkSpec {
     val arrivals = TQ.pipeArrivals(spark, dir).persist()
     val even = arrivals.filter(col("doc_id") % 2 === 0)
     val odd = arrivals.filter(col("doc_id") % 2 === 1)
-    // each door output is a LINEAGE CUT, as in the contract path
-    // (SharedState.Policy.DiskCheckpoint): without it the three chained
-    // gen-2 compositions stack door-over-door lineage until plan
-    // stringification alone OOMs the test JVM
+    // each door output is a LINEAGE CUT, as in the contract path (there
+    // a SharedState.Policy.Parquet leaf; here a disk-level local
+    // checkpoint, which needs no per-call registry key): without it the
+    // three chained gen-2 compositions stack door-over-door lineage
+    // until plan stringification alone OOMs the test JVM
     def door(batch: DataFrame,
         c: IngestPipeline.PreparedCorpus): DataFrame =
       IngestPipeline.curateBatchKept(batch, col("doc_id"), col("source"),

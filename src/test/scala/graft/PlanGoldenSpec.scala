@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{ExplainMode, SortExec, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, SortExec, SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
@@ -68,6 +69,33 @@ class PlanGoldenSpec extends SparkSpec {
     val fresh = SparkEntry.queries(name)(spark, dir)
     val plan = formatted(fresh)
     (plan, skeleton(plan))
+  }
+
+  /** Root paths of every file scan the query's executed plan runs,
+    * subqueries included; a persisted cache's build is not the query's. */
+  private def fileScanPaths(p: SparkPlan): Seq[String] = p match {
+    case _: InMemoryTableScanExec => Nil
+    case a: AdaptiveSparkPlanExec => fileScanPaths(a.executedPlan)
+    case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.toString)
+    case other => (other.children ++ other.subqueries).flatMap(fileScanPaths)
+  }
+
+  /** Asserts the row's steady state reads materialized leaves only:
+    * every file scan reads a registry frame directory (a
+    * `SharedState.Policy.Parquet` leaf) or one of `alsoAllowed`, and
+    * none reads `documents.parquet`. Returns the scanned paths. */
+  private def assertReadsFramesOnly(name: String,
+      alsoAllowed: Seq[String] = Nil): Seq[String] = {
+    val paths = fileScanPaths(
+      SparkEntry.queries(name)(spark, sf("sf0.01")).queryExecution.executedPlan)
+    assert(paths.exists(_.contains("graft_frame_")),
+      s"$name reads no registry frame: $paths")
+    assert(!paths.exists(_.contains("documents.parquet")),
+      s"$name re-scans the corpus: $paths")
+    val bad = paths.filterNot(p =>
+      p.contains("graft_frame_") || alsoAllowed.exists(p.contains))
+    assert(bad.isEmpty, s"$name scans files other than its leaves: $bad")
+    paths
   }
 
   test("q_ivf_join: DPP on the cells scan, broadcast joins, tombstone filter") {
@@ -162,12 +190,11 @@ class PlanGoldenSpec extends SparkSpec {
     // exact verification runs through the single-pass codegen kernel
     assert(plan.contains("bit_hamming"),
       "simhash verification no longer uses the codegen bit_hamming kernel")
-    // the banded candidate table is persisted per dir (the
-    // lshCandidatesCached discipline) as a lineage-cut checkpoint
-    // (LogicalRDD leaf); the steady row verifies it — banding +
-    // skew-guard median run once, in the candidate build
-    assert(plan.contains("Scan ExistingRDD") ||
-      plan.contains("LogicalRDD"))
+    // the banded candidate table is stored per dir (the
+    // lshCandidatesCached discipline) as a registry parquet leaf; the
+    // steady row verifies it — banding + skew-guard median run once,
+    // in the candidate build
+    assertReadsFramesOnly("q_simhash_pairs")
     assert(!plan.contains("CartesianProduct"))
     checkGolden("q_simhash_pairs", skel)
   }
@@ -188,10 +215,10 @@ class PlanGoldenSpec extends SparkSpec {
     // nested loop — the gate never sorts the corpus to find it
     assert(plan.contains("BroadcastNestedLoopJoin Cross"))
     // both the threshold histogram and the gated pass read the NARROW
-    // scored boundary (the q_dsir_mix discipline): the steady plan has
-    // NO file scan and NO tokenizer — scoring ran once at the boundary
-    assert(!plan.contains("Scan parquet"),
-      "the gate must read the scored boundary leaf, not re-scan files")
+    // scored boundary (the q_dsir_mix discipline): the steady plan
+    // scans only that leaf and runs NO tokenizer — scoring ran once
+    // at the boundary
+    assertReadsFramesOnly("q_quality_gate")
     assert(!plan.contains("tokenize"),
       "the tokenizer must run once at the boundary, not per pass")
     assert(plan.contains("TakeOrderedAndProject"))
@@ -353,25 +380,11 @@ class PlanGoldenSpec extends SparkSpec {
     assert(rowNumSpecs.nonEmpty, "lost the rank window entirely")
     assert(rowNumSpecs.forall(_.contains("__blk")),
       s"a row_number window ranks without the block key: $rowNumSpecs")
-    // both operator passes read the persisted narrow scored boundary
-    // (a lineage-cut LogicalRDD leaf): the DSIR fold and the tokenizer
-    // ran once at the boundary build, and the steady-state plan must
-    // never re-scan the documents parquet (VERDICT r13 #1 closed)
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    def fileScans(p: SparkPlan): Int = p match {
-      case _: InMemoryTableScanExec => 0
-      case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
-      case _: FileSourceScanExec => 1
-      case other => other.children.map(fileScans).sum
-    }
-    assert(fileScans(
-        SparkEntry.queries("q_dsir_mix")(spark, sf("sf0.01"))
-          .queryExecution.executedPlan) == 0,
-      "q_dsir_mix re-scans the corpus instead of riding the scored boundary")
-    assert(plan.contains("ExistingRDD") || plan.contains("LogicalRDD"),
-      "the scored boundary is no longer a lineage-cut leaf")
+    // both operator passes read the narrow scored boundary (a registry
+    // parquet leaf): the DSIR fold and the tokenizer ran once at the
+    // boundary build, and the steady-state plan must never re-scan the
+    // documents parquet (VERDICT r13 #1 closed)
+    assertReadsFramesOnly("q_dsir_mix")
     // thresholds and block prefixes broadcast back onto the pool
     assert(plan.contains("BroadcastHashJoin"),
       "the threshold/prefix join lost its broadcast")
@@ -380,8 +393,6 @@ class PlanGoldenSpec extends SparkSpec {
   }
 
   test("q_pipeline_boundaries: steady state reads ONLY the parquet boundary artifacts") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
       case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
       case f: FileSourceScanExec => Seq(f)
@@ -404,9 +415,6 @@ class PlanGoldenSpec extends SparkSpec {
   }
 
   test("q_pipeline_e2e: stage boundaries materialize; input scanned only in the clean stage") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     def fileScans(p: SparkPlan): Int = p match {
       case _: InMemoryTableScanExec => 0
       case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
@@ -481,32 +489,17 @@ class PlanGoldenSpec extends SparkSpec {
   }
 
   test("q_pipeline_absorb: steady state reads only materialized leaves; block-keyed rank windows") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    def fileScanPaths(p: SparkPlan): Seq[String] = p match {
-      case _: InMemoryTableScanExec => Nil
-      case a: AdaptiveSparkPlanExec => fileScanPaths(a.executedPlan)
-      case f: FileSourceScanExec =>
-        f.relation.location.rootPaths.map(_.toString)
-      case other => other.children.flatMap(fileScanPaths)
-    }
     val (plan, _) = snapshot("q_pipeline_absorb")
-    // the merged kept set is a union of the ndk-scored checkpoint and
-    // the drop survivors read straight off the STREAMING DOOR'S SINK
-    // (the door runs once — in the stream — and the absorb rides its
-    // parquet): the only file scans allowed are that sink; the corpus
-    // is never rescanned and the door never re-runs in batch form
-    val dir01 = sf("sf0.01")
-    val sink = graft.queries.TextQueries.pipelineStreamPath(spark, dir01)
-    val scans = fileScanPaths(
-      SparkEntry.queries("q_pipeline_absorb")(spark, dir01)
-        .queryExecution.executedPlan)
-    assert(scans.nonEmpty && scans.forall(_.contains(sink)),
-      s"absorb must read the drop survivors from the stream sink " +
-        s"($sink) and nothing else from files: $scans")
-    assert(plan.contains("ExistingRDD") || plan.contains("LogicalRDD"),
-      "the kept boundaries are no longer lineage-cut leaves")
+    // the merged kept set is a union of the ndk-scored leaf and the
+    // drop survivors read straight off the STREAMING DOOR'S SINK (the
+    // door runs once — in the stream — and the absorb rides its
+    // parquet): the only file scans allowed are registry frames and
+    // that sink; the corpus is never rescanned and the door never
+    // re-runs in batch form
+    val sink = graft.queries.TextQueries.pipelineStreamPath(spark, sf("sf0.01"))
+    val scans = assertReadsFramesOnly("q_pipeline_absorb", Seq(sink))
+    assert(scans.exists(_.contains(sink)),
+      s"absorb must read the drop survivors from the stream sink ($sink): $scans")
     // the mix discipline: every rank window carries the block key
     val rowNumSpecs = "row_number\\(\\) windowspecdefinition\\(([^)]*)\\)".r
       .findAllMatchIn(plan).map(_.group(1)).toList
@@ -516,25 +509,12 @@ class PlanGoldenSpec extends SparkSpec {
   }
 
   test("q_pipeline_refresh: steady state reads only materialized leaves across BOTH generations; block-keyed rank windows") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    def fileScans(p: SparkPlan): Int = p match {
-      case _: InMemoryTableScanExec => 0
-      case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
-      case _: FileSourceScanExec => 1
-      case other => other.children.map(fileScans).sum
-    }
     val (plan, _) = snapshot("q_pipeline_refresh")
-    // the twice-refreshed kept set is a union of THREE lineage-cut
-    // leaves (ndk-scored + gen-1 survivors + gen-2 survivors): the
-    // selection must never rescan the corpus or re-run either door
-    assert(fileScans(
-        SparkEntry.queries("q_pipeline_refresh")(spark, sf("sf0.01"))
-          .queryExecution.executedPlan) == 0,
-      "the refresh row re-scans files instead of riding the kept leaves")
-    assert(plan.contains("ExistingRDD") || plan.contains("LogicalRDD"),
-      "the kept boundaries are no longer lineage-cut leaves")
+    // the twice-refreshed kept set is a union of THREE registry
+    // parquet leaves (ndk-scored + gen-1 survivors + gen-2
+    // survivors): the selection must never rescan the corpus or
+    // re-run either door
+    assertReadsFramesOnly("q_pipeline_refresh")
     val rowNumSpecs = "row_number\\(\\) windowspecdefinition\\(([^)]*)\\)".r
       .findAllMatchIn(plan).map(_.group(1)).toList
     assert(rowNumSpecs.nonEmpty && rowNumSpecs.forall(_.contains("__blk")),

@@ -1,18 +1,25 @@
 package graft
 
+import java.io.File
+import java.nio.channels.FileChannel
+import java.nio.file.StandardOpenOption
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 import graft.SharedState.Policy
 
 /** The artifact registry: single-flight per key, failed builds leave no
-  * entry, policies keep their storage shape, and clear() deletes the
-  * dirs it handed out. Every test uses its own registry instance, so the
-  * process-wide one the other suites share is never touched. */
+  * entry, policies keep their storage shape, parquet leaves report their
+  * file bytes and fail loudly on a lost or truncated file, and clear()
+  * deletes the dirs it handed out. Every test uses its own registry
+  * instance, so the process-wide one the other suites share is never
+  * touched. */
 class SharedStateSpec extends SparkSpec {
 
   private val Racers = 8
@@ -95,27 +102,71 @@ class SharedStateSpec extends SparkSpec {
     assert(reg.value("self")(3) == 3)
   }
 
+  /** The part files a parquet-leaf frame scans, sorted by name. */
+  private def partFiles(df: DataFrame): Seq[File] =
+    df.inputFiles.toSeq.map(f => new File(new Path(f).toUri.getPath)).sortBy(_.getName)
+
   test("policies keep their storage level, partition count and lineage cut") {
     val reg = new SharedState
     def wide: DataFrame = spark.range(0, 100, 1, 8).toDF("id")
-    def isLeaf(df: DataFrame) =
-      df.queryExecution.analyzed.isInstanceOf[LogicalRDD]
+    // a cut frame's analyzed plan reads only files: no Range left to re-analyze
+    def isCut(df: DataFrame) = df.queryExecution.analyzed.collectLeaves()
+      .forall(_.isInstanceOf[LogicalRelation])
     val persisted = reg.frame("p", Policy.Persist)(wide)
     assert(persisted.storageLevel == StorageLevel.MEMORY_AND_DISK)
-    assert(persisted.rdd.getNumPartitions == 8 && !isLeaf(persisted))
+    assert(persisted.rdd.getNumPartitions == 8 && !isCut(persisted))
     val compact = reg.frame("c", Policy.Compact)(wide)
     assert(compact.storageLevel == StorageLevel.MEMORY_AND_DISK)
-    assert(compact.rdd.getNumPartitions == 1 && !isLeaf(compact))
-    val disk = reg.frame("d", Policy.DiskCheckpoint)(wide)
-    assert(disk.rdd.getNumPartitions == 8 && isLeaf(disk))
-    val cut = reg.frame("cc", Policy.CompactCheckpoint)(wide)
-    assert(cut.rdd.getNumPartitions == 1 && isLeaf(cut))
-    Seq(persisted, compact, disk, cut).foreach(f => assert(f.count() == 100))
-    assert(reg.entries.map(_._1) == Seq("c", "cc", "d", "p"))
+    assert(compact.rdd.getNumPartitions == 1 && !isCut(compact))
+    // 8 part files of 100 longs: far under 64 MB, so one partition at read
+    val leaf = reg.frame("q", Policy.Parquet)(wide)
+    assert(leaf.storageLevel == StorageLevel.NONE)
+    assert(leaf.rdd.getNumPartitions == 1 && isCut(leaf))
+    val files = partFiles(leaf)
+    assert(files.size == 8 && files.forall(_.isFile))
+    Seq(persisted, compact, leaf).foreach(f => assert(f.count() == 100))
+    assert(reg.entries.map(_._1) == Seq("c", "p", "q"))
     reg.clear()
     assert(persisted.storageLevel == StorageLevel.NONE)
     assert(compact.storageLevel == StorageLevel.NONE)
+    assert(files.forall(!_.exists), "clear() must delete the leaf's files")
     assert(reg.entries.isEmpty)
+  }
+
+  test("a Parquet frame's size estimate is the bytes of its part files") {
+    val reg = new SharedState
+    // chained cross joins filtered to 3 rows: without CBO the build
+    // plan's estimate is the product of the join sides
+    val r = spark.range(0, 1000, 1, 4)
+    val build = r.crossJoin(r.toDF("b")).crossJoin(r.toDF("c"))
+      .filter(col("id") === col("b") && col("b") === col("c") && col("id") < 3)
+    val leaf = reg.frame("est", Policy.Parquet)(build)
+    assert(leaf.count() == 3)
+    val fileBytes = partFiles(leaf).map(_.length).sum
+    assert(fileBytes > 0)
+    assert(build.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(fileBytes) * 1000)
+    assert(leaf.queryExecution.optimizedPlan.stats.sizeInBytes == BigInt(fileBytes))
+    reg.clear()
+  }
+
+  test("a lost or truncated part file fails the next action naming the file") {
+    val reg = new SharedState
+    def build: DataFrame = spark.range(0, 1000, 1, 4).toDF("id")
+    val lost = reg.frame("lost", Policy.Parquet)(build)
+    val cut = reg.frame("cut", Policy.Parquet)(build)
+    assert(lost.count() == 1000 && cut.count() == 1000)
+    val gone = partFiles(lost).head
+    assert(gone.delete())
+    val short = partFiles(cut).head
+    val ch = FileChannel.open(short.toPath, StandardOpenOption.WRITE)
+    try ch.truncate(short.length / 2) finally ch.close()
+    for ((df, f) <- Seq(lost -> gone, cut -> short)) {
+      val e = intercept[Exception](df.collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString("\n")
+      assert(msgs.contains(f.getName), s"the error does not name ${f.getName}:\n$msgs")
+    }
+    reg.clear()
   }
 
   test("clear() deletes every dir tempDir handed out and drops every entry") {
