@@ -116,10 +116,8 @@ object Bench {
     * failure of the run: the queries would otherwise build their
     * artifacts lazily inside the timed region. */
   private[graft] def sweep(spark: SparkSession, sfDir: String): Sweep = {
-    // prepare_wall = what the driver actually waits for: since r19 the
-    // pipeline builds overlap on a pool, so the per-build seconds (each
-    // future's own wall, kept for round-over-round comparability) sum
-    // to MORE than the elapsed prepare time
+    // prepare_wall = what the driver waits for; the per-build seconds
+    // are each build's own work on the prepare pool and do not sum to it
     val prepT0 = System.nanoTime()
     val (prepared, prepStatus) =
       try (SparkEntry.prepare(spark, sfDir), "ok")
@@ -134,7 +132,7 @@ object Bench {
 
   /** One Spark job a profiled run started; times are epoch millis. */
   final case class Job(id: Int, startMs: Long, endMs: Long, tasks: Int,
-      desc: String)
+      desc: String, tags: Set[String])
 
   /** Runs `body` under a job listener on `spark` and returns its result
     * with every job it started, in id order. The listener bus is
@@ -150,8 +148,11 @@ object Bench {
           .flatMap(p => Option(p.getProperty("spark.job.description")))
           .filter(_.nonEmpty)
           .getOrElse(js.stageInfos.map(_.name).lastOption.getOrElse(""))
-        started.put(js.jobId,
-          Job(js.jobId, js.time, -1L, js.stageInfos.map(_.numTasks).sum, desc))
+        // SparkContext.SPARK_JOB_TAGS, which is private[spark]
+        val tags = Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .fold(Set.empty[String])(_.split(",").filter(_.nonEmpty).toSet)
+        started.put(js.jobId, Job(js.jobId, js.time, -1L,
+          js.stageInfos.map(_.numTasks).sum, desc, tags))
         ()
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit = {
@@ -217,8 +218,14 @@ object Bench {
         // partition width of every registry frame after a full sweep:
         // a steady-read cache with N near-empty partitions costs an
         // N-task dispatch per stage in every consumer. Sizes: the
-        // optimizer's estimate (joins plan with it) and the held bytes
-        sweep(spark, sfDir)
+        // optimizer's estimate (joins plan with it) and the held bytes.
+        // First, per prepare step: its seconds, jobs and tasks
+        val (sw, jobs) = jobsOf(spark)(sweep(spark, sfDir))
+        println(f"${"prepare step"}%-28s    secs  jobs  tasks")
+        sw.builds.foreach { case (step, secs) =>
+          val mine = jobs.filter(_.tags(SharedState.stepLabel(step)))
+          println(f"$step%-28s $secs%7.2f ${mine.size}%5d ${mine.map(_.tasks).sum}%6d")
+        }
         println(f"${"cache key"}%-40s parts      rows ${"estimatedB"}%12s ${"heldB"}%12s")
         SharedState.entries.foreach { case (key, df) =>
           val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
@@ -260,13 +267,8 @@ object Bench {
       .mkString("{", ",", "}")
     val failures = statuses.count(_._2 != "ok")
     val total = results.map(_.secs).sum
-    // build_secs = the prepare WALL time (the r18 semantics: with
-    // sequential builds the per-build sum equaled the wall; with the
-    // r19 overlapped builds the sum double-counts concurrent work, so
-    // the wall is the comparable number). Per-build walls stay in
-    // the `build` object for row-level round-over-round comparison.
-    val buildTotal = builds.collectFirst { case ("prepare_wall", v) => v }
-      .getOrElse(builds.map(_._2).sum)
+    // build_secs = the prepare wall, which `sweep` appends last
+    val buildTotal = builds.last._2
     val line = s"""{"metric":"total","value":${dp3(total)},"unit":"sec","queries":$qs,"status":$st,"build":$bd,"build_secs":${dp3(buildTotal)},"failures":$failures,"sf":"$sfDir"}"""
     println(line)
     // also persist the full line: the driver's BENCH_r*.json keeps only

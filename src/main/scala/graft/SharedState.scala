@@ -1,10 +1,11 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue,
+  ExecutionException, ExecutorCompletionService, Executors}
 import scala.concurrent.{Await, Promise}
 import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** The per-JVM registry of build-once artifacts shared between
@@ -23,7 +24,7 @@ import org.apache.spark.storage.StorageLevel
   * ones included — run concurrently. The companion object is the
   * process-wide registry; a fresh instance is an isolated one. */
 class SharedState {
-  import SharedState.{Policy, shrinkTo}
+  import SharedState.{Policy, blocked, shrinkTo}
 
   private final class Slot(val owner: Thread) {
     val result: Promise[Any] = Promise[Any]()
@@ -48,7 +49,9 @@ class SharedState {
     } else {
       if (!slot.result.isCompleted && (slot.owner eq Thread.currentThread()))
         throw new IllegalStateException(s"recursive build of artifact $key")
-      Await.result(slot.result.future, Duration.Inf).asInstanceOf[T]
+      val t0 = System.nanoTime()
+      try Await.result(slot.result.future, Duration.Inf).asInstanceOf[T]
+      finally blocked.set(blocked.get + (System.nanoTime() - t0))
     }
   }
 
@@ -167,11 +170,64 @@ object SharedState extends SharedState {
     Option.when(target < parts)(target.toInt)
   }
 
-  /** Runs one prepare build and reports its wall seconds under `name`
-    * (the `build` object of the bench line). */
-  def timed(name: String)(build: => Any): (String, Double) = {
-    val t0 = System.nanoTime()
-    build
-    (name, (System.nanoTime() - t0) / 1e9)
+  /** Nanoseconds this thread has waited in `once` on another thread's
+    * build: [[warm]] charges a step only for its own work. */
+  private val blocked: ThreadLocal[java.lang.Long] = ThreadLocal.withInitial(() => 0L)
+
+  /** A named prepare build for [[warm]]; its result is dropped. */
+  type Step = (String, () => Any)
+  def step(name: String)(build: => Any): Step = (name, () => build)
+
+  /** The [[warm]] pool size: the smallest whose sf0.1 prepare wall at
+    * 4 cores was within spread of the best (table in CHANGES.md). */
+  val PrepareThreads = 2
+
+  /** The job description and job tag of a prepare step's jobs. The
+    * tag also marks jobs of threads the step starts that set their own
+    * description (stream runs, Autotune's pools). */
+  def stepLabel(name: String): String = s"prepare: $name"
+
+  /** Runs `steps` on `threads` daemon threads named `graft-prepare`,
+    * started in declared order, each under its [[stepLabel]]. The
+    * registry's single-flight keys are the dependency graph: a step
+    * waits for another's in-flight artifact, uncharged, so each step
+    * reports its wall seconds minus that wait, in declared order. The
+    * first failure cancels the other steps and their Spark jobs and
+    * fails the run naming its step; no pool thread outlives the call. */
+  def warm(spark: SparkSession, steps: Seq[Step],
+      threads: Int = PrepareThreads): Seq[(String, Double)] = {
+    val names = steps.map(_._1)
+    val dup = names.diff(names.distinct).distinct
+    require(dup.isEmpty, s"duplicate prepare steps: ${dup.mkString(", ")}")
+    val sc = spark.sparkContext
+    val started = new ConcurrentLinkedQueue[Thread]()
+    val pool = Executors.newFixedThreadPool(threads, (r: Runnable) => {
+      val t = new Thread(r, "graft-prepare"); t.setDaemon(true); started.add(t); t })
+    val done = new ExecutorCompletionService[(String, Double)](pool)
+    try {
+      steps.foreach { case (name, build) => done.submit(() => {
+        sc.setJobDescription(stepLabel(name))
+        sc.addJobTag(stepLabel(name))
+        blocked.set(0L)
+        val t0 = System.nanoTime()
+        try build()
+        catch { case e: Throwable =>
+          throw new IllegalStateException(s"prepare step $name failed: $e", e)
+        } finally {
+          sc.removeJobTag(stepLabel(name))
+          sc.setJobDescription(null)
+        }
+        (name, (System.nanoTime() - t0 - blocked.get) / 1e9)
+      }) }
+      val secs = steps.map(_ => done.take().get()).toMap
+      names.map(n => n -> secs(n))
+    } catch { case e: ExecutionException =>
+      pool.shutdownNow() // first, so no queued step starts a job after the cancel
+      names.foreach(n => sc.cancelJobsWithTag(stepLabel(n)))
+      throw e.getCause
+    } finally {
+      pool.shutdownNow()
+      started.forEach(_.join())
+    }
   }
 }

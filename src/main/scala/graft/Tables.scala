@@ -7,10 +7,6 @@ import org.apache.spark.sql.functions._
   * scale-factor directory. At cluster scale these would be object-store
   * paths; the API only needs a directory prefix. */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") loadEvents(spark, s"$sfDir/events.parquet")
     else spark.read.parquet(s"$sfDir/$name.parquet")
@@ -39,8 +35,4 @@ object Tables {
       case _ => df
     }
   }
-
-  /** Register all tables as temp views for spark.sql use. */
-  def registerViews(spark: SparkSession, sfDir: String): Unit =
-    names.foreach { n => load(spark, sfDir, n).createOrReplaceTempView(n) }
 }

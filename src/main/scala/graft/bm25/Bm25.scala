@@ -68,11 +68,6 @@ object Bm25 {
       (sum(col("doc_len")).cast("double") /
         count(lit(1)).cast("double")).as("avg_doc_len"))
 
-  /** One-row corpus stats (n_docs, avg_doc_len), for broadcast. */
-  def corpusStats(docs: DataFrame, idCol: Column, textCol: Column,
-      stemmed: Boolean = false): DataFrame =
-    corpusStatsOf(tokenized(docs, idCol, textCol, stemmed))
-
   /** Reference GUC `bm25_default_approximation_threshhold` default
     * (lantern_extras/src/lib.rs): posting lists longer than this get a
     * doc-id bloom in the side table. */

@@ -391,14 +391,6 @@ object Dedup {
           (x, y) => x === y), m => m)).cast("double") / numHashes.toDouble, 6))
       .select(col("doc_a"), col("doc_b"), col("est_jaccard"))
 
-  /** End-to-end LSH candidate pairs with similarity estimate:
-    * (doc_a, doc_b, est_jaccard). */
-  def lshCandidates(docs: DataFrame, idCol: Column, textCol: Column,
-      numHashes: Int = 8, bands: Int = 4, shingleWidth: Int = 3): DataFrame = {
-    val sig = minhashSignature(docs, idCol, textCol, numHashes, shingleWidth)
-    estimateJaccard(lshCandidatePairs(sig, numHashes, bands), sig, numHashes)
-  }
-
   /** Exact n-gram Jaccard for candidate pairs (verification stage after
     * LSH). `sh` is a shingled docs frame from [[shingled]] — pass the
     * same (ideally persisted) frame that produced the signatures so the

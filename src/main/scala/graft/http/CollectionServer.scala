@@ -80,8 +80,13 @@ class CollectionServer(spark: SparkSession, root: String,
     // start from a momentary daemon thread: the JDK server's internal
     // dispatcher/timer threads inherit daemon status from their
     // creator, and a still-running façade must never block JVM exit
-    // (the batch mains start one and end without stopping it)
-    val starter = new Thread(() => server.start(), "graft-http-start")
+    // (the batch mains start one and end without stopping it). Handler
+    // jobs must not inherit the starter's job description or tags either
+    val starter = new Thread(() => {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.clearJobTags()
+      server.start()
+    }, "graft-http-start")
     starter.setDaemon(true)
     starter.start()
     starter.join()

@@ -85,8 +85,4 @@ object AsyncTasks {
   def cancelAll(): Int =
     tasks.values.filter(_.status == Status.Running)
       .count(t => cancel(t.taskId))
-
-  /** Test hook: forget finished tasks. */
-  def clearFinished(): Unit =
-    tasks.filterInPlace((_, t) => t.status == Status.Running)
 }

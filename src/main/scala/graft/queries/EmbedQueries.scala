@@ -95,9 +95,9 @@ object EmbedQueries {
 
   /** One-time artifact warmup (the streaming embed run is a build, not
     * a steady-state probe — same discipline as the index builds). */
-  def prepare(s: SparkSession, dir: String): Seq[(String, Double)] = Seq(
-    SharedState.timed("embed_stream") { embedStreamPath(s, dir) },
-    SharedState.timed("completion_stream") { completionStreamPath(s, dir) })
+  def prepare(s: SparkSession, dir: String): Seq[SharedState.Step] = Seq(
+    SharedState.step("embed_stream") { embedStreamPath(s, dir) },
+    SharedState.step("completion_stream") { completionStreamPath(s, dir) })
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_embed_mock" -> ((s, d) => embedMock(s, d)),

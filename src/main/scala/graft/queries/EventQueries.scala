@@ -133,8 +133,8 @@ object EventQueries {
 
   /** One-time artifact warmup (the streaming dedup run is a build, not
     * a steady-state probe — same discipline as the embed stream). */
-  def prepare(s: SparkSession, dir: String): Seq[(String, Double)] =
-    Seq(SharedState.timed("stream_dedup") { streamDedupPath(s, dir) })
+  def prepare(s: SparkSession, dir: String): Seq[SharedState.Step] =
+    Seq(SharedState.step("stream_dedup") { streamDedupPath(s, dir) })
 
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

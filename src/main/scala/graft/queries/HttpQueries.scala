@@ -72,8 +72,8 @@ object HttpQueries {
       server
     }.boundPort
 
-  def prepare(s: SparkSession, dir: String): Seq[(String, Double)] =
-    Seq(SharedState.timed("http_collection") { ensureServer(s, dir) })
+  def prepare(s: SparkSession, dir: String): Seq[SharedState.Step] =
+    Seq(SharedState.step("http_collection") { ensureServer(s, dir) })
 
   private def httpSearch(s: SparkSession, dir: String): DataFrame = {
     val port = ensureServer(s, dir)

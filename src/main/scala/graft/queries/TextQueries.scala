@@ -170,99 +170,54 @@ object TextQueries {
     * family's shingles/signatures/verified pairs, and the mock
     * embedding column — outside any timed region, so bench numbers mean
     * steady-state retrieval rather than first-touch cache builds. */
-  def prepare(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    import graft.SharedState.timed
-    // ---- shared trainers, warmed FIRST and attributed to their own
-    // rows: the stage graph, the door artifacts and the refresh chain
-    // all read these caches — in the old sequential order their cost
-    // hid inside whichever pipeline build touched them first
-    val trainers = Seq(
-      timed("quality_weights") { qualityWeights(s, dir).count() },
-      timed("dsir_weights") {
-        dsirWeightsCached(s, dir).count(); dsirWeightsArr(s, dir); () })
-    // ---- the pipeline builds, OVERLAPPED on a small driver pool
-    // (guide §2.6: actions are only sequential because the driver
-    // calls them sequentially — each build here is a chain of dozens
-    // of small jobs with driver planning gaps, and an independent
-    // build's tasks back-fill those gaps). Correctness does not need
-    // the dependency edges below — SharedState builds every shared
-    // artifact once even when threads race for it. They keep per-build
-    // TIMING attribution: a future starts its clock only after its
-    // deps resolved, so a build never reports a dependency's wall as
-    // its own (waiting on another thread's build would):
-    //   bounds ─┬─> ndk_scored ─┬─> refresh
-    //           └─> door ───────┼─> stream ─> absorb
-    //   arrivals ───────────────┘   (refresh also needs door+arrivals)
-    // Job descriptions are thread-local, so UI attribution survives
-    // the overlap. The pipeline still materializes before the corpus
-    // caches below, on the freshest heap (the century OOM discipline).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3,
-      (r: Runnable) => { val t = new Thread(r, "graft-prepare")
-        t.setDaemon(true); t })
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    def timedF(name: String)(f: => Unit): Future[(String, Double)] =
-      Future {
-        s.sparkContext.setJobDescription(s"prepare: $name")
-        try timed(name)(f)
-        finally s.sparkContext.setJobDescription(null)
-      }
-    def after(deps: Future[_]*)(body: => Future[(String, Double)])
-        : Future[(String, Double)] =
-      Future.sequence(deps.toSeq).flatMap(_ => body)
-    // the stage boundaries, built once through the memo that
-    // q_pipeline_e2e reads; q_pipeline_boundaries then validates the
-    // same fingerprint-guarded artifacts, as its steady state does
-    val fBounds = timedF("pipeline_boundaries") {
-      pipelineE2e(s, dir).count(); pipelineBoundariesQ(s, dir).count() }
-    // the ingest drop parquet leaf (stream source + refresh halves)
-    val fArrivals = timedF("pipeline_arrivals") {
-      pipeArrivalsPath(s, dir); () }
-    // the door's corpus-side artifacts hang off the resolved boundary
-    // chain and write under ONE root
-    val fDoor = after(fBounds)(timedF("pipeline_door") {
-      pipeStreamCorpus(s, dir); () })
-    // the frozen corpus' scored kept rows (absorb + refresh input)
-    val fNdk = after(fBounds)(timedF("pipeline_ndk_scored") {
-      ndkScored(s, dir).count() })
-    // the streaming door: runs the AvailableNow ingest job once per
-    // dir against the batch pipeline's prepared artifacts
-    val fStream = after(fDoor, fArrivals)(timedF("pipeline_stream") {
-      pipelineStreamPath(s, dir); () })
-    // the corpus refresh: re-runs the door in backfill form (text
-    // kept) and extends the artifacts — the absorbed version builds
-    // once per dir here, the contract row reads the refreshed mix
-    val fRefresh = after(fDoor, fArrivals, fNdk)(
-      timedF("pipeline_refresh") { pipelineRefresh(s, dir).count() })
-    val fAbsorb = after(fStream, fNdk)(timedF("pipeline_absorb") {
-      pipelineAbsorb(s, dir).count() })
-    val pipeline =
-      try Await.result(Future.sequence(Seq(fBounds, fArrivals, fDoor,
-        fNdk, fStream, fRefresh, fAbsorb)), Duration.Inf)
-      finally pool.shutdown()
-    trainers ++ pipeline ++ Seq(
-      timed("bm25_postings") { postCached(s, dir).count() },
-      timed("bm25_postings_stemmed") { postStemmedCached(s, dir).count() },
-      timed("bm25_approx_table") { bm25ApproxTableCached(s, dir).count() },
-      timed("dedup_shingles") { shingledCached(s, dir).count() },
-      timed("dedup_signatures") { sigCached(s, dir).count() },
-      timed("dedup_lsh_candidates") { lshCandidatesCached(s, dir).count() },
-      timed("dedup_jaccard_pairs") { jaccardPairsCached(s, dir).count() },
-      timed("winnow_fingerprints") { winnowCached(s, dir).count() },
-      timed("winnow_pairs") { winnowPairsCached(s, dir).count() },
-      timed("dedup_simhash64") { simhash64Cached(s, dir).count() },
-      timed("dedup_simhash_candidates") {
+  def prepare(s: SparkSession, dir: String): Seq[graft.SharedState.Step] = {
+    import graft.SharedState.step
+    Seq(
+      // ---- shared trainers, which the pipeline builds below all read
+      step("quality_weights") { qualityWeights(s, dir).count() },
+      step("dsir_weights") {
+        dsirWeightsCached(s, dir).count(); dsirWeightsArr(s, dir); () },
+      // ---- the pipeline builds, started before the corpus caches.
+      // The stage boundaries, built once through the memo that
+      // q_pipeline_e2e reads; q_pipeline_boundaries then validates the
+      // same fingerprint-guarded artifacts, as its steady state does
+      step("pipeline_boundaries") {
+        pipelineE2e(s, dir).count(); pipelineBoundariesQ(s, dir).count() },
+      // the ingest drop parquet leaf (stream source + refresh halves)
+      step("pipeline_arrivals") { pipeArrivalsPath(s, dir) },
+      // the door's corpus-side artifacts hang off the resolved boundary
+      // chain and write under ONE root
+      step("pipeline_door") { pipeStreamCorpus(s, dir) },
+      // the frozen corpus' scored kept rows (absorb + refresh input)
+      step("pipeline_ndk_scored") { ndkScored(s, dir).count() },
+      // the streaming door: runs the AvailableNow ingest job once per
+      // dir against the batch pipeline's prepared artifacts
+      step("pipeline_stream") { pipelineStreamPath(s, dir) },
+      // the corpus refresh: re-runs the door in backfill form (text
+      // kept) and extends the artifacts — the absorbed version builds
+      // once per dir here, the contract row reads the refreshed mix
+      step("pipeline_refresh") { pipelineRefresh(s, dir).count() },
+      step("pipeline_absorb") { pipelineAbsorb(s, dir).count() },
+      step("bm25_postings") { postCached(s, dir).count() },
+      step("bm25_postings_stemmed") { postStemmedCached(s, dir).count() },
+      step("bm25_approx_table") { bm25ApproxTableCached(s, dir).count() },
+      step("dedup_shingles") { shingledCached(s, dir).count() },
+      step("dedup_signatures") { sigCached(s, dir).count() },
+      step("dedup_lsh_candidates") { lshCandidatesCached(s, dir).count() },
+      step("dedup_jaccard_pairs") { jaccardPairsCached(s, dir).count() },
+      step("winnow_fingerprints") { winnowCached(s, dir).count() },
+      step("winnow_pairs") { winnowPairsCached(s, dir).count() },
+      step("dedup_simhash64") { simhash64Cached(s, dir).count() },
+      step("dedup_simhash_candidates") {
         simhashCandsCached(s, dir).count() },
-      timed("mock_embeddings") { mockEmbCached(s, dir).count() },
-      timed("quality_scored") { qualityScoredRows(s, dir) },
-      timed("dsir_mix_scored") { dsirMixScored(s, dir).count() },
-      timed("dsir_stream") { dsirStreamPath(s, dir) },
-      timed("imgsem_table") { imgSemTablePath(s, dir) },
-      timed("imgsem_embeddings") { imgEmbCached(s, dir).count() },
-      timed("imgsem_candidates") { imgCandsCached(s, dir).count() },
-      timed("tfidf_vocab") {
+      step("mock_embeddings") { mockEmbCached(s, dir).count() },
+      step("quality_scored") { qualityScoredRows(s, dir) },
+      step("dsir_mix_scored") { dsirMixScored(s, dir).count() },
+      step("dsir_stream") { dsirStreamPath(s, dir) },
+      step("imgsem_table") { imgSemTablePath(s, dir) },
+      step("imgsem_embeddings") { imgEmbCached(s, dir).count() },
+      step("imgsem_candidates") { imgCandsCached(s, dir).count() },
+      step("tfidf_vocab") {
         vocabCountCached(s, dir); docCountCached(s, dir); () })
   }
 
@@ -816,9 +771,13 @@ object TextQueries {
     * parquet leaf over the files q_pipeline_boundaries validates;
     * consumers read them without re-checking the fingerprints. */
   private[graft] def pipelineStages(s: SparkSession,
-      dir: String): Seq[(String, DataFrame)] =
-    graft.SharedState.value(s"pipestages:$dir")(
-      pipelineBoundariesRun(s, dir)._1)
+      dir: String): Seq[(String, DataFrame)] = pipelineRun(s, dir)._1
+
+  /** The memoized run with its stage reports. Default-root consumers
+    * read it rather than start a Runner: two Runners computing one
+    * stage at once can delete the boundary files the other serves. */
+  private def pipelineRun(s: SparkSession, dir: String) =
+    graft.SharedState.value(s"pipestages:$dir")(pipelineBoundariesRun(s, dir))
 
   /** The contract pipeline's runner — stage boundaries become
     * fingerprint-guarded parquet artifacts under one root
@@ -921,7 +880,8 @@ object TextQueries {
       : (graft.streaming.IngestPipeline.PreparedCorpus,
         Seq[graft.operators.PipelineBoundaries.StageReport]) = {
     val theRoot = root.getOrElse(pipelineBoundariesRoot(dir))
-    val (stages, reports) = pipelineBoundariesRun(s, dir, Some(theRoot))
+    val (stages, reports) =
+      root.fold(pipelineRun(s, dir))(r => pipelineBoundariesRun(s, dir, Some(r)))
     val st = stages.toMap
     val ndk = st("ndk")
     val ndkChain = reports.find(_.stage == "ndk").get.resolved

@@ -47,6 +47,36 @@ class OpsSpec extends SparkSpec {
     assert(AsyncTasks.status(id).get.status == AsyncTasks.Status.Canceled)
   }
 
+  test("cancelAll cancels every running task and leaves finished ones alone") {
+    def settle(id: Long): Unit = {
+      var tries = 0
+      while (AsyncTasks.status(id).get.status == AsyncTasks.Status.Running &&
+          tries < 100) {
+        Thread.sleep(100); tries += 1
+      }
+    }
+    val done = AsyncTasks.submit(spark, "quick")(spark.range(10).count())
+    settle(done)
+    val finished = AsyncTasks.status(done).get
+    assert(finished.status == AsyncTasks.Status.Completed)
+    // each holds one task slot until its job is canceled
+    val held = Seq("hold-1", "hold-2").map(n => AsyncTasks.submit(spark, n) {
+      spark.range(0, 1, 1, 1).rdd.foreach(_ => Thread.sleep(60000))
+    })
+    val tracker = spark.sparkContext.statusTracker
+    var tries = 0
+    while (!held.forall(id => tracker.getJobIdsForGroup(s"graft-async-task-$id")
+        .exists(j => tracker.getJobInfo(j).exists(_.stageIds.exists(st =>
+          tracker.getStageInfo(st).exists(_.numActiveTasks > 0))))) &&
+        tries < 100) {
+      Thread.sleep(100); tries += 1
+    }
+    assert(AsyncTasks.cancelAll() == 2)
+    held.foreach(settle)
+    assert(held.forall(AsyncTasks.status(_).get.status == AsyncTasks.Status.Canceled))
+    assert(AsyncTasks.status(done).get == finished)
+  }
+
   test("profile: one-pass per-column stats with nulls, distincts, timestamps") {
     import spark.implicits._
     val work = java.nio.file.Files.createTempDirectory("prof").toString

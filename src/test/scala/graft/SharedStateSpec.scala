@@ -7,6 +7,7 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.LogicalRelation
@@ -100,6 +101,73 @@ class SharedStateSpec extends SparkSpec {
       reg.value("self") { reg.value("self")(1) }
     }
     assert(reg.value("self")(3) == 3)
+  }
+
+  private def prepareThreadsAlive: Boolean =
+    Thread.getAllStackTraces.keySet.asScala.exists(_.getName == "graft-prepare")
+
+  test("warm charges a step its own work, not its wait on another step's build") {
+    val reg = new SharedState
+    val building = new CountDownLatch(1)
+    @volatile var waiterWall = 0L
+    val secs = SharedState.warm(spark, Seq(
+      SharedState.step("builder") {
+        reg.value("k") { building.countDown(); Thread.sleep(400); 1 } },
+      SharedState.step("waiter") {
+        val t0 = System.nanoTime()
+        building.await()
+        assert(reg.value("k")(2) == 1)
+        waiterWall = System.nanoTime() - t0
+      }), threads = 2).toMap
+    assert(waiterWall >= 400L * 1000 * 1000, s"waiter wall ${waiterWall / 1e6} ms")
+    assert(secs("waiter") < 0.1, s"waiter charged ${secs("waiter")} s")
+    assert(secs("builder") >= 0.4)
+  }
+
+  test("a failing step fails warm naming it, and no prepare thread outlives it") {
+    val e = intercept[IllegalStateException] {
+      SharedState.warm(spark, Seq(
+        SharedState.step("slow") { Thread.sleep(60000) },
+        SharedState.step("broken") { throw new RuntimeException("boom") },
+        SharedState.step("queued") { Thread.sleep(60000) }), threads = 2)
+    }
+    assert(e.getMessage.contains("broken") && e.getMessage.contains("boom"))
+    assert(!prepareThreadsAlive)
+  }
+
+  test("at pool size 1, steps start in declared order") {
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val names = Seq("c", "a", "d", "b")
+    val secs = SharedState.warm(spark,
+      names.map(n => SharedState.step(n) { started.add(n) }), threads = 1)
+    assert(started.asScala.toSeq == names)
+    assert(secs.map(_._1) == names)
+    assert(!prepareThreadsAlive)
+  }
+
+  test("duplicate step names are rejected before any step runs") {
+    val ran = new AtomicInteger()
+    val e = intercept[IllegalArgumentException] {
+      SharedState.warm(spark, Seq("a", "b", "a").map(n =>
+        SharedState.step(n) { ran.incrementAndGet() }))
+    }
+    assert(e.getMessage.contains("duplicate prepare steps: a"))
+    assert(ran.get == 0)
+  }
+
+  test("a step's Spark jobs, and those of threads it starts, carry its label") {
+    val (_, jobs) = Bench.jobsOf(spark)(SharedState.warm(spark, Seq(
+      SharedState.step("outer") {
+        spark.range(10).count()
+        val t = new Thread(() => {
+          spark.sparkContext.setJobDescription("its own description")
+          spark.range(10).count()
+        })
+        t.start(); t.join()
+      })))
+    val label = SharedState.stepLabel("outer")
+    assert(jobs.nonEmpty && jobs.forall(_.tags(label)), jobs.mkString("\n"))
+    assert(jobs.map(_.desc).toSet == Set(label, "its own description"))
   }
 
   /** The part files a parquet-leaf frame scans, sorted by name. */
